@@ -106,19 +106,31 @@ object PipelineQueries {
       ()
     }
 
+  /** The per-dir model for `dir`, built once per content fingerprint.
+    * An unreadable dir's key is unique per call and never read again,
+    * so that model is built without being cached — inserting it would
+    * grow the cache by one dead entry per call. */
+  private[graft] def cachedModel[V](cache: java.util.concurrent.ConcurrentHashMap[String, V],
+      dir: String)(build: => V): V = {
+    val key = modelCacheKey(dir)
+    if (key.startsWith(s"$dir#unreadable:")) build
+    else cache.computeIfAbsent(key, _ => build)
+  }
+
   private def trainedRouter(s: SparkSession, dir: String): DomainRouter.TrainedRouter =
-    routerCache.computeIfAbsent(modelCacheKey(dir), _ => {
+    cachedModel(routerCache, dir) {
       val labeled = docs(s, dir).select(col("doc_id"), col("text"),
         pmod(col("doc_id"), lit(4)).cast("double").as("y"))
       DomainRouter.train(labeled, "text", "y", k = 4, dim = 256,
         iters = 1, lr = 0.5)
-    })
+    }
   private val calibClassifierCache =
     new java.util.concurrent.ConcurrentHashMap[String, QualityTrainer.Trained]
   private def trainedCalibClassifier(s: SparkSession, dir: String): QualityTrainer.Trained =
-    calibClassifierCache.computeIfAbsent(modelCacheKey(dir), _ =>
+    cachedModel(calibClassifierCache, dir) {
       QualityTrainer.train(calibLabeled(s, dir), "text", "y", dim = 256,
-        iters = 1, lr = 0.5))
+        iters = 1, lr = 0.5)
+    }
 
   /** pq125/pq125b's eval set: scaled (x1.01, float-cast) copies of
     * vec_id < 15 at +50000 ids — the pq12 perturbation as a SEPARATE

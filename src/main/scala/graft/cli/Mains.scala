@@ -242,7 +242,6 @@ object PlayMain {
         jdbcCache.foreach(_.storeAll(newRows))
         newRows
       })
-      if (jdbcCache.isEmpty) IdCacheStore.save(cache, idCachePath)
       val existingIds = if (Files.exists(Paths.get(studyIdsPath)))
         Some(new String(Files.readAllBytes(Paths.get(studyIdsPath)), StandardCharsets.UTF_8))
       else None
@@ -261,6 +260,10 @@ object PlayMain {
           InvalidReferencesWriter.toJson(leftover, existing).getBytes(StandardCharsets.UTF_8))
         Console.err.println(s"   invalid references written to $invalidRefsPath")
       }
+      // saved only after the last read of `leftover`: the save swaps the
+      // id-cache directory, and the lazy resolution plan still lists the
+      // files it replaces
+      if (jdbcCache.isEmpty) IdCacheStore.save(cache, idCachePath)
       // HTTP-rejected loads: report the first 5 errors and fail the run
       // (load.py:427-452 prints <=5 issues then sys.exit(1)). Unresolved
       // REFERENCES, by contrast, only warn (play.py:493 save_fails then

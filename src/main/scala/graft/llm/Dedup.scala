@@ -391,91 +391,39 @@ object SimHashNearDup {
    * candidate generation never goes all-pairs. Output
    * (doc_a, doc_b, hamming), doc_a < doc_b.
    *
-   * Execution: the typed signature stage explodes to (chunk index, chunk
-   * value) keys, then ONE shuffle groups chunk-mates and the pairwise
-   * Hamming loop runs per bucket in plain JVM code, so the exact <= d
-   * filter applies BEFORE the cross-chunk distinct — the self-join shape
-   * this replaces deduplicated all candidate pairs (each carrying both
-   * full signatures) and only then filtered. A chunk bucket is
-   * materialized while scored: (id, 16-char hex) rows, quadratic in the
-   * size of a duplicate cluster — the same bound as the join's bucket
-   * expansion; adversarial corpora should pre-dedup exact copies
-   * ([[ExactDedup]]) first. Non-numeric/non-string ids fall back to the
-   * bucket-equality self-join.
+   * Execution: the signatures explode to (chunk index, chunk value)
+   * keys and ONE shuffle brings chunk-mates together; [[BucketPairs]]
+   * runs the pairwise Hamming check per bucket, so the exact <= d filter
+   * applies BEFORE the cross-chunk distinct.
    */
   def apply(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, ordered: Boolean = true,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame =
+      maxHamming: Int = 3, ordered: Boolean = true): DataFrame =
     fromSignatures(SimHashSignatures.signatures(df, idCol, textCol),
-      maxHamming, ordered, scope)
+      maxHamming, ordered)
 
   /** Pair generation from an ALREADY-COMPUTED (doc_id, simhash)
     * relation — the entry point for any 64-bit-signature family
     * ([[Multimodal.perceptualHash]] image signatures, external
     * signature stores), same pigeonhole chunk machinery. */
   def fromSignatures(signatures: DataFrame,
-      maxHamming: Int = 3, ordered: Boolean = true,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+      maxHamming: Int = 3, ordered: Boolean = true): DataFrame = {
     require(maxHamming <= 3,
       s"4 bands guarantee recall only for distance <= 3, got $maxHamming")
-    val sigs = signatures
+    val idField = signatures.schema("doc_id")
+    val outSchema = StructType(Seq(
+      idField.copy(name = "doc_a"), idField.copy(name = "doc_b"),
+      StructField("hamming", org.apache.spark.sql.types.LongType, nullable = true)))
+    val chunks = signatures
       .filter(col("simhash").isNotNull && col("doc_id").isNotNull)
-    Similarity.idOrdering(sigs.schema("doc_id").dataType) match {
-      case Some(ord) =>
-        val idField = sigs.schema("doc_id")
-        val outSchema = StructType(Seq(
-          idField.copy(name = "doc_a"), idField.copy(name = "doc_b"),
-          StructField("hamming", org.apache.spark.sql.types.LongType, nullable = true)))
-        sigs.flatMap { r =>
-          val s = r.getString(1)
-          (0 until 4).iterator.map(i => (s"$i:${s.substring(4 * i, 4 * i + 4)}", r))
-        }(Encoders.tuple(Encoders.STRING, Encoders.row(sigs.schema)))
-          .groupByKey(_._1)(Encoders.STRING)
-          .flatMapGroups { (_, it) =>
-            val rows = it.map(_._2).toArray
-            scala.util.Sorting.stableSort(rows,
-              (x: Row, y: Row) => ord.lt(x.get(0), y.get(0)))
-            val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-            var i = 0
-            while (i < rows.length) {
-              val sa = rows(i).getString(1)
-              var j = i + 1
-              while (j < rows.length) {
-                if (ord.compare(rows(i).get(0), rows(j).get(0)) != 0) {
-                  val h = hammingJvm(sa, rows(j).getString(1))
-                  if (h <= maxHamming) buf += Row(rows(i).get(0), rows(j).get(0), h)
-                }
-                j += 1
-              }
-              i += 1
-            }
-            buf.iterator
-          }(Encoders.row(outSchema))
-          .distinct() // a pair within distance d shares up to 4 - d chunks
-          .transform(Presented(_, ordered, "doc_a", "doc_b"))
-      case None => joined(sigs, maxHamming, ordered, scope)
+      .select(col("doc_id"), col("simhash"),
+        posexplode(array((0 until 4).map(i =>
+          substring(col("simhash"), 1 + 4 * i, 4)): _*)).as(Seq("_i", "_chunk")))
+    BucketPairs(chunks, Seq("_i", "_chunk"), "doc_id", outSchema,
+        earliestOnly = false)(r => (r.get(0), r.getString(1))) { (a, b) =>
+      val h = hammingJvm(a._2, b._2)
+      if (h <= maxHamming) Row(a._1, b._1, h) else null
     }
-  }
-
-  /** Fallback for exotic id types: bucket-equality self-join on
-   *  (chunk index, chunk value), distinct, then the Hamming expression. */
-  private def joined(sigs: DataFrame, maxHamming: Int, ordered: Boolean,
-      scope: graft.CacheScope): DataFrame = {
-    val cached = scope.track(sigs.persist(StorageLevel.MEMORY_AND_DISK))
-    val banded = cached.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(i =>
-        substring(col("simhash"), 1 + 4 * i, 4)): _*)).as(Seq("_i", "_chunk")))
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a._i") === col("b._i") && col("a._chunk") === col("b._chunk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("_sa"), col("b.simhash").as("_sb"))
-      .distinct()
-    cand
-      .withColumn("hamming", hammingExpr(col("_sa"), col("_sb")))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
+      .distinct() // a pair within distance d shares up to 4 - d chunks
       .transform(Presented(_, ordered, "doc_a", "doc_b"))
   }
 }

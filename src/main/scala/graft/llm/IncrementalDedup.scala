@@ -356,7 +356,16 @@ object IncrementalMinHash {
         nullable = true),
       StructField("_bands", ArrayType(StringType, containsNull = true),
         nullable = true)))
-    df.select(col(idCol), col(idCol).cast("long"), col(textCol).cast("string"))
+    // a non-null id that is not a long would sketch as unkeyed and so
+    // always classify `new` — silently bypassing the fuzzy gate; raise
+    // instead (inline, like the index width guards: no extra job)
+    val lid = col(idCol).try_cast("long")
+    df.select(col(idCol),
+        when(col(idCol).isNull || lid.isNotNull, lid).otherwise(raise_error(lit(
+          s"IncrementalMinHash.classifyBanded: id column '$idCol' holds a " +
+            "non-null value that is not a long — fuzzy dedup keys on long " +
+            "ids; cast or remap the id column first"))),
+        col(textCol).cast("string"))
       .mapPartitions { rows =>
         val md = java.security.MessageDigest.getInstance("MD5")
         rows.map { r =>
@@ -429,18 +438,17 @@ object IncrementalMinHash {
       .filter(col("_mc") >= minMatch)
       .select(col("_id"), col("keep_id"), col("_mc"),
         lit(true).as("_fromHist"))
-    // in-batch pairs from ONE exchange (guide §2.4): the old self-join
-    // on (_b,_bk) shuffled the batch band rows TWICE (once per side)
-    // and verified candidates through the interpreted HOF matchCount;
-    // hash-repartitioning the band rows once and generating verified
-    // pairs in-partition keeps the same skew posture (a hot band key
-    // lands in one task either way) while the verification runs as a
-    // typed JVM loop. Pair semantics identical: every unordered pair
-    // of DISTINCT ids sharing a (band position, band key), emitted
-    // once per matching band (the min/max aggregates dedup), kept when
-    // >= minMatch signature components are equal (null components
-    // never count — the zip_with twin); null band keys never join, so
-    // they generate nothing here either.
+    // in-batch matches: the only consumer is the `_prev` min(keep_id)
+    // per _id below, so each band member needs just its SMALLEST
+    // verified partner among the smaller batch ids sharing its
+    // (band position, band key) — the min over those per-band minima is
+    // exactly the min over every verified pair, so the earliest-partner
+    // rule is exact while output stays O(k) per band group and a group
+    // of k near-identical docs costs k - 1 verifications
+    // ([[BucketPairs]]). A pair verifies when >= minMatch signature
+    // components are equal (null components never count — the zip_with
+    // twin); equal ids never pair; null band keys never join, so they
+    // generate nothing here either.
     val pairSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("_id",
         org.apache.spark.sql.types.LongType, nullable = true),
@@ -451,67 +459,25 @@ object IncrementalMinHash {
       org.apache.spark.sql.types.StructField("_fromHist",
         org.apache.spark.sql.types.BooleanType, nullable = false)))
     val mm = minMatch
-    val batchPairs = bBand
-      .repartition(col("_b"), col("_bk"))
-      .sortWithinPartitions(col("_b"), col("_bk"))
-      .mapPartitions { rows =>
-        val it = rows.buffered
-        new scala.collection.AbstractIterator[org.apache.spark.sql.Row] {
-          private var out: Iterator[org.apache.spark.sql.Row] = Iterator.empty
-          private def fill(): Unit = {
-            while (!out.hasNext && it.hasNext) {
-              // skip null band keys (an equi-join key: never matches)
-              if (it.head.isNullAt(3)) { it.next(); () }
-              else {
-                val b = it.head.getInt(2)
-                val bk = it.head.getString(3)
-                val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-                val sigs = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
-                while (it.hasNext && !it.head.isNullAt(3) &&
-                    it.head.getInt(2) == b && it.head.getString(3) == bk) {
-                  val r = it.next()
-                  ids += r.getLong(0)
-                  sigs += (if (r.isNullAt(1)) null
-                    else r.getSeq[String](1).toArray)
-                }
-                val buf = scala.collection.mutable.ArrayBuffer
-                  .empty[org.apache.spark.sql.Row]
-                var i = 0
-                while (i < ids.length) {
-                  var j = i + 1
-                  while (j < ids.length) {
-                    val ia = ids(i); val ib = ids(j)
-                    if (ia != ib) {
-                      val sa = sigs(i); val sb = sigs(j)
-                      if (sa != null && sb != null) {
-                        var m = 0
-                        var p = 0
-                        val n = math.min(sa.length, sb.length)
-                        while (p < n) {
-                          val x = sa(p); val y = sb(p)
-                          if (x != null && x == y) m += 1
-                          p += 1
-                        }
-                        if (m >= mm)
-                          buf += org.apache.spark.sql.Row(
-                            math.max(ia, ib), math.min(ia, ib), 0,
-                            false)
-                      }
-                    }
-                    j += 1
-                  }
-                  i += 1
-                }
-                out = buf.iterator
-              }
-            }
-          }
-          def hasNext: Boolean = { fill(); out.hasNext }
-          def next(): org.apache.spark.sql.Row = {
-            fill(); out.next()
-          }
+    val batchPairs = BucketPairs(bBand, Seq("_b", "_bk"), "_id", pairSchema,
+        earliestOnly = true) { r =>
+      (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[String](1).toArray)
+    } { (a, b) =>
+      val sa = a._2
+      val sb = b._2
+      if (sa == null || sb == null) null
+      else {
+        var m = 0
+        var p = 0
+        val n = math.min(sa.length, sb.length)
+        while (p < n) {
+          val x = sa(p)
+          if (x != null && x == sb(p)) m += 1
+          p += 1
         }
-      }(org.apache.spark.sql.Encoders.row(pairSchema))
+        if (m >= mm) org.apache.spark.sql.Row(b._1, a._1, 0, false) else null
+      }
+    }
     val dups = histPairs.unionByName(batchPairs)
       .groupBy(col("_id"))
       .agg(

@@ -224,12 +224,11 @@ object Multimodal {
   }
 
   /** Image near-duplicate pairs: [[perceptualHash]] signatures through
-    * [[SimHashNearDup.fromSignatures]]'s pigeonhole chunk join —
+    * [[SimHashNearDup.fromSignatures]]'s pigeonhole chunk buckets —
     * (doc_a, doc_b, hamming) within `maxHamming`, never all-pairs. */
   def imageNearDup(df: DataFrame, idCol: String, payloadCol: String,
-      maxHamming: Int = 3, ordered: Boolean = true,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame =
+      maxHamming: Int = 3, ordered: Boolean = true): DataFrame =
     SimHashNearDup.fromSignatures(
       perceptualHash(df, idCol, payloadCol, ordered = false),
-      maxHamming, ordered, scope)
+      maxHamming, ordered)
 }

@@ -363,7 +363,7 @@ object Similarity {
    * via [[autoBucketBits]]; pass an explicit width for deterministic
    * bucketing (oracle queries, recall experiments). Execution is one
    * shuffle on the bucket key with per-bucket JVM pair scoring — see
-   * [[groupedNearDup]].
+   * [[BucketPairs]].
    */
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
       threshold: Double, bucketBits: Int = -1, srp: Boolean = false,
@@ -382,12 +382,24 @@ object Similarity {
       else math.min(autoBucketBits(prep.count()),
         if (srp) Int.MaxValue else probeDim(prep, "_v"))
     val withBkt = prep.withColumn("_bkt", bucketKey(prep, srp, bits))
-    idOrdering(withBkt.schema("_id").dataType) match {
-      case Some(ord) => groupedNearDup(withBkt, threshold, ord)
-        .transform(Presented(_, ordered, "id_a", "id_b"))
-      case None => joinedNearDup(withBkt, threshold)
-        .transform(Presented(_, ordered, "id_a", "id_b"))
-    }
+    val idField = withBkt.schema("_id")
+    val outSchema = StructType(Seq(
+      idField.copy(name = "id_a"), idField.copy(name = "id_b"),
+      StructField("cos", DoubleType, nullable = true)))
+    BucketPairs(withBkt, Seq("_bkt"), "_id", outSchema, earliestOnly = false)(
+        r => (r.get(0), r.getSeq[Long](1).toArray, r.getLong(2))) { (a, b) =>
+      val va = a._2
+      val vb = b._2
+      var d = 0L
+      var p = 0
+      val n = math.min(va.length, vb.length)
+      while (p < n) { d += va(p) * vb(p); p += 1 }
+      val cos = d.toDouble / math.sqrt(a._3.toDouble * b._3.toDouble)
+      if (cos >= threshold)
+        Row(a._1, b._1, java.math.BigDecimal.valueOf(cos)
+          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue)
+      else null
+    }.transform(Presented(_, ordered, "id_a", "id_b"))
   }
 
   /** Embedding dimension probed from the prepped corpus — one limit(1)
@@ -442,76 +454,6 @@ object Similarity {
       }
       array(own +: flips: _*)
     }
-  }
-
-  /**
-   * Bucket-grouped pair scoring: ONE shuffle keyed on the sign bucket,
-   * each row crossing the wire once; the quadratic pairwise loop runs
-   * per bucket in plain JVM code. The self-join shape this replaces
-   * shipped both quantized vectors once per candidate PAIR — O(pairs)
-   * row serde vs O(N) here, and the serde (not the dot products)
-   * dominated. A bucket is materialized in memory while scored, which
-   * [[autoBucketBits]] bounds at ~targetBucketSize rows (~0.5 MB at
-   * dim 64); adversarially skewed sign patterns should raise the bit
-   * count or pre-salt, same caveat as MinHash's banded buckets.
-   */
-  private def groupedNearDup(withBkt: DataFrame, threshold: Double,
-      ord: Ordering[Any]): DataFrame = {
-    val idField = withBkt.schema("_id")
-    val outSchema = StructType(Seq(
-      idField.copy(name = "id_a"), idField.copy(name = "id_b"),
-      StructField("cos", DoubleType, nullable = true)))
-    withBkt.groupByKey(_.getString(3))(Encoders.STRING)
-      .flatMapGroups { (_, it) =>
-        val rows = it.toArray
-        // sorted by id, so the (i, j>i) emission order is id_a < id_b
-        scala.util.Sorting.stableSort(rows,
-          (x: Row, y: Row) => ord.lt(x.get(0), y.get(0)))
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-        var i = 0
-        while (i < rows.length) {
-          val ri = rows(i)
-          val vi = ri.getSeq[Long](1)
-          val ni = ri.getLong(2)
-          var j = i + 1
-          while (j < rows.length) {
-            val rj = rows(j)
-            if (ord.compare(ri.get(0), rj.get(0)) != 0) { // strict <, as the join's id_a < id_b
-              val vj = rj.getSeq[Long](1)
-              var d = 0L
-              var p = 0
-              val n = math.min(vi.length, vj.length)
-              while (p < n) { d += vi(p) * vj(p); p += 1 }
-              val cos = d.toDouble / math.sqrt(ni.toDouble * rj.getLong(2).toDouble)
-              if (cos >= threshold)
-                buf += Row(ri.get(0), rj.get(0),
-                  java.math.BigDecimal.valueOf(cos)
-                    .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue)
-            }
-            j += 1
-          }
-          i += 1
-        }
-        buf.iterator
-      }(Encoders.row(outSchema))
-  }
-
-  /** Fallback for id types without a JVM ordering that mirrors
-   *  Catalyst's `<`: bucket-equality self-join, scored declaratively with
-   *  the native [[graft.plans.LongArrayDot]] expression — the whole
-   *  pair-scoring projection stays inside WholeStageCodegen (no row
-   *  serde). Same integer dot / double cosine / HALF_UP rounding as
-   *  [[groupedNearDup]]. */
-  private def joinedNearDup(withBkt: DataFrame, threshold: Double): DataFrame = {
-    val a = withBkt.select(col("_id").as("id_a"), col("_v").as("_va"),
-      col("_n2").as("_na"), col("_bkt"))
-    val b = withBkt.select(col("_id").as("id_b"), col("_v").as("_vb"),
-      col("_n2").as("_nb"), col("_bkt"))
-    val cos = cosine(dot(col("_va"), col("_vb")), col("_na"), col("_nb"))
-    a.join(b, Seq("_bkt"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(cos >= threshold)
-      .select(col("id_a"), col("id_b"), round(cos, 4).as("cos"))
   }
 
   /**

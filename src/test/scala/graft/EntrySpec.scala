@@ -38,6 +38,22 @@ class EntrySpec extends AnyFunSuite {
       .count(_.name.startsWith("graft_pq53b")) == 1)
   }
 
+  test("model caches: an unreadable dir builds every call and never grows the cache") {
+    val cache = new java.util.concurrent.ConcurrentHashMap[String, Int]
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val root = java.nio.file.Files.createTempDirectory("graft-cache")
+    val unreadable = root.resolve("missing").toString
+    (1 to 2).foreach { _ =>
+      assert(PipelineQueries.cachedModel(cache, unreadable)(builds.incrementAndGet()) > 0)
+    }
+    assert(cache.size == 0 && builds.get == 2)
+    // a readable dir caches once and serves the cached model after
+    java.nio.file.Files.write(root.resolve("documents.parquet"), Array[Byte](1, 2, 3))
+    (1 to 2).foreach(_ =>
+      PipelineQueries.cachedModel(cache, root.toString)(builds.incrementAndGet()))
+    assert(cache.size == 1 && builds.get == 3)
+  }
+
   test("Tables.registerAll exposes every testdata table as a view") {
     graft.sources.Tables.registerAll(TestSpark.spark, "/root/testdata/sf0.001")
     val n = TestSpark.spark.sql(

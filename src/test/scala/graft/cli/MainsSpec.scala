@@ -180,6 +180,36 @@ class MainsSpec extends AnyFunSuite {
     }
   }
 
+  test("loadfhir twice into one out dir with the parquet id cache: run 2 succeeds with PUTs only") {
+    val dir = fixture()
+    val wo = write(dir, "whistle-output.json",
+      """{"patient":[
+        |  {"resourceType":"Patient","id":"p1",
+        |   "identifier":[{"system":"https://mains","value":"S1"}]},
+        |  {"resourceType":"Patient","id":"p2",
+        |   "identifier":[{"system":"https://mains","value":"S2"}]}],
+        |"observation":[
+        |  {"resourceType":"Observation","id":"o1",
+        |   "identifier":[{"system":"https://mains","value":"O1"}],
+        |   "subject":{"reference":"Patient/p1"}}]}""".stripMargin)
+    withServer() { (url, counts) =>
+      hostsFile(dir, url)
+      // no --id-cache: the parquet cache lives under the out dir, and
+      // run 2 reads the very cache it then replaces
+      def run() = LoadFhirMain.run(Array(
+        "--host", "dev", "--hosts-file", dir.resolve("fhir_hosts").toString,
+        "--out", dir.resolve("out").toString,
+        "--identifier-prefix", "https://mains", wo.toString), spark)
+      assert(run() == 0)
+      assert(counts.get("POST").get == 3)
+      assert(counts.get("PUT") == null)
+      assert(run() == 0)
+      assert(counts.get("POST").get == 3) // no new POSTs
+      assert(counts.get("PUT").get == 3)
+      assert(!Files.exists(dir.resolve("out/invalid-references.json")))
+    }
+  }
+
   test("loadfhir exits 1 and reports errors when the server rejects every load") {
     val dir = fixture()
     val wo = write(dir, "whistle-output.json",

@@ -267,6 +267,26 @@ class IncrementalPipelineSpec extends AnyFunSuite {
     } finally cleanup(state)
   }
 
+  test("fuzzy tier: a non-numeric id fails fast, naming the id column, instead of passing as new") {
+    import TestSpark.spark.implicits._
+    val fcfg = cfg.copy(sampleRate = 1.0, fuzzyDedup = true)
+    val base = (1 to 30).map(i => s"w$i").mkString(" ")
+    // "doc-x" near-duplicates 9200: an id the long cast drops would
+    // sketch as unkeyed and slip past the fuzzy gate as `new`
+    val batch = Seq(("9200", base + " one"), ("doc-x", base + " two"))
+      .toDF("doc_id", "text")
+    val state = st("graft_ip_fzid")
+    try {
+      val err = intercept[Exception] {
+        IncrementalPipeline.processBatch(batch, "doc_id", "text", fcfg, state,
+          decontaminate = false, sampleK = 0, audit = false, buckets = 4).count()
+      }
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+      assert(msgs.exists(_.contains("id column 'doc_id'")), msgs.mkString("\n"))
+    } finally cleanup(state)
+  }
+
   test("semantic gate: flagged docs drop; no-embeddings call is the identity; missing index refused") {
     import TestSpark.spark.implicits._
     // embeddings: distinctive unit-ish vectors; eval copies doc 20/21's

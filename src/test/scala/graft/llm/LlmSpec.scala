@@ -311,9 +311,9 @@ class LlmSpec extends AnyFunSuite {
     assert((0L until 6L).map(i => (i, i + 100L)).toSet.subsetOf(pairs))
   }
 
-  test("nearDupPairs joined fallback (no JVM id ordering) matches the grouped path") {
-    // decimal ids have no idOrdering -> declarative joinedNearDup (native
-    // graft_dot scoring); long ids take groupedNearDup — results must agree
+  test("nearDupPairs: decimal and long ids give the same pairs through the kernel") {
+    // the kernel compares ids with Catalyst's ordering for the id type,
+    // so a decimal id column pairs exactly as its long twin does
     val rows = (0L until 20L).map { i =>
       Row(i, Seq.tabulate(8)(d => (math.sin(i * 0.7 + d) * 0.9).toFloat))
     } ++ (0L until 4L).map { i =>
@@ -322,15 +322,15 @@ class LlmSpec extends AnyFunSuite {
     val asLong = df("vec_id BIGINT, embedding ARRAY<FLOAT>", rows)
     val asDec = asLong.select(
       col("vec_id").cast("decimal(10,0)").as("vec_id"), col("embedding"))
-    val grouped = Similarity.nearDupPairs(asLong, "vec_id", "embedding",
+    val longs = Similarity.nearDupPairs(asLong, "vec_id", "embedding",
       threshold = 0.99, bucketBits = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val joined = Similarity.nearDupPairs(asDec, "vec_id", "embedding",
+    val decimals = Similarity.nearDupPairs(asDec, "vec_id", "embedding",
       threshold = 0.99, bucketBits = 2)
       .collect()
       .map(r => (r.getDecimal(0).longValue, r.getDecimal(1).longValue, r.getDouble(2))).toSet
-    assert(grouped.nonEmpty)
-    assert(joined == grouped)
+    assert(longs.nonEmpty)
+    assert(decimals == longs)
   }
 
   test("partitionTopK pre-reduction returns the same rows as the plain window") {
