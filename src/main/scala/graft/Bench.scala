@@ -48,31 +48,24 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NOT tuned: parallelismFirst=false + a small advisory partition
-      // size (right-sizing reduce partitions to data volume) measured
-      // within noise of the defaults across interleaved A/B sweeps —
-      // the sub-second floor is job/stage scheduling, not task count
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // A/B knob (SPARK_GRAFT_AQE=false to measure without AQE).
-      // Measured full-sweep at sf0.1 local[32] (min-of-3, 2026-08-13):
-      // AQE ON batch 21.2 s vs OFF 21.7 s — re-planning costs ~0.05 s on
-      // a handful of floor rows but post-shuffle coalescing wins more on
-      // the near-unique-key aggs (pq1 0.25 vs 0.51, vq4 0.32 vs 0.55,
-      // pq7b 0.51 vs 0.75). Decision: keep ON, same as production.
-      // normalized so natural spellings (0/off/no) don't crash the
-      // builder's strict boolean parse
-      .config("spark.sql.adaptive.enabled",
-        (!Set("false", "0", "off", "no").contains(
-          sys.env.getOrElse("SPARK_GRAFT_AQE", "true").toLowerCase)).toString)
-      .getOrCreate()
+    // shuffle partitions = cpus, NOT tuned: parallelismFirst=false + a
+    // small advisory partition size (right-sizing reduce partitions to
+    // data volume) measured within noise of the defaults across
+    // interleaved A/B sweeps — the sub-second floor is job/stage
+    // scheduling, not task count
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    // A/B knob (SPARK_GRAFT_AQE=false to measure without AQE).
+    // Measured full-sweep at sf0.1 local[32] (min-of-3, 2026-08-13):
+    // AQE ON batch 21.2 s vs OFF 21.7 s — re-planning costs ~0.05 s on
+    // a handful of floor rows but post-shuffle coalescing wins more on
+    // the near-unique-key aggs (pq1 0.25 vs 0.51, vq4 0.32 vs 0.55,
+    // pq7b 0.51 vs 0.75). Decision: keep ON, same as production.
+    // normalized so natural spellings (0/off/no) don't crash the
+    // strict boolean parse
+    spark.conf.set("spark.sql.adaptive.enabled",
+      (!Set("false", "0", "off", "no").contains(
+        sys.env.getOrElse("SPARK_GRAFT_AQE", "true").toLowerCase)).toString)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark) // SQL surface: graft_dot
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, dir: String): Unit =
       fn(spark, dir).write.format("noop").mode("overwrite").save()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /**
  * Dev aid: dump `.explain("formatted")` for named declared queries to
@@ -24,16 +23,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark)
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query $name"))

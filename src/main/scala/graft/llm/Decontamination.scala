@@ -2,7 +2,8 @@ package graft.llm
 
 import graft.Presented
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -149,8 +150,6 @@ object Decontamination {
       leakedSpans(train, eval, idCol, textCol, shingleN, ordered = false),
       ordered)
 
-  /** The shared containment tail: distinct the train shingle keys, left
-    * join the eval shingles, aggregate per eval doc over the id spine. */
   // ------------------------------------------------------------------
   // Incremental decontamination: persisted eval-shingle index,
   // audited one corpus batch at a time (pq21/pq44 discipline on pq25)
@@ -218,7 +217,7 @@ object Decontamination {
   def auditBatch(batch: DataFrame, idCol: String, textCol: String,
       tableName: String, matchedTable: String, matchedPath: String): Long = {
     val spark = batch.sparkSession
-    val shingleN = stampedShingleN(spark, tableName)
+    val keys = EvalKeys.ofIndex(spark, tableName)
     // EXACT broadcast prefilter before the distinct (guide §2.3/§3.2):
     // only batch shingles that occur in the (eval-sized) index key set
     // can contribute a hit, so the distinct's exchange carries an
@@ -226,9 +225,14 @@ object Decontamination {
     // volume — at corpus scale that shuffle was the audit's dominant
     // bytes. Exactness (sorted-array membership, no fpp) keeps the
     // semi-join's result identical.
-    val batchSh = filterKeysInSortedSet(
-      TextOps.shingleIndex(batch, idCol, textCol, shingleN).select("_sh"),
-      evalIndexKeys(spark, tableName))
+    val bc = keys.bc
+    val batchSh = TextOps.shingleIndex(batch, idCol, textCol, keys.shingleN)
+      .select("_sh").as(Encoders.scalaLong)
+      .mapPartitions { hs =>
+        val sorted = bc.value
+        hs.filter(EvalKeys.contains(sorted, _))
+      }(Encoders.scalaLong)
+      .toDF("_sh")
       .distinct()
     val hits = spark.table(tableName).filter(col("_sh").isNotNull)
       .join(batchSh, Seq("_sh"), "left_semi")
@@ -265,7 +269,7 @@ object Decontamination {
     * audit appends one file per batch, so a long-running stream needs
     * a cadence compaction exactly like the index sinks' `maintain`.
     * No-op when the table doesn't exist yet. */
-  def compactMatched(spark: org.apache.spark.sql.SparkSession,
+  def compactMatched(spark: SparkSession,
       matchedTable: String, matchedPath: String, graceMs: Long = 0L): Unit =
     if (spark.catalog.tableExists(matchedTable)) {
       val folded = spark.table(matchedTable).coalesce(1)
@@ -302,90 +306,105 @@ object Decontamination {
       batch, idCol, textCol, shingleN, ordered)
   }
 
-  /** The DROPPED ids of [[containmentAgainstIndex]] — batch docs whose
-    * containment reaches `threshold` — without the per-doc spine join:
-    * the spine exists to emit shingle-less docs at containment 0, and
-    * 0 >= threshold is impossible for threshold > 0 (required), so the
-    * drop set is a pure function of the matched aggregate. Removes a
-    * corpus-sized distinct + join from every builder batch (the spine
-    * was the BATCH side — at scale a full extra shuffle of the ids). */
-  private[llm] def containmentDropIdsAgainstIndex(batch: DataFrame,
-      idCol: String, textCol: String, tableName: String,
-      threshold: Double): DataFrame = {
-    require(threshold > 0,
-      "containmentDropIdsAgainstIndex requires threshold > 0 (at 0 every " +
-        "doc incl. shingle-less ones drops — use containmentAgainstIndex)")
-    val spark = batch.sparkSession
-    val shingleN = stampedShingleN(spark, tableName)
-    perDocContainment(
-      spark.table(tableName).filter(col("_sh").isNotNull).select("_sh"),
-      batch, idCol, textCol, shingleN)
-      .filter(col("containment") >= threshold)
-      .select(col("_id").as("doc_id"))
-  }
-
-  /** [[containment]]'s drop set for the one-shot builder — the same
-    * spine-free fast path over a re-shingled eval set instead of the
-    * persisted index. */
-  private[llm] def containmentDropIds(train: DataFrame, eval: DataFrame,
-      idCol: String, textCol: String, shingleN: Int,
-      threshold: Double): DataFrame = {
-    require(threshold > 0,
-      "containmentDropIds requires threshold > 0 (at 0 every doc incl. " +
-        "shingle-less ones drops — use containment)")
-    perDocContainment(
-      TextOps.shingleIndex(train, idCol, textCol, shingleN)
-        .select("_sh"),
-      eval, idCol, textCol, shingleN)
-      .filter(col("containment") >= threshold)
-      .select(col("_id").as("doc_id"))
-  }
-
   // ------------------------------------------------------------------
-  // Broadcast-filter decontamination: the EVAL side is benchmark-sized
+  // The eval-key containment kernel: the EVAL side is benchmark-sized
   // by contract (the same bound [[semanticFlags]] already relies on
   // when it collects the eval embeddings), so its distinct shingle-KEY
-  // set — 8 bytes per distinct eval shingle — collects and broadcasts,
-  // and the corpus-side drop becomes a pure map-side filter: zero
-  // shuffle, zero aggregate, zero anti-join (guide §2.4/§3.1 — the
-  // batch's shingles previously crossed an exchange, fed a per-doc
-  // aggregate, and came back through an id anti-join, all to evaluate
-  // a per-doc predicate against a fixed small set). The TRAIN side of
-  // [[containment]] is still never collected or broadcast — this path
+  // set — 8 bytes per distinct eval shingle — collects under a cap and
+  // broadcasts once, and every corpus-side gate becomes a map-side
+  // pass: zero shuffle, zero aggregate, zero anti-join (guide
+  // §2.4/§3.1). The builders' drop filter, the streaming annotation and
+  // the audit's prefilter all read the same [[EvalKeys]] through one
+  // per-row function ([[shingleMatches]]). The TRAIN side of
+  // [[containment]] is never collected or broadcast — this kernel
   // exists only where the reference side is the eval set.
   // ------------------------------------------------------------------
 
-  /** The distinct shingle keys of a persisted eval-shingle index,
-    * sorted for binary search — a pure function of the table's files,
-    * so it is cached PER JVM under a file-level fingerprint (location
-    * plus every file's name/length/mtime): an append
-    * ([[appendEvalDocs]]) or swap changes the fingerprint and forces a
-    * recollect, while the common case (one fixed eval set audited and
-    * gated batch after batch) pays the eval-sized collect job once
-    * instead of once per batch. Eval-sized by the index contract. */
-  private val evalKeysCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Array[Long])]
-  private[llm] def evalIndexKeys(spark: org.apache.spark.sql.SparkSession,
-      tableName: String): Array[Long] = {
-    val fp = tableFilesFingerprint(spark, tableName)
-    val hit = evalKeysCache.get(tableName)
-    if (hit != null && hit._1 == fp) hit._2
-    else {
-      val arr = spark.table(tableName).filter(col("_sh").isNotNull)
-        .select(col("_sh")).distinct()
-        .collect().map(_.getLong(0))
-      java.util.Arrays.sort(arr)
-      // recorded only after the successful collect (the ensureEvalTable
-      // discipline) — a failed read never validates a cache entry
-      evalKeysCache.put(tableName, (fp, arr))
-      arr
+  /** Most distinct eval shingle keys the driver collects (8 bytes each,
+    * so 128 MB). A larger eval set fails fast in [[EvalKeys]]' constructors;
+    * score it with the distributed [[containment]] instead. */
+  private[llm] val MaxEvalKeys: Int = 1 << 24
+
+  /** The eval set's distinct shingle keys, sorted for binary search,
+    * with the shingle width they were hashed at and ONE broadcast of
+    * the array. Never destroyed: a lazy plan built before its key set
+    * was replaced may still execute, and Spark's ContextCleaner
+    * reclaims a broadcast no plan references. */
+  private[llm] final class EvalKeys private (val sorted: Array[Long],
+      val shingleN: Int, val bc: Broadcast[Array[Long]])
+
+  private[llm] object EvalKeys {
+
+    /** Membership in a sorted key array — the kernel's one probe. */
+    def contains(sorted: Array[Long], key: Long): Boolean =
+      java.util.Arrays.binarySearch(sorted, key) >= 0
+
+    /** Key sets of persisted eval-shingle indexes, cached PER JVM under
+      * a file-level fingerprint (location plus every file's
+      * name/length/mtime), the stamped shingleN and the SparkContext (a
+      * broadcast dies with its context): an append ([[appendEvalDocs]])
+      * or swap changes the fingerprint and forces a recollect, while
+      * the common case (one fixed eval set gated and audited batch
+      * after batch) pays the eval-sized collect job and the broadcast
+      * once instead of once per batch. */
+    private val cache =
+      new java.util.concurrent.ConcurrentHashMap[String, (String, EvalKeys)]
+
+    /** The key set of a persisted eval-shingle index at its stamped
+      * shingleN (a table without the stamp fails fast). */
+    def ofIndex(spark: SparkSession, tableName: String,
+        cap: Int = MaxEvalKeys): EvalKeys = {
+      val shingleN = stampedShingleN(spark, tableName)
+      val sc = spark.sparkContext
+      val fp = s"${sc.applicationId}@${sc.startTime}#$shingleN#" +
+        tableFilesFingerprint(spark, tableName)
+      val hit = cache.get(tableName)
+      if (hit != null && hit._1 == fp) hit._2
+      else {
+        val keys = collectCapped(spark.table(tableName).filter(col("_sh").isNotNull)
+          .select(col("_sh")).distinct(), shingleN, cap)
+        // recorded only after the successful collect (the ensureEvalTable
+        // discipline) — a failed read never validates a cache entry
+        cache.put(tableName, (fp, keys))
+        keys
+      }
+    }
+
+    /** The key set of an in-memory eval reference frame (the one-shot
+      * builder's cleaned eval set). */
+    def ofFrame(evalRef: DataFrame, idCol: String, textCol: String,
+        shingleN: Int, cap: Int = MaxEvalKeys): EvalKeys =
+      collectCapped(TextOps.shingleIndex(evalRef, idCol, textCol, shingleN)
+        .select(col("_sh")).distinct(), shingleN, cap)
+
+    /** Collects a DISTINCT one-LONG-column key frame in ONE job: each
+      * partition ships its keys as one array and `RDD.aggregate` folds
+      * them on the driver as they arrive. Once the merged count passes
+      * `cap` the driver drops the arrays and only counts, then fails
+      * with the count. */
+    private def collectCapped(keys: DataFrame, shingleN: Int, cap: Int): EvalKeys = {
+      val (n, parts) = keys.rdd
+        .mapPartitions(rows => Iterator.single(rows.map(_.getLong(0)).toArray))
+        .aggregate((0L, List.empty[Array[Long]]))(
+          (acc, part) => (acc._1 + part.length, part :: acc._2),
+          { (a, b) =>
+            val total = a._1 + b._1
+            (total, if (total > cap) Nil else b._2 ::: a._2)
+          })
+      require(n <= cap,
+        s"the eval set has $n distinct shingle keys, over the driver cap " +
+          s"of $cap for the broadcast decontamination gate — score an eval " +
+          "set this large with the distributed Decontamination.containment")
+      val sorted = Array.concat(parts: _*)
+      java.util.Arrays.sort(sorted)
+      new EvalKeys(sorted, shingleN, keys.sparkSession.sparkContext.broadcast(sorted))
     }
   }
 
   /** Location + per-file (name, length, mtime) of a table's directory —
-    * the staleness witness for [[evalIndexKeys]]. Driver-side FS
+    * the staleness witness for [[EvalKeys.ofIndex]]. Driver-side FS
     * listing only (the table is eval-sized: a handful of files). */
-  private def tableFilesFingerprint(spark: org.apache.spark.sql.SparkSession,
+  private def tableFilesFingerprint(spark: SparkSession,
       tableName: String): String = {
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(tableName)
     val loc = spark.sessionState.catalog.getTableMetadata(ident).location
@@ -399,111 +418,71 @@ object Decontamination {
     s"$loc#$files"
   }
 
-  /** Map-side membership filter of a one-LONG-column frame against a
-    * broadcast sorted key array — the exact (no-fpp) sibling of a
-    * Bloom prefilter for an eval-sized key set. */
-  private def filterKeysInSortedSet(sh: DataFrame,
-      sortedKeys: Array[Long]): DataFrame = {
-    val schema = sh.schema
-    val bc = sh.sparkSession.sparkContext.broadcast(sortedKeys)
-    sh.mapPartitions { rows =>
-      val keys = bc.value
-      rows.filter(r => !r.isNullAt(0) &&
-        java.util.Arrays.binarySearch(keys, r.getLong(0)) >= 0)
-    }(org.apache.spark.sql.Encoders.row(schema))
-  }
+  /** The per-row kernel: (n_shingles, n_matched) of `text` against
+    * sorted eval keys — the same tokenize ([[TextOps.tokensJvm]]) and
+    * distinct-shingle hash ([[TextOps.shingleHashesJvm]]) the shingle
+    * index runs, matches counted by binary search. Null or
+    * shingle-less text gives (0, 0). */
+  private[llm] def shingleMatches(sorted: Array[Long], text: String,
+      shingleN: Int): (Int, Int) =
+    if (text == null) (0, 0)
+    else {
+      val hs = TextOps.shingleHashesJvm(TextOps.tokensJvm(text), shingleN)
+      var m = 0
+      var i = 0
+      while (i < hs.length) {
+        if (EvalKeys.contains(sorted, hs(i))) m += 1
+        i += 1
+      }
+      (hs.length, m)
+    }
 
-  /** The distinct shingle keys of an in-memory eval reference frame
-    * (the one-shot builder's cleaned eval set), sorted. */
-  private[llm] def evalShingleKeys(evalRef: DataFrame, idCol: String,
-      textCol: String, shingleN: Int): Array[Long] = {
-    val arr = TextOps.shingleIndex(evalRef, idCol, textCol, shingleN)
-      .select(col("_sh")).distinct()
-      .collect().map(_.getLong(0))
-    java.util.Arrays.sort(arr)
-    arr
-  }
+  /** [[containment]]'s rounded ratio ([[TextOps.round3]] = Spark
+    * `round(x, 3)`), 0.0 for a shingle-less doc. */
+  private def containmentOf(total: Int, matched: Int): Double =
+    if (total == 0) 0.0 else TextOps.round3(matched.toDouble / total)
 
   /**
-   * The containment DROP as a map-side FILTER: keep exactly the rows of
-   * `batch` whose shingle containment in the broadcast `sortedKeys` set
-   * stays BELOW `threshold` — the same rows
-   * `batch.join(containmentDropIds*(…) , anti)` keeps, with zero
-   * exchange. Per row: the same tokenize ([[TextOps.tokensJvm]]) +
-   * distinct-shingle hash ([[TextOps.shingleHashesJvm]]) the shingle
-   * index runs, matches counted by binary search, and the SAME rounded
-   * ratio ([[TextOps.round3]] = Spark `round(x, 3)`) compared
-   * inclusively — bit-identical decisions. Shingle-less and null-text
-   * rows keep (containment 0 < threshold, which `require`s > 0).
+   * The builders' containment DROP as a map-side FILTER: keep exactly
+   * the rows of `batch` whose ROUNDED containment in `keys` stays BELOW
+   * `threshold` — the rows `batch.join(containment*(…)
+   * .filter(containment >= threshold), left_anti)` keeps, with zero
+   * exchange. Null-text and shingle-less rows have containment 0.0, so
+   * they keep for any threshold above 0 and drop at 0, like every row.
    *
    * Decisions are PER ROW; identical to the aggregate form whenever ids
    * are unique (the builder/Packing contract — with a duplicated id the
    * aggregate form would pool both rows' shingles under one doc).
    */
-  private[llm] def containmentFilterWithKeys(batch: DataFrame,
-      textCol: String, sortedKeys: Array[Long], shingleN: Int,
-      threshold: Double): DataFrame = {
-    require(threshold > 0,
-      "containmentFilterWithKeys requires threshold > 0 (at 0 every doc " +
-        "incl. shingle-less ones drops — use containmentAgainstIndex)")
-    val schema = batch.schema
-    val ti = schema.fieldIndex(textCol)
-    val bc = batch.sparkSession.sparkContext.broadcast(sortedKeys)
-    val n = shingleN
-    val thr = threshold
+  private[llm] def containmentFilter(batch: DataFrame, textCol: String,
+      keys: EvalKeys, threshold: Double): DataFrame = {
+    val ti = batch.schema.fieldIndex(textCol)
+    val bc = keys.bc
+    val n = keys.shingleN
     batch.mapPartitions { rows =>
-      val keys = bc.value
+      val sorted = bc.value
       rows.filter { r =>
-        if (r.isNullAt(ti)) true
-        else {
-          val hs = TextOps.shingleHashesJvm(
-            TextOps.tokensJvm(r.getString(ti)), n)
-          val total = hs.length
-          if (total == 0) true
-          else {
-            var m = 0
-            var i = 0
-            while (i < total) {
-              if (java.util.Arrays.binarySearch(keys, hs(i)) >= 0) m += 1
-              i += 1
-            }
-            TextOps.round3(m.toDouble / total) < thr
-          }
-        }
+        val (total, m) = shingleMatches(sorted, r.getString(ti), n)
+        containmentOf(total, m) < threshold
       }
-    }(org.apache.spark.sql.Encoders.row(schema))
-  }
-
-  /** [[containmentFilterWithKeys]] against the persisted eval-shingle
-    * index: stamped shingleN, keys collected off the bucketed scan
-    * (one eval-sized job), then a zero-shuffle filter. */
-  private[llm] def containmentFilterAgainstIndex(batch: DataFrame,
-      textCol: String, tableName: String, threshold: Double): DataFrame = {
-    val spark = batch.sparkSession
-    val shingleN = stampedShingleN(spark, tableName)
-    containmentFilterWithKeys(batch, textCol, evalIndexKeys(spark, tableName),
-      shingleN, threshold)
+    }(Encoders.row(batch.schema))
   }
 
   /**
    * The streaming gate's ANNOTATION as the same zero-shuffle pass:
    * every `batch` column plus (n_shingles, n_matched, containment,
    * status) — exactly what
-   * `batch LEFT JOIN containmentAgainstIndex(batch) ON id` used to
-   * produce (per-doc aggregate + spine + id join, several exchanges
-   * per micro-batch), computed per row against the broadcast key set.
-   * Null-id rows keep the old left-join shape (null stats, `clean`);
-   * decisions are per row — identical to the join form when ids are
-   * unique within the batch (the sink contract).
+   * `batch LEFT JOIN containmentAgainstIndex(batch) ON id` produces,
+   * computed per row against the index's [[EvalKeys]]. Null-id rows
+   * keep the left-join shape (null stats, `clean`); decisions are per
+   * row — identical to the join form when ids are unique within the
+   * batch (the sink contract).
    */
   private[graft] def annotateContainmentAgainstIndex(batch: DataFrame,
       idCol: String, textCol: String, tableName: String,
       threshold: Double): DataFrame = {
-    val spark = batch.sparkSession
-    val shingleN = stampedShingleN(spark, tableName)
-    val sortedKeys = evalIndexKeys(spark, tableName)
+    val keys = EvalKeys.ofIndex(batch.sparkSession, tableName)
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-    import org.apache.spark.sql.{Encoders, Row}
     val inSchema = batch.schema
     val ii = inSchema.fieldIndex(idCol)
     val ti = inSchema.fieldIndex(textCol)
@@ -512,29 +491,19 @@ object Decontamination {
       StructField("n_matched", LongType, nullable = true),
       StructField("containment", DoubleType, nullable = true),
       StructField("status", StringType, nullable = false)))
-    val bc = spark.sparkContext.broadcast(sortedKeys)
-    val n = shingleN
-    val thr = threshold
+    val bc = keys.bc
+    val n = keys.shingleN
     batch.mapPartitions { rows =>
-      val keys = bc.value
+      val sorted = bc.value
       rows.map { r =>
         val base = Array.tabulate[Any](r.length)(r.get)
         val extra: Array[Any] =
           if (r.isNullAt(ii)) Array(null, null, null, "clean")
           else {
-            val hs =
-              if (r.isNullAt(ti)) Array.empty[Long]
-              else TextOps.shingleHashesJvm(TextOps.tokensJvm(r.getString(ti)), n)
-            val total = hs.length
-            var m = 0
-            var i = 0
-            while (i < total) {
-              if (java.util.Arrays.binarySearch(keys, hs(i)) >= 0) m += 1
-              i += 1
-            }
-            val cont = if (total == 0) 0.0 else TextOps.round3(m.toDouble / total)
+            val (total, m) = shingleMatches(sorted, r.getString(ti), n)
+            val cont = containmentOf(total, m)
             Array[Any](total.toLong, m.toLong, cont,
-              if (cont >= thr) "contaminated" else "clean")
+              if (cont >= threshold) "contaminated" else "clean")
           }
         Row.fromSeq((base ++ extra).toIndexedSeq)
       }
@@ -545,7 +514,7 @@ object Decontamination {
     * containment) per eval doc, [[containment]]'s exact schema and
     * semantics over every batch audited so far. Reads only the two
     * eval-sized tables; the corpus is never touched. */
-  def containmentState(spark: org.apache.spark.sql.SparkSession,
+  def containmentState(spark: SparkSession,
       tableName: String, matchedTable: String,
       ordered: Boolean = true): DataFrame = {
     val totals = spark.table(tableName).groupBy("_id")
@@ -567,8 +536,6 @@ object Decontamination {
       .transform(Presented(_, ordered, "doc_id"))
   }
 
-  /** Distinct shingle rows plus a NULL-spine row per shingle-less doc
-    * — the persisted form of the eval side of [[finish]]. */
   /**
    * SEMANTIC (embedding-space) decontamination: flag every training doc
    * whose nearest eval embedding clears `tau` cosine — the
@@ -618,7 +585,6 @@ object Decontamination {
     require(tau > 0 && tau <= 1, s"tau must be in (0, 1], got $tau")
     require(bucketBits >= 0, s"bucketBits must be >= 0, got $bucketBits")
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    import org.apache.spark.sql.{Encoders, Row}
     val tPrep = Similarity.prepTyped(train, idCol, "_tid", vecCol)
       .filter(col("_tid").isNotNull && col("_v").isNotNull && col("_n2") > 0)
     val eidOrd = Similarity.idOrdering(ePrep.schema("_eid").dataType)
@@ -739,6 +705,8 @@ object Decontamination {
       tau, bits, ordered)
   }
 
+  /** Distinct shingle rows plus a NULL-spine row per shingle-less doc
+    * — the persisted form of the eval side of [[finish]]. */
   private def evalShingleRows(eval: DataFrame, idCol: String,
       textCol: String, shingleN: Int): DataFrame = {
     val sh = TextOps.shingleIndex(eval, idCol, textCol, shingleN)
@@ -748,7 +716,7 @@ object Decontamination {
     sh.select(col("_id"), col("_sh")).unionByName(spine)
   }
 
-  private def stampedShingleN(spark: org.apache.spark.sql.SparkSession,
+  private def stampedShingleN(spark: SparkSession,
       tableName: String): Int = {
     val props = spark.sql(s"SHOW TBLPROPERTIES $tableName").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -759,27 +727,20 @@ object Decontamination {
           "saveEvalShingleIndex"))
   }
 
-  /** Per-doc (_id, n_shingles, n_matched, containment) for docs WITH
-    * at least one shingle — the shared aggregate under [[finish]] and
-    * the spine-free drop paths (n_shingles >= 1 by construction, so
-    * the rounded ratio needs no zero guard here). */
-  private def perDocContainment(trainShingleKeys: DataFrame, eval: DataFrame,
-      idCol: String, textCol: String, shingleN: Int): DataFrame = {
+  /** The shared containment tail: distinct the train shingle keys, left
+    * join the eval shingles, aggregate per eval doc over the id spine. */
+  private def finish(trainShingleKeys: DataFrame, eval: DataFrame,
+      idCol: String, textCol: String, shingleN: Int,
+      ordered: Boolean): DataFrame = {
     val trainSh = trainShingleKeys.distinct().withColumn("_hit", lit(1))
-    val evalSh = TextOps.shingleIndex(eval, idCol, textCol, shingleN)
-    evalSh
+    // per-doc counts for docs WITH at least one shingle (n_shingles >= 1,
+    // so the rounded ratio needs no zero guard here)
+    val perDoc = TextOps.shingleIndex(eval, idCol, textCol, shingleN)
       .join(trainSh, Seq("_sh"), "left")
       .groupBy(col("_id"))
       .agg(count(lit(1)).as("n_shingles"), count(col("_hit")).as("n_matched"))
       .withColumn("containment",
         round(col("n_matched").cast("double") / col("n_shingles"), 3))
-  }
-
-  private def finish(trainShingleKeys: DataFrame, eval: DataFrame,
-      idCol: String, textCol: String, shingleN: Int,
-      ordered: Boolean): DataFrame = {
-    val perDoc = perDocContainment(trainShingleKeys, eval, idCol, textCol,
-      shingleN)
     // spine: every eval id exactly once, shingle-less docs included
     eval.select(col(idCol).as("doc_id")).distinct()
       .join(perDoc, col("doc_id") === perDoc("_id"), "left")

@@ -19,10 +19,12 @@ import org.apache.spark.sql.functions._
  *        one-shot builder ([[Pipeline.cleanStage]]/
  *        [[Pipeline.gateStage]]) so the two builders cannot drift;
  *   5.   decontamination against the PERSISTED eval-shingle index
- *        ([[Decontamination.containmentAgainstIndex]]) — a doc's
- *        containment in a fixed eval set depends on nothing but the
- *        doc, so the stage is batch-decomposable by construction; the
- *        bucketed index never re-shingles;
+ *        (the [[Decontamination.EvalKeys]] map-side filter: the
+ *        index's key set collects and broadcasts once per JVM while
+ *        the index is unchanged) — a doc's containment in a fixed eval
+ *        set depends on nothing but the doc, so the stage is
+ *        batch-decomposable by construction; the index never
+ *        re-shingles;
  *   6.   exact dedup against the PERSISTED keeper index
  *        ([[IncrementalDedup.classify]] + in-batch keeper): a batch
  *        doc duplicating ANY earlier batch's keeper drops
@@ -231,12 +233,12 @@ object IncrementalPipeline {
       sampleK: Int = 16, audit: Boolean = true, buckets: Int = 32,
       graceMs: Long = 0L, batchEmbeddings: Option[DataFrame] = None,
       vecCol: String = "embedding"): DataFrame = {
-    val spark = batch.sparkSession
-    // the gated batch feeds THREE plan branches inside the
-    // decontamination checkpoint below (the containment aggregate, its
-    // per-doc spine, and the anti-join spine) and physical plans
-    // re-execute shared subtrees per branch — persist so the per-doc
-    // text work (NFC, tokenize, classifier fold) runs once per batch;
+    if (decontaminate) Pipeline.requireDecontamThreshold(cfg)
+    // the gated batch feeds TWO plan branches inside the classify
+    // checkpoint below (the in-batch keeper aggregate and the rows it
+    // joins back to) and physical plans re-execute shared subtrees per
+    // branch — persist so the per-doc text work (NFC, tokenize,
+    // classifier fold) runs once per batch;
     // released as soon as the checkpoint materializes (try/finally: a
     // failure before then — a missing state table, a job abort — must
     // not leak the cached batch into the block manager, or a caller's
@@ -263,24 +265,15 @@ object IncrementalPipeline {
           s"decontaminate=true but ${st.evalTable} does not exist — " +
             "save it via saveEvalIndex first (skipping silently would " +
             "ship eval content)")
-        // broadcast-filter drop when the threshold can never catch a
-        // shingle-less doc (threshold > 0): the eval index's distinct
-        // shingle KEYS are eval-sized by contract, so they collect once
-        // per batch (one bucketed-scan job) and the drop runs as a pure
-        // map-side filter — no batch-shingle exchange, no per-doc
-        // aggregate, no id anti-join (guide §2.4/§3.1; decisions
-        // bit-identical — see containmentFilterWithKeys). The
-        // threshold-0 edge keeps the full per-doc form.
-        if (cfg.decontamThreshold > 0)
-          Decontamination.containmentFilterAgainstIndex(
-            gated, "text", st.evalTable, cfg.decontamThreshold)
-        else {
-          val dropIds = Decontamination.containmentAgainstIndex(
-              gated, idCol, "text", st.evalTable, ordered = false)
-            .filter(col("containment") >= cfg.decontamThreshold)
-            .select(col("doc_id").as(idCol))
-          gated.join(dropIds, Seq(idCol), "left_anti")
-        }
+        // the eval index's distinct shingle KEYS are eval-sized by
+        // contract: they collect and broadcast once while the index is
+        // unchanged (one bucketed-scan job, shared with the audit) and
+        // the drop runs as a pure map-side filter — no batch-shingle
+        // exchange, no per-doc aggregate, no id anti-join (guide
+        // §2.4/§3.1)
+        Decontamination.containmentFilter(gated, "text",
+          Decontamination.EvalKeys.ofIndex(spark, st.evalTable),
+          cfg.decontamThreshold)
       } else gated
     // stage 5b: semantic gate against the persisted eval-embedding
     // index — zero shuffle (broadcast argmax) + one id anti-join

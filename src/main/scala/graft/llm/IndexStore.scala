@@ -1228,13 +1228,6 @@ object IndexStore {
     n
   }
 
-  /** Pending tombstoned keeper ids (empty frame when none). */
-  def pendingTombstones(spark: SparkSession, tableName: String): DataFrame = {
-    val tt = tombstoneTable(tableName)
-    if (spark.catalog.tableExists(tt)) spark.table(tt)
-    else spark.range(0).select(col("id").as("keep_id"))
-  }
-
   /** Drop the sidecar after a rewrite folded its ids — metadata and
     * files. Safe under the single-writer discipline (the same writer
     * tombstones, rewrites, clears). */

@@ -17,11 +17,11 @@ import org.apache.spark.sql.DataFrame
  *      as one array literal);
  *   5. optional DECONTAMINATION against a held-out eval set: a doc
  *      whose shingle containment in the eval set reaches
- *      `decontamThreshold` is dropped ([[Decontamination.containment]]
- *      with the eval set as the REFERENCE side — benchmark-sized, so
- *      its shingle set broadcasts and the corpus never shuffles for
- *      the match join; the corpus-side cost is its own shingle
- *      projection + one per-doc aggregate);
+ *      `decontamThreshold` is dropped ([[Decontamination.containment]]'s
+ *      per-doc decision with the eval set as the REFERENCE side —
+ *      benchmark-sized, so its shingle keys collect and broadcast once
+ *      and the drop is a map-side filter: the corpus never shuffles
+ *      for it);
  *   6. exact dedup keep-first ([[ExactDedup]], keeper semi-join);
  *   7. deterministic hash sample at `sampleRate` ([[Sampling]]);
  *   8. fixed-token sequence packing in deterministic shard order
@@ -33,8 +33,8 @@ import org.apache.spark.sql.DataFrame
  * that passed each stage computed independently; determinism under
  * partitioning), and pq107 pins the full chain with both optional
  * stages enabled. Each hand-off is keyed on the id column, so the
- * composition introduces only the stages' own shuffles — nothing is
- * collected to the driver at any point.
+ * composition introduces only the stages' own shuffles — the only
+ * driver collect is the eval set's capped shingle-key set (stage 5).
  */
 object Pipeline {
 
@@ -45,7 +45,8 @@ object Pipeline {
     * stage (5) is enabled by passing `evalSet` to
     * [[buildTrainingSet]]; `decontamShingleN`/`decontamThreshold`
     * configure it (≥ threshold on the containment the operator
-    * reports — ROUND(3), inclusive, the pq25 convention). */
+    * reports — ROUND(3), inclusive, the pq25 convention; a threshold
+    * outside [0, 1] fails fast). */
   final case class Config(
       stripHtml: Boolean = false,
       minTokens: Long = 50,
@@ -86,6 +87,14 @@ object Pipeline {
       evalEmbeddings: DataFrame,
       vecCol: String = "embedding",
       bucketBits: Int = 0)
+
+  /** Stage 5's threshold check, shared by both builders: NaN or a
+    * value outside [0, 1] (say a percent-style 80) would silently
+    * ship every doc, so it fails fast. */
+  private[llm] def requireDecontamThreshold(cfg: Config): Unit =
+    require(cfg.decontamThreshold >= 0 && cfg.decontamThreshold <= 1,
+      s"Config.decontamThreshold must be in [0, 1], got " +
+        s"${cfg.decontamThreshold}")
 
   /** Stages 1-2 (NFC normalization + optional HTML strip) as one
     * reusable hand-off: (idCol, text). Shared verbatim by
@@ -195,51 +204,37 @@ object Pipeline {
       evalSet: Option[DataFrame] = None,
       semantic: Option[Semantic] = None,
       scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+    if (evalSet.isDefined) requireDecontamThreshold(cfg)
     // The gate-stage output feeds AT LEAST two plan branches (the
-    // dedup keeper aggregate and the spine it joins back to, plus the
-    // decontamination branch when enabled) and Spark physical plans
-    // re-execute a shared subtree once per branch — without a persist,
-    // the per-doc text work (NFC, tokenize, classifier fold) runs 3-5x
-    // per action (guide §1.2/§5: cache exactly the reused expensive
-    // intermediate). MEMORY_AND_DISK spills instead of recomputing at
-    // corpus scale; the cache is registered with the caller's scope and
-    // released with it (Bench releases between queries).
+    // dedup keeper aggregate and the spine it joins back to) and Spark
+    // physical plans re-execute a shared subtree once per branch —
+    // without a persist, the per-doc text work (NFC, tokenize,
+    // classifier fold) runs 3-5x per action (guide §1.2/§5: cache
+    // exactly the reused expensive intermediate). MEMORY_AND_DISK
+    // spills instead of recomputing at corpus scale; the cache is
+    // registered with the caller's scope and released with it (Bench
+    // releases between queries).
     val learned = scope.track(
       gateStage(cleanStage(df, idCol, textCol, cfg), idCol, cfg)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // decontamination: the EVAL SET is the reference side (its shingle
-    // set is benchmark-sized and broadcasts); each surviving corpus
-    // doc's containment in it decides the drop. ≥ threshold on the
-    // operator's ROUNDED containment — inclusive, the pq25 convention.
-    // The eval text goes through the SAME cleaning stages the corpus
-    // went through (NFC normalization, and the HTML strip when
-    // enabled): shingle hashes are spelling-sensitive, and eval
+    // decontamination: the EVAL SET is the reference side; each
+    // surviving corpus doc's containment in it decides the drop. ≥
+    // threshold on the ROUNDED containment — inclusive, the pq25
+    // convention. The eval text goes through the SAME cleaning stages
+    // the corpus went through (NFC normalization, and the HTML strip
+    // when enabled): shingle hashes are spelling-sensitive, and eval
     // content differing only in normalization or markup would
-    // otherwise silently escape the drop.
+    // otherwise silently escape the drop. The eval set's distinct
+    // shingle keys are benchmark-sized by contract, so they collect
+    // once (one eval-sized job, run when the chain is BUILT) and the
+    // drop runs as a map-side filter over the gated corpus — no
+    // corpus-shingle aggregate, no id anti-join (guide §2.4/§3.1).
     val decontaminated = evalSet match {
       case Some(ev) =>
-        val evClean = cleanStage(ev, idCol, textCol, cfg)
-        // broadcast-filter drop when threshold > 0 (a shingle-less doc
-        // can never reach it): the eval set's distinct shingle keys are
-        // benchmark-sized by contract, so they collect once (one
-        // eval-sized job, run when the chain is BUILT) and the drop
-        // runs as a map-side filter over the gated corpus — no
-        // corpus-shingle aggregate, no id anti-join (guide §2.4/§3.1;
-        // decisions bit-identical — see containmentFilterWithKeys).
-        // The threshold-0 edge keeps the full per-doc form.
-        if (cfg.decontamThreshold > 0)
-          Decontamination.containmentFilterWithKeys(learned, "text",
-            Decontamination.evalShingleKeys(evClean, idCol, "text",
-              cfg.decontamShingleN),
-            cfg.decontamShingleN, cfg.decontamThreshold)
-        else {
-          val dropIds = Decontamination.containment(
-              evClean, learned, idCol, "text",
-              shingleN = cfg.decontamShingleN, ordered = false)
-            .filter(col("containment") >= cfg.decontamThreshold)
-            .select(col("doc_id").as(idCol))
-          learned.join(dropIds, Seq(idCol), "left_anti")
-        }
+        Decontamination.containmentFilter(learned, "text",
+          Decontamination.EvalKeys.ofFrame(cleanStage(ev, idCol, textCol, cfg),
+            idCol, "text", cfg.decontamShingleN),
+          cfg.decontamThreshold)
       case None => learned
     }
     // stage 5b: semantic (embedding-space) decontamination — the

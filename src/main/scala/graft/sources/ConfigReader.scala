@@ -29,10 +29,6 @@ object ConfigReader {
     else fromJson(readFile(path))
   }
 
-  def fromJsonFile(path: String): StudyConfig = fromJson(readFile(path))
-
-  def fromYamlFile(path: String): StudyConfig = fromYaml(readFile(path))
-
   /** YAML study config — the reference's actual on-disk format. Parsed
    *  into the same node tree as JSON, so both forms share one walk. */
   def fromYaml(yaml: String): StudyConfig =

@@ -81,17 +81,4 @@ object DdCsv {
     }
     DdTable(studyName, name, variables, consentGroup, urlBase, subjectIdOverride)
   }
-
-  /** Parse several DD CSVs into a study catalog, one table per file. */
-  def parseStudy(
-      spark: SparkSession,
-      studyName: String,
-      tables: Seq[(String, String)], // (tableName, path)
-      colnames: Map[String, String] = Map.empty,
-      consentGroup: Option[String] = None,
-      urlBase: String = Dd.SystemBase): DdStudy =
-    DdStudy(studyName,
-      tables.map { case (n, p) =>
-        parse(spark, p, studyName, Some(n), colnames, consentGroup, urlBase)
-      }, urlBase)
 }

@@ -20,9 +20,11 @@ import org.apache.spark.sql.streaming.DataStreamWriter
  *      [[Decontamination.containment]] over every batch ingested so far
  *      (the pq98 accumulation law) — the running "how burned is my eval
  *      set" report, with no corpus rescan ever.
- *   2. GATE — [[Decontamination.containmentAgainstIndex]]: per-doc
- *      containment in the FIXED eval set (a pure function of the doc,
- *      which is what makes the gate batch-decomposable); each doc is
+ *   2. GATE — per-doc containment in the FIXED eval set
+ *      ([[Decontamination.containmentAgainstIndex]]'s value, computed
+ *      per row by the eval-key kernel the builders' drop filter runs;
+ *      a pure function of the doc, which is what makes the gate
+ *      batch-decomposable); each doc is
  *      annotated and classified `contaminated` (containment ≥
  *      `threshold`, inclusive on the operator's ROUNDED containment —
  *      the [[graft.llm.Pipeline]] convention) or `clean`.
@@ -30,9 +32,10 @@ import org.apache.spark.sql.streaming.DataStreamWriter
  * The annotated batch — original columns plus (n_shingles, n_matched,
  * containment, status) — is handed to `onBatch`; the caller routes
  * clean rows into the corpus and contaminated rows into a quarantine/
- * report sink. Both jobs read the SAME bucketed index scan shape:
- * batch-derived shingles shuffle into the index's bucket count, the
- * eval side never re-shingles and never exchanges.
+ * report sink. Both jobs read the SAME broadcast key set of the index
+ * (collected once per JVM while the index is unchanged): the audit
+ * shuffles only the batch's eval-matching shingles, the gate shuffles
+ * nothing, and the eval side never re-shingles.
  *
  * REPLAY CONVERGENCE: a re-delivered batch's hits are already in the
  * matched state (audit appends zero rows) and the gate is stateless per

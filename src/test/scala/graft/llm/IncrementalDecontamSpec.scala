@@ -20,6 +20,8 @@ import org.scalatest.funsuite.AnyFunSuite
  *     batch on.
  *  4. PLAN: the audit join is exchange-free above the bucketed
  *     eval-index scan — only batch-derived shingles shuffle.
+ *  5. KEY SET: every gate, annotation and audit on an unchanged index
+ *     reads one broadcast; an oversized eval set fails fast.
  */
 class IncrementalDecontamSpec extends AnyFunSuite {
 
@@ -151,11 +153,13 @@ class IncrementalDecontamSpec extends AnyFunSuite {
                                // clean with null stats (left-join shape)
       ).toDF("doc_id", "text")
       val thr = 0.667
-      val filtered = Decontamination.containmentFilterAgainstIndex(
-        batch, "text", tbl, thr)
+      val filtered = Decontamination.containmentFilter(
+        batch, "text", Decontamination.EvalKeys.ofIndex(s2, tbl), thr)
       val viaAnti = batch.join(
-        Decontamination.containmentDropIdsAgainstIndex(
-          batch.filter(col("doc_id").isNotNull), "doc_id", "text", tbl, thr)
+        Decontamination.containmentAgainstIndex(
+            batch.filter(col("doc_id").isNotNull), "doc_id", "text", tbl,
+            ordered = false)
+          .filter(col("containment") >= thr)
           .select(col("doc_id")),
         Seq("doc_id"), "left_anti")
       // the anti-join form can't see the null-id row's drop (null never
@@ -191,5 +195,84 @@ class IncrementalDecontamSpec extends AnyFunSuite {
       assert(annotated.columns.toSeq == oldForm.columns.toSeq)
       assert(sortedRows(annotated) == sortedRows(oldForm))
     } finally Seq(tbl, mtbl).foreach(t => s2.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("eval-key set: one broadcast serves both builder batches and the audit on an unchanged index; an append swaps it in and a plan built before still runs") {
+    import TestSpark.spark
+    val docs = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
+    val cfg = Pipeline.Config(minTokens = 5, maxTokens = 10000,
+      minMeanWlen = 1.0, maxMeanWlen = 20.0, minStopRatio = 0.0,
+      minTtr = 0.05, maxDupBigramFrac = 1.0, maxTopBigramFrac = 1.0,
+      targetTokens = 64, shards = 4, salt = "idbc")
+    val st = IncrementalPipeline.State("graft_idec_bc", tmpPath("state"))
+    try {
+      IncrementalPipeline.saveEvalIndex(
+        docs.filter(col("doc_id") < 10)
+          .select((col("doc_id") + 90000).as("doc_id"), col("text")),
+        "doc_id", "text", cfg, st, buckets = 4)
+      def keys = Decontamination.EvalKeys.ofIndex(spark, st.evalTable)
+      def batch(b: DataFrame): Unit = IncrementalPipeline.releaseEmission(
+        IncrementalPipeline.processBatch(b, "doc_id", "text", cfg, st,
+          sampleK = 0, buckets = 4))
+      batch(docs.filter(col("doc_id") % 2 === 0))
+      val id = keys.bc.id
+      batch(docs.filter(col("doc_id") % 2 === 1))
+      Decontamination.auditBatch(docs, "doc_id", "text", st.evalTable,
+        st.matchedTable, st.matchedPath)
+      assert(keys.bc.id == id,
+        "an unchanged index must keep serving its first broadcast")
+
+      // a lazy gate plan on the current key set, for a doc whose verbatim
+      // copy the append below adds to the eval set
+      val leak = docs.filter(col("doc_id") === 20)
+      assert(Decontamination.containmentAgainstIndex(leak, "doc_id", "text",
+          st.evalTable, ordered = false)
+        .filter(col("containment") >= cfg.decontamThreshold).isEmpty,
+        "doc 20 must start below the threshold")
+      val planBefore = Decontamination.containmentFilter(leak, "text", keys,
+        cfg.decontamThreshold)
+      Decontamination.appendEvalDocs(
+        leak.select((col("doc_id") + 95000).as("doc_id"), col("text")),
+        "doc_id", "text", st.evalTable)
+      val after = keys
+      assert(after.bc.id != id, "an append must swap in a new broadcast")
+      assert(planBefore.count() == 1L,
+        "a plan built before the append still runs on its own key set")
+      assert(Decontamination.containmentFilter(leak, "text", after,
+        cfg.decontamThreshold).count() == 0L)
+    } finally IncrementalPipeline.reset(spark, st)
+  }
+
+  test("eval-key set: an eval set over the driver cap fails fast, naming its key count and the distributed operator") {
+    import TestSpark.spark
+    val eval = spark.read.parquet(s"$dir/documents.parquet")
+      .select("doc_id", "text").repartition(4)
+    val expected = TextOps.shingleIndex(eval, "doc_id", "text", 3)
+      .select("_sh").distinct().collect().map(_.getLong(0)).sorted.toSeq
+    val n = expected.size
+    assert(n > 1)
+    Seq(1, n - 1).foreach { cap =>
+      val err = intercept[IllegalArgumentException] {
+        Decontamination.EvalKeys.ofFrame(eval, "doc_id", "text", 3, cap = cap)
+      }
+      assert(err.getMessage.contains(s"$n distinct shingle keys") &&
+        err.getMessage.contains("Decontamination.containment"), err.getMessage)
+    }
+    // at the cap exactly the whole set collects, sorted
+    val atCap = Decontamination.EvalKeys.ofFrame(eval, "doc_id", "text", 3,
+      cap = n)
+    assert(atCap.sorted.toSeq == expected && atCap.shingleN == 3)
+    // the persisted-index constructor carries the same guard, and a
+    // refused collect leaves no cache entry behind
+    val tbl = "graft_idec_cap_eval"
+    try {
+      Decontamination.saveEvalShingleIndex(eval, "doc_id", "text", tbl,
+        tmpPath(tbl), shingleN = 3, buckets = 4)
+      val err = intercept[IllegalArgumentException] {
+        Decontamination.EvalKeys.ofIndex(spark, tbl, cap = n - 1)
+      }
+      assert(err.getMessage.contains(s"$n distinct shingle keys"), err.getMessage)
+      assert(Decontamination.EvalKeys.ofIndex(spark, tbl).sorted.toSeq == expected)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 }

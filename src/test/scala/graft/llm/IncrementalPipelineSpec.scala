@@ -421,6 +421,25 @@ class IncrementalPipelineSpec extends AnyFunSuite {
     } finally cleanup(state)
   }
 
+  test("decontamThreshold NaN or outside [0, 1] fails fast, naming the field, before any state is written") {
+    val state = st("graft_ip_thr")
+    try {
+      IncrementalPipeline.saveEvalIndex(evalSet, "doc_id", "text", cfg, state,
+        buckets = 4)
+      // NaN and a percent-style 80 would otherwise ship every doc
+      Seq(Double.NaN, 80.0, -0.1).foreach { thr =>
+        val e = intercept[IllegalArgumentException] {
+          IncrementalPipeline.processBatch(docs, "doc_id", "text",
+            cfg.copy(decontamThreshold = thr), state, sampleK = 0, buckets = 4)
+        }
+        assert(e.getMessage.contains("decontamThreshold"), e.getMessage)
+      }
+      assert(Seq(state.dedupTable, state.cursorTable)
+        .forall(t => !spark.catalog.tableExists(t)),
+        "a refused batch must write no state")
+    } finally cleanup(state)
+  }
+
   test("drift: cursor stamps refuse a changed salt") {
     val state = st("graft_ip_drift")
     try {

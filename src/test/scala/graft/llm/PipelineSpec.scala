@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.TestSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -153,6 +154,59 @@ class PipelineSpec extends AnyFunSuite {
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(!packedIds.contains(990000L),
       "a doc leaking decomposed-Unicode eval content must be dropped")
+  }
+
+  test("decontamThreshold 0: both builders drop every doc, as the aggregate anti-join does") {
+    import spark.implicits._
+    val eval = docs.filter(col("doc_id") < 10)
+      .select((col("doc_id") + 90000).as("doc_id"), col("text"))
+    val zero = cfg.copy(salt = "psz", decontamThreshold = 0.0)
+    val evalClean = Pipeline.cleanStage(eval, "doc_id", "text", zero)
+    // the aggregate reference: every doc's containment, 0.0 for a
+    // shingle-less one, reaches threshold 0
+    def viaAnti(batch: DataFrame): DataFrame = batch.join(
+      Decontamination.containment(evalClean, batch, "doc_id", "text",
+          shingleN = zero.decontamShingleN, ordered = false)
+        .filter(col("containment") >= zero.decontamThreshold)
+        .select("doc_id"),
+      Seq("doc_id"), "left_anti")
+    val keys = Decontamination.EvalKeys.ofFrame(evalClean, "doc_id", "text",
+      zero.decontamShingleN)
+    val gated = Pipeline.gateStage(
+      Pipeline.cleanStage(docs, "doc_id", "text", zero), "doc_id", zero)
+    val edge = Seq[(Long, String)]((1L, "a b"), (2L, null), (3L, "x y z w"))
+      .toDF("doc_id", "text")
+    assert(gated.count() > 0L)
+    Seq(gated, edge).foreach { b =>
+      val kept = Decontamination.containmentFilter(b, "text", keys, 0.0)
+        .collect().toSet
+      assert(kept.isEmpty && kept == viaAnti(b).collect().toSet)
+    }
+    assert(Pipeline.buildTrainingSet(docs, "doc_id", "text", zero,
+      evalSet = Some(eval)).count() == 0L)
+    val st = IncrementalPipeline.State("graft_ps_zero",
+      java.nio.file.Files.createTempDirectory("graft_ps_zero").toString + "/state")
+    try {
+      IncrementalPipeline.saveEvalIndex(eval, "doc_id", "text", zero, st,
+        buckets = 4)
+      val spans = IncrementalPipeline.processBatch(docs, "doc_id", "text",
+        zero, st, sampleK = 0, buckets = 4)
+      assert(spans.count() == 0L)
+      IncrementalPipeline.releaseEmission(spans)
+    } finally IncrementalPipeline.reset(spark, st)
+  }
+
+  test("decontamThreshold NaN or outside [0, 1] fails fast, naming the field") {
+    val eval = docs.filter(col("doc_id") < 10)
+      .select((col("doc_id") + 90000).as("doc_id"), col("text"))
+    // NaN and a percent-style 80 would otherwise ship every doc
+    Seq(Double.NaN, 80.0, -0.1).foreach { thr =>
+      val e = intercept[IllegalArgumentException] {
+        Pipeline.buildTrainingSet(docs, "doc_id", "text",
+          cfg.copy(decontamThreshold = thr), evalSet = Some(eval))
+      }
+      assert(e.getMessage.contains("decontamThreshold"), e.getMessage)
+    }
   }
 
   test("learned gate + decontamination: deterministic across partitionings") {
