@@ -103,17 +103,9 @@ object Bench {
     // Streaming rows under-count (micro-batch jobs run on scheduler
     // threads outside the group) — their wall time is replay machinery
     // anyway.
-    val jobCounts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     val timedRuns = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = if (js.properties == null) null
-          else js.properties.getProperty("spark.jobGroup.id")
-        if (g != null && g.startsWith("graft-bench:"))
-          jobCounts.merge(g.stripPrefix("graft-bench:"), 1L, _ + _)
-      }
-    }
-    spark.sparkContext.addSparkListener(jobListener)
+    val jobLog = new JobLog
+    spark.sparkContext.addSparkListener(jobLog)
     def timed(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       spark.sparkContext.setJobGroup(s"graft-bench:$name", name)
@@ -246,29 +238,18 @@ object Bench {
     val cwd = sys.props.getOrElse("user.dir", ".")
     val detailsPath = sys.env.getOrElse("SPARK_GRAFT_DETAILS",
       cwd + "/bench_details.json")
-    // drain the async listener bus before reading the job counts: poll
-    // until the tagged total stops moving (all timed actions returned
-    // long ago; only event delivery lags)
-    val queryJobs: Map[String, Double] = {
-      def total = jobCounts.values().stream().mapToLong(l => l).sum()
-      var last = total
-      var stableMs = 0
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (stableMs < 1000 && System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        val t = total
-        stableMs = if (t == last) stableMs + 50 else 0
-        last = t
-      }
-      import scala.jdk.CollectionConverters._
-      jobCounts.asScala.flatMap { case (name, jobs) =>
-        Option(timedRuns.get(name)).filter(_ > 0)
-          .map(runs => name -> jobs.toDouble / runs)
-      }.toMap
-    }
+    // drain the async listener bus before reading the job counts
+    jobLog.settle()
+    val queryJobs: Map[String, Double] =
+      jobLog.jobs.flatMap(_.group.filter(_.startsWith("graft-bench:")))
+        .groupMapReduce(_.stripPrefix("graft-bench:"))(_ => 1L)(_ + _)
+        .flatMap { case (name, jobs) =>
+          Option(timedRuns.get(name)).filter(_ > 0)
+            .map(runs => name -> jobs.toDouble / runs)
+        }
     // detach: repeated runs in one JVM would otherwise accumulate stale
     // listeners on the shared SparkContext bus
-    spark.sparkContext.removeSparkListener(jobListener)
+    spark.sparkContext.removeSparkListener(jobLog)
     // the spin's result must OBSERVABLY escape: without a consumed read,
     // a JIT that scalar-replaces the captured sink var could hollow out
     // the timed loop and flatten the host-speed signal. One bit suffices
@@ -342,8 +323,9 @@ object Bench {
   private def obj(m: scala.collection.Map[String, Double]): String =
     m.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
   private def arr(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-  private def isStreaming(k: String): Boolean =
-    PipelineQueries.StreamingQueryNames.contains(k.takeWhile(_ != '#'))
+  private lazy val streamingNames: Set[String] =
+    SparkEntry.registry.filter(_.streaming).map(_.name).toSet
+  private def isStreaming(k: String): Boolean = streamingNames.contains(k.takeWhile(_ != '#'))
   private def split(m: scala.collection.Map[String, Double]): (Double, Double, Double) = {
     val total = m.values.sum
     val streaming = m.collect { case (k, v) if isStreaming(k) => v }.sum
@@ -491,9 +473,7 @@ object Bench {
     if (sqls.isEmpty) return None
     try {
       val tmp = java.nio.file.Files.createTempFile("graft_oracle", ".json")
-      val json = sqls.map { case (k, v) => s"${JsonStr.quote(k)}: ${JsonStr.quote(v)}" }
-        .mkString("{", ",", "}")
-      java.nio.file.Files.writeString(tmp, json)
+      java.nio.file.Files.writeString(tmp, JsonStr.stringMap(sqls))
       // stdout goes to a file so waitFor's timeout governs a stuck child
       // — reading the pipe to EOF first would block forever and make the
       // destroyForcibly path unreachable

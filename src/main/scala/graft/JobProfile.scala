@@ -22,40 +22,20 @@ object JobProfile {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     fn(spark, warmDir).write.format("noop").mode("overwrite").save()
     CacheScope.releaseSession()
-    // listener callbacks run on the bus thread; everything shared with
-    // the main thread is volatile / concurrent (a plain var would have
-    // no happens-before edge and could silently drop the whole profile)
-    case class J(id: Int, desc: String, stages: Int, start: Long)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    val jobEnds = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    @volatile var recording = false
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (recording) {
-          val d = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .orElse(Option(js.properties)
-              .flatMap(p => Option(p.getProperty("callSite.short"))))
-            .getOrElse("?")
-          jobs.put(js.jobId, J(js.jobId, d, js.stageInfos.size, js.time))
-        }
-      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        jobEnds.put(je.jobId, je.time)
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    recording = true
+    // every job SUBMITTED in the timed window, grouped or not (streaming
+    // micro-batches run outside any job group)
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    val from = System.currentTimeMillis()
     val t0 = System.nanoTime()
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     val secs = (System.nanoTime() - t0) / 1e9
-    recording = false
-    Thread.sleep(1500) // drain listener bus
-    import scala.jdk.CollectionConverters._
-    val all = jobs.values().asScala.toSeq.sortBy(_.id)
+    val until = System.currentTimeMillis()
+    log.settle()
+    val all = log.jobs.filter(j => j.start >= from && j.start <= until)
     println(f"== $name: ${secs}%.2f s, ${all.size} jobs ==")
     all.foreach { j =>
-      val dur = (jobEnds.getOrDefault(j.id, j.start) - j.start) / 1000.0
+      val dur = (j.end.getOrElse(j.start) - j.start) / 1000.0
       println(
         f"job ${j.id}%4d  $dur%7.3f s  stages=${j.stages}%2d  ${j.desc.take(140)}")
     }

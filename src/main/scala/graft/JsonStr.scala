@@ -17,6 +17,10 @@ object JsonStr {
     case c => c.toString
   } + "\""
 
+  /** A flat string->string JSON object (oracle_sql.json's shape). */
+  def stringMap(m: Iterable[(String, String)]): String =
+    m.map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
+
   /** Parse a FLAT string->number JSON object (`{"a":1.2,"b":3}`) — the
     * only shape oracle_bench.py emits. Not a general JSON parser; keys
     * are the bench's own query names (no escapes in practice).

@@ -21,10 +21,8 @@ object Verify {
       }
       finally CacheScope.releaseSession() // drop graft-persisted intermediates only
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${JsonStr.quote(k)}: ${JsonStr.quote(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      JsonStr.stringMap(SparkEntry.oracleSql))
     spark.stop()
   }
 }

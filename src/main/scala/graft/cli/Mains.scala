@@ -69,6 +69,21 @@ private[cli] object CliSession {
 
   def hosts(parsed: CliArgs.Parsed): Map[String, Hosts.HostConfig] =
     Hosts.load(parsed.opt("hosts-file").getOrElse(Hosts.DefaultHostsFile))
+
+  /** The named host; an unknown name is a usage error listing the known ones. */
+  def host(hosts: Map[String, Hosts.HostConfig], name: String): Hosts.HostConfig =
+    hosts.getOrElse(name, throw new IllegalArgumentException(
+      s"host '$name' not in hosts file (available: ${hosts.keys.toSeq.sorted.mkString(", ")})"))
+
+  /** Runs a main's body; a missing hosts file, a bad argument or a
+   *  missing input file prints its message and exits 1. */
+  def guard(body: => Int): Int =
+    try body catch {
+      case e: Hosts.HostsFileMissing => Console.err.println(e.getMessage); 1
+      case e: IllegalArgumentException => Console.err.println(e.getMessage); 1
+      case e: java.nio.file.NoSuchFileException =>
+        Console.err.println(s"file not found: ${e.getFile}"); 1
+    }
 }
 
 /**
@@ -103,12 +118,8 @@ object PlayMain {
         // -v without a host would silently validate nothing and exit 0
         Console.err.println(s"-v/--validate-only requires --host\nusage: $usage"); 1
       case Right(p) =>
-        try {
-          val host = p.opt("host").map { name =>
-            val hosts = CliSession.hosts(p)
-            hosts.getOrElse(name, throw new IllegalArgumentException(
-              s"host '$name' not in hosts file (available: ${hosts.keys.toSeq.sorted.mkString(", ")})"))
-          }
+        CliSession.guard {
+          val host = p.opt("host").map(CliSession.host(CliSession.hosts(p), _))
           var rc = 0 // worst loadResources exit across configs
           p.positional.foreach { cfgPath =>
             val config = ConfigReader.fromFile(cfgPath)
@@ -145,11 +156,6 @@ object PlayMain {
             }
           }
           rc
-        } catch {
-          case e: Hosts.HostsFileMissing => Console.err.println(e.getMessage); 1
-          case e: IllegalArgumentException => Console.err.println(e.getMessage); 1
-          case e: java.nio.file.NoSuchFileException =>
-            Console.err.println(s"file not found: ${e.getFile}"); 1
         }
     }
   }
@@ -220,7 +226,6 @@ object PlayMain {
       println(s"   validated: ${results.count()} resources against ${host.targetServiceUrl}")
       0
     } else {
-      var cache = loadCache()
       // study-ids must record the ids that exist ON THE SERVER (delfhir
       // deletes Type/<id>) — i.e. each ok row's fhir_id from the load
       // results, never the local projection ids (a POSTed resource gets a
@@ -228,20 +233,20 @@ object PlayMain {
       // second view of the results re-reads, never re-POSTs.
       val loadedPerRound = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       val failedPerRound = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      val leftover = ReferenceResolution.resolveLoop(resources, cache, { resolved =>
-        val prepared = FhirLoadSink.getOrCreate(resolved, cache, identifierPrefix)
-        val results = FhirLoadSink.load(prepared, () => host.poster().post _)
-        loadedPerRound += results.filter(col("ok"))
-          .select(col("resourceType"), col("fhir_id"))
-        failedPerRound += results.filter(!col("ok"))
-          .select(col("resourceType"), col("id"), col("error"))
-        val newRows = FhirLoadSink.asCacheRows(results)
-        cache = IdCacheStore.merge(cache, newRows)
-        // JDBC backing persists as it goes (per-round upserts), matching
-        // the reference's write-frequency; parquet saves once at the end
-        jdbcCache.foreach(_.storeAll(newRows))
-        newRows
-      })
+      val (leftover, cache) = ReferenceResolution.resolveLoop(resources, loadCache(),
+        (resolved, known) => {
+          val prepared = FhirLoadSink.getOrCreate(resolved, known, identifierPrefix)
+          val results = FhirLoadSink.load(prepared, () => host.poster().post _)
+          loadedPerRound += results.filter(col("ok"))
+            .select(col("resourceType"), col("fhir_id"))
+          failedPerRound += results.filter(!col("ok"))
+            .select(col("resourceType"), col("id"), col("error"))
+          val newRows = FhirLoadSink.asCacheRows(results)
+          // JDBC backing persists as it goes (per-round upserts), matching
+          // the reference's write-frequency; parquet saves once at the end
+          jdbcCache.foreach(_.storeAll(newRows))
+          newRows
+        })
       val existingIds = if (Files.exists(Paths.get(studyIdsPath)))
         Some(new String(Files.readAllBytes(Paths.get(studyIdsPath)), StandardCharsets.UTF_8))
       else None
@@ -342,11 +347,8 @@ object LoadFhirMain {
       case Right(p) if p.positional.length != 1 || p.opt("host").isEmpty =>
         Console.err.println(s"usage: $usage"); 1
       case Right(p) =>
-        try {
-          val hosts = CliSession.hosts(p)
-          val name = p.opt("host").get
-          val host = hosts.getOrElse(name, throw new IllegalArgumentException(
-            s"host '$name' not in hosts file (available: ${hosts.keys.toSeq.sorted.mkString(", ")})"))
+        CliSession.guard {
+          val host = CliSession.host(CliSession.hosts(p), p.opt("host").get)
           val resources = BundleScan.loadFilter(
             BundleScan.read(spark, p.positional.head),
             modules = p.all("module"), resourceTypes = p.all("resource"))
@@ -360,11 +362,6 @@ object LoadFhirMain {
             idCachePath = p.opt("id-cache").getOrElse(s"$outDir/idcache/$stem.parquet"),
             invalidRefsPath = s"$outDir/invalid-references.json",
             studyIdsPath = s"$outDir/study_ids.json", studyId = stem)
-        } catch {
-          case e: Hosts.HostsFileMissing => Console.err.println(e.getMessage); 1
-          case e: IllegalArgumentException => Console.err.println(e.getMessage); 1
-          case e: java.nio.file.NoSuchFileException =>
-            Console.err.println(s"file not found: ${e.getFile}"); 1
         }
     }
   }
@@ -417,11 +414,8 @@ object IgLoadMain {
       case Right(p) if p.opt("host").isEmpty || p.opt("content").isEmpty =>
         Console.err.println(s"usage: $usage"); 1
       case Right(p) =>
-        try {
-          val hosts = CliSession.hosts(p)
-          val name = p.opt("host").get
-          val host = hosts.getOrElse(name, throw new IllegalArgumentException(
-            s"host '$name' not in hosts file (available: ${hosts.keys.toSeq.sorted.mkString(", ")})"))
+        CliSession.guard {
+          val host = CliSession.host(CliSession.hosts(p), p.opt("host").get)
           println(s"Destination host: ${host.targetServiceUrl}")
           val mk = makeClient.getOrElse((h: graft.sink.Hosts.HostConfig) =>
             new graft.sink.HttpIgClient(h.targetServiceUrl, h.authHeaders))
@@ -449,11 +443,6 @@ object IgLoadMain {
               (if (failed > 0) s", FAILED $failed" else ""))
           }
           if (failures > 0) 1 else 0
-        } catch {
-          case e: Hosts.HostsFileMissing => Console.err.println(e.getMessage); 1
-          case e: IllegalArgumentException => Console.err.println(e.getMessage); 1
-          case e: java.nio.file.NoSuchFileException =>
-            Console.err.println(s"file not found: ${e.getFile}"); 1
         }
     }
   }
@@ -486,11 +475,9 @@ object DelFhirMain {
       case Right(p) if p.opt("env").isEmpty || p.opt("study-ids").isEmpty =>
         Console.err.println(s"usage: $usage"); 1
       case Right(p) =>
-        try {
-          val hosts = CliSession.hosts(p)
+        CliSession.guard {
           val name = p.opt("env").get
-          val host = hosts.getOrElse(name, throw new IllegalArgumentException(
-            s"host '$name' not in hosts file (available: ${hosts.keys.toSeq.sorted.mkString(", ")})"))
+          val host = CliSession.host(CliSession.hosts(p), name)
           val idsJson = new String(
             Files.readAllBytes(Paths.get(p.opt("study-ids").get)), StandardCharsets.UTF_8)
           // the file shape is {study: {host: {type: [ids]}}} — only this
@@ -521,11 +508,6 @@ object DelFhirMain {
                 s"errors: ${byStatus.getOrElse("error", 0L)}")
               if (byStatus.getOrElse("deferred", 0L) + byStatus.getOrElse("error", 0L) > 0) 1 else 0
           }
-        } catch {
-          case e: Hosts.HostsFileMissing => Console.err.println(e.getMessage); 1
-          case e: IllegalArgumentException => Console.err.println(e.getMessage); 1
-          case e: java.nio.file.NoSuchFileException =>
-            Console.err.println(s"file not found: ${e.getFile}"); 1
         }
     }
   }

@@ -46,11 +46,8 @@ object Play {
    *  written paths. */
   def buildConceptMaps(
       spark: SparkSession, config: StudyConfig, dataDir: String, outDir: String): Seq[String] = {
-    val resolve = CsvSource.resolveUnder(dataDir) _
     Files.createDirectories(Paths.get(outDir))
-    val harmonyFiles = config.dataset.values.flatMap(_.codeHarmonization).toSeq.distinct
-    harmonyFiles.map { h =>
-      val paths = CsvSource.fileList(h).map(resolve)
+    harmonyFileSets(config, dataDir).map { paths =>
       val namePrefix = paths.head.split("/").last.split("\\.").head
       val groups = Harmony.conceptMapGroups(Harmony.read(spark, paths), config.curies)
       val json = Harmony.conceptMapJson(groups, namePrefix)
@@ -88,11 +85,17 @@ object Play {
    *  project the same codings. */
   def harmonyLookup(spark: SparkSession, config: StudyConfig,
       dataDir: String): Option[DataFrame] = {
+    val fileSets = harmonyFileSets(config, dataDir)
+    if (fileSets.isEmpty) None
+    else Some(Harmony.codingsLookup(Harmony.read(spark, fileSets.flatten)))
+  }
+
+  /** Each distinct harmony file set the config references, resolved
+   *  under `dataDir`. */
+  private def harmonyFileSets(config: StudyConfig, dataDir: String): Seq[Seq[String]] = {
     val resolve = CsvSource.resolveUnder(dataDir) _
-    val harmonyFiles = config.dataset.values.flatMap(_.codeHarmonization).toSeq.distinct
-    if (harmonyFiles.isEmpty) None
-    else Some(Harmony.codingsLookup(
-      Harmony.read(spark, harmonyFiles.flatMap(CsvSource.fileList).map(resolve))))
+    config.dataset.values.flatMap(_.codeHarmonization).toSeq.distinct
+      .map(h => CsvSource.fileList(h).map(resolve))
   }
 
   /** The DD-metadata projections every study gets
@@ -102,15 +105,13 @@ object Play {
   def ddMetaResources(
       spark: SparkSession, config: StudyConfig, dd: DdStudy,
       dataDir: String): DataFrame = {
-    val resolve = CsvSource.resolveUnder(dataDir) _
     val study = Projection.StudyInfo(config.studyId, config.identifierPrefix, config.publisher)
     val terminology = ResourceBuilders.ddTerminology(spark, study, dd)
     val definitions = ResourceBuilders.ddDefinitions(spark, study, dd)
-    val harmonyFiles = config.dataset.values.flatMap(_.codeHarmonization).toSeq.distinct
     // ProcessDDHarmony shape (ref: wlib_dd_conceptmap.wstl:89-92):
     // sources VS + targets VS + the ConceptMap itself per harmony file
-    val cms = harmonyFiles.flatMap { h =>
-      val df = Harmony.read(spark, CsvSource.fileList(h).map(resolve))
+    val cms = harmonyFileSets(config, dataDir).flatMap { paths =>
+      val df = Harmony.read(spark, paths)
       Seq(
         ResourceBuilders.harmonyValueSet(
           Harmony.sourceCodeGroups(df, config.curies, config.consentGroup), study, "sources"),

@@ -3,7 +3,7 @@ package graft.cli
 import graft.Extractor
 import graft.harmony.Harmony
 import graft.inspect.{Consumers, DdProfiler}
-import graft.sink.{BundleSink, Hosts, WhistleOutputWriter}
+import graft.sink.{BundleSink, WhistleOutputWriter}
 import graft.sources.{BundleScan, ConfigReader, CsvSource, DdJson}
 import org.apache.spark.sql.functions.{col, explode}
 import org.apache.spark.sql.types.ArrayType
@@ -35,7 +35,7 @@ object BuildCmMain {
       case Left(err) => Console.err.println(s"$err\nusage: $usage"); 1
       case Right(p) if p.positional.isEmpty => Console.err.println(s"usage: $usage"); 1
       case Right(p) =>
-        try {
+        CliSession.guard {
           val curies = p.all("curie").map { s =>
             s.split("=", 2) match {
               case Array(k, v) => k -> v
@@ -53,10 +53,6 @@ object BuildCmMain {
             Files.write(Paths.get(out), json.getBytes(StandardCharsets.UTF_8))
           }
           0
-        } catch {
-          case e: IllegalArgumentException => Console.err.println(e.getMessage); 1
-          case e: java.nio.file.NoSuchFileException =>
-            Console.err.println(s"file not found: ${e.getFile}"); 1
         }
     }
   }
@@ -84,13 +80,12 @@ object BundleUpMain {
       case Left(err) => Console.err.println(s"$err\nusage: $usage"); 1
       case Right(p) if p.positional.isEmpty => Console.err.println(s"usage: $usage"); 1
       case Right(p) =>
-        try {
+        CliSession.guard(try {
           val hosts = CliSession.hosts(p)
           // default env = first of the SORTED names, exactly the
           // reference: `sorted(host_config.keys())[0]` (bundle.py:198-205)
           val name = p.opt("env").getOrElse(hosts.keys.toSeq.sorted.head)
-          val host = hosts.getOrElse(name, throw new IllegalArgumentException(
-            s"host '$name' not in hosts file (available: ${hosts.keys.toSeq.sorted.mkString(", ")})"))
+          val host = CliSession.host(hosts, name)
           val outDir = p.opt("output").getOrElse("output/whistle-output")
           Files.createDirectories(Paths.get(outDir))
           p.positional.foreach { file =>
@@ -112,13 +107,9 @@ object BundleUpMain {
           }
           0
         } catch {
-          case e: Hosts.HostsFileMissing => Console.err.println(e.getMessage); 1
-          case e: IllegalArgumentException => Console.err.println(e.getMessage); 1
-          case e: java.nio.file.NoSuchFileException =>
-            Console.err.println(s"file not found: ${e.getFile}"); 1
           case e: org.apache.spark.sql.AnalysisException =>
             Console.err.println(e.getMessage); 1
-        }
+        })
     }
   }
 }
@@ -411,7 +402,7 @@ object DdJsonToCsvMain {
       case Right(p) if p.opt("source").isEmpty || p.positional.nonEmpty =>
         Console.err.println(s"usage: $usage"); 1
       case Right(p) =>
-        try {
+        CliSession.guard {
           val study = DdJson.parseFile(p.opt("source").get,
             tablesPath = p.opt("tables").getOrElse("tables"),
             columnsPath = p.opt("columns").getOrElse("columns"))
@@ -423,10 +414,6 @@ object DdJsonToCsvMain {
             Files.write(out, csv.getBytes(StandardCharsets.UTF_8))
           }
           0
-        } catch {
-          case e: java.nio.file.NoSuchFileException =>
-            Console.err.println(s"file not found: ${e.getFile}"); 1
-          case e: IllegalArgumentException => Console.err.println(e.getMessage); 1
         }
     }
   }

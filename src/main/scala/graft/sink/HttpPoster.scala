@@ -36,59 +36,38 @@ class HttpPoster(
       if (validateOnly) s"$baseUrl/$resourceType/" + "$validate"
       else if (verb == "PUT" && existingId != null) s"$baseUrl/$resourceType/$existingId"
       else s"$baseUrl/$resourceType"
-    var attempt = 0
-    var lastStatus = -1
-    var lastErr: String = null
-    while (attempt < maxRetries) {
-      attempt += 1
-      val builder = HttpRequest.newBuilder(URI.create(url))
-        .header("Content-Type", "application/fhir+json")
-      headers.foreach { case (k, v) => builder.header(k, v) }
-      val effectiveVerb = if (validateOnly) "POST" else verb // $validate is always a POST
-      val req = builder
-        .method(effectiveVerb,
-          HttpRequest.BodyPublishers.ofString(resourceJson, StandardCharsets.UTF_8))
-        .build()
-      // connection resets / timeouts are the MOST transient failures —
-      // they get the same bounded retry as a 5xx, not an instant escape
-      val respOpt =
-        try Some(client.send(req, HttpResponse.BodyHandlers.ofString()))
-        catch { case e: java.io.IOException => lastErr = e.toString; None }
-      respOpt match {
-        case Some(resp) =>
-          lastStatus = resp.statusCode()
-          if (lastStatus < 300) {
-            val bodyId = IdField.findFirstMatchIn(resp.body()).map(_.group(1))
-            // a 2xx write MUST yield a known id: the body's, the PUT
-            // target's, or the Location header's. Recording a create
-            // (POST) with no id as ok would poison the ID cache with
-            // null fhir_ids and corrupt downstream references.
-            val locId: String = {
-              // e.g. Location: http://host/fhir/Patient/123/_history/1
-              val loc = resp.headers().firstValue("Location").orElse(null)
-              if (loc == null) null
-              else {
-                val segs = loc.split("/")
-                val i = segs.lastIndexOf(resourceType)
-                if (i >= 0 && i + 1 < segs.length) segs(i + 1) else null
-              }
-            }
-            val id = bodyId.getOrElse(if (existingId != null) existingId else locId)
-            if (id == null && !validateOnly)
-              throw new RuntimeException(
-                s"$verb $url returned $lastStatus but no resource id " +
-                  "(empty body and no Location header)")
-            return id
-          } else if (lastStatus == 429) {
-            // ref: load.py:398-406 — too many requests, long pause
-            if (attempt < maxRetries) Thread.sleep(backoff429Millis)
-          } else if (attempt < maxRetries) Thread.sleep(backoffErrMillis)
-        case None =>
-          if (attempt < maxRetries) Thread.sleep(backoffErrMillis)
+    val effectiveVerb = if (validateOnly) "POST" else verb // $validate is always a POST
+    val req = request(url).header("Content-Type", "application/fhir+json")
+      .method(effectiveVerb,
+        HttpRequest.BodyPublishers.ofString(resourceJson, StandardCharsets.UTF_8))
+      .build()
+    withRetries(s"$verb $url", req) { resp =>
+      val status = resp.statusCode()
+      if (status >= 300) None
+      else {
+        val bodyId = IdField.findFirstMatchIn(resp.body()).map(_.group(1))
+        // a 2xx write MUST yield a known id: the body's, the PUT
+        // target's, or the Location header's. Recording a create
+        // (POST) with no id as ok would poison the ID cache with
+        // null fhir_ids and corrupt downstream references.
+        val locId: String = {
+          // e.g. Location: http://host/fhir/Patient/123/_history/1
+          val loc = resp.headers().firstValue("Location").orElse(null)
+          if (loc == null) null
+          else {
+            val segs = loc.split("/")
+            val i = segs.lastIndexOf(resourceType)
+            if (i >= 0 && i + 1 < segs.length) segs(i + 1) else null
+          }
+        }
+        val id = bodyId.getOrElse(if (existingId != null) existingId else locId)
+        if (id == null && !validateOnly)
+          throw new RuntimeException(
+            s"$verb $url returned $status but no resource id " +
+              "(empty body and no Location header)")
+        Some(id)
       }
     }
-    throw new RuntimeException(s"$verb $url failed after $maxRetries attempts " +
-      s"(last: ${if (lastStatus >= 0) lastStatus else lastErr})")
   }
 
   /** The [[PurgeSink.Deleter]] contract: DELETE `Type/id`; true = gone
@@ -97,28 +76,47 @@ class HttpPoster(
    *  throw on anything else after retries. */
   def delete(resourceType: String, id: String): Boolean = {
     val url = s"$baseUrl/$resourceType/$id"
+    withRetries(s"DELETE $url", request(url).DELETE().build()) { resp =>
+      val status = resp.statusCode()
+      if (status < 300 || status == 404) Some(true)
+      else if (status == 409) Some(false)
+      else None
+    }
+  }
+
+  private def request(url: String): HttpRequest.Builder = {
+    val builder = HttpRequest.newBuilder(URI.create(url))
+    headers.foreach { case (k, v) => builder.header(k, v) }
+    builder
+  }
+
+  /** Sends `req` up to `maxRetries` times and returns the first answer
+   *  `accept` gives. A response it declines waits `backoff429Millis` on
+   *  429 (ref: load.py:398-406, too many requests) and `backoffErrMillis`
+   *  otherwise; connection resets and timeouts are the MOST transient
+   *  failures, so they get the same bounded retry as a 5xx. Throws once
+   *  the attempts run out, naming the last status (or the last error
+   *  when no response ever arrived). */
+  private def withRetries[A](what: String, req: HttpRequest)(
+      accept: HttpResponse[String] => Option[A]): A = {
     var attempt = 0
     var lastStatus = -1
     var lastErr: String = null
     while (attempt < maxRetries) {
       attempt += 1
-      val builder = HttpRequest.newBuilder(URI.create(url))
-      headers.foreach { case (k, v) => builder.header(k, v) }
-      val respOpt =
-        try Some(client.send(builder.DELETE().build(), HttpResponse.BodyHandlers.ofString()))
+      val resp =
+        try Some(client.send(req, HttpResponse.BodyHandlers.ofString()))
         catch { case e: java.io.IOException => lastErr = e.toString; None }
-      respOpt match {
-        case Some(resp) =>
-          lastStatus = resp.statusCode()
-          if (lastStatus < 300 || lastStatus == 404) return true
-          else if (lastStatus == 409) return false
-          else if (lastStatus == 429) { if (attempt < maxRetries) Thread.sleep(backoff429Millis) }
-          else if (attempt < maxRetries) Thread.sleep(backoffErrMillis)
+      resp.foreach(r => lastStatus = r.statusCode())
+      resp.flatMap(accept) match {
+        case Some(answer) => return answer
+        case None if attempt < maxRetries =>
+          Thread.sleep(if (resp.exists(_.statusCode() == 429)) backoff429Millis
+            else backoffErrMillis)
         case None =>
-          if (attempt < maxRetries) Thread.sleep(backoffErrMillis)
       }
     }
-    throw new RuntimeException(s"DELETE $url failed after $maxRetries attempts " +
+    throw new RuntimeException(s"$what failed after $maxRetries attempts " +
       s"(last: ${if (lastStatus >= 0) lastStatus else lastErr})")
   }
 }

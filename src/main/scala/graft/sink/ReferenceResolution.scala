@@ -163,17 +163,18 @@ object ReferenceResolution {
 
   /**
    * The bounded driver-side fixpoint (ref: play.py:477-488: ≤10 rounds).
-   * Each round resolves what it can, hands the resolved batch to `load`
-   * — which returns the newly assigned ids as cache rows (system, value,
-   * resource_type, fhir_id) — and retries the deferred remainder against
-   * the grown cache. Returns the resources still unresolved after
-   * `maxRounds` (the invalid-references output, ref: load.py:195-222).
+   * Each round resolves what it can, hands the resolved batch and the
+   * current cache to `load` — which returns the newly assigned ids as
+   * cache rows (system, value, resource_type, fhir_id) — and retries the
+   * deferred remainder against the grown cache. Returns the resources
+   * still unresolved after `maxRounds` (the invalid-references output,
+   * ref: load.py:195-222) and the final cache.
    */
   def resolveLoop(
       resources: DataFrame,
       initialCache: DataFrame,
-      load: DataFrame => DataFrame,
-      maxRounds: Int = 10): DataFrame = {
+      load: (DataFrame, DataFrame) => DataFrame,
+      maxRounds: Int = 10): (DataFrame, DataFrame) = {
     var pending = resources
     var cache = initialCache
     var round = 0
@@ -182,16 +183,16 @@ object ReferenceResolution {
       if (resolved.isEmpty) {
         // no progress: every remaining resource waits on an id that no
         // load can produce — stop early, report as invalid references
-        return deferred
+        return (deferred, cache)
       }
       // merge, not raw union: a warm-cache rerun re-loads resources whose
       // (system, value) keys are already cached, and duplicate keys crash
       // resolve()'s map_from_entries in the NEXT round
       // (mapKeyDedupPolicy=EXCEPTION); updates win
-      cache = IdCacheStore.merge(cache, load(resolved))
+      cache = IdCacheStore.merge(cache, load(resolved, cache))
       pending = deferred.drop("_missing")
       round += 1
     }
-    pending
+    (pending, cache)
   }
 }

@@ -10,7 +10,7 @@ class BenchArtifactSpec extends AnyFunSuite {
 
   private val timings = scala.collection.immutable.ListMap(
     "vq1_scan_filter" -> 0.5,
-    "pq18_streaming_sessionize" -> 2.0, // in PipelineQueries.StreamingQueryNames
+    "pq18_streaming_sessionize" -> 2.0, // a streaming row of SparkEntry.registry
     "vq14_dup_identifiers" -> 1.0)
   private val oracle = Map(
     "vq1_scan_filter" -> 0.1, "pq18_streaming_sessionize" -> 0.02,

@@ -90,11 +90,10 @@ class EndToEndSpec extends AnyFunSuite {
     // rest against the grown cache
     var loadedRounds = Vector.empty[Set[String]]
     val poster: FhirLoadSink.Poster = (verb, rt, existing, json) => s"srv-${rt.toLowerCase}"
-    val leftover = ReferenceResolution.resolveLoop(
+    val (leftover, _) = ReferenceResolution.resolveLoop(
       resources, IdCacheStore.load(spark, s"$outDir/nonexistent-cache"),
-      { resolved =>
-        val prepared = FhirLoadSink.getOrCreate(resolved,
-          IdCacheStore.load(spark, s"$outDir/nonexistent-cache"), "https://e2e")
+      { (resolved, cache) =>
+        val prepared = FhirLoadSink.getOrCreate(resolved, cache, "https://e2e")
         val results = FhirLoadSink.load(prepared, () => poster)
         loadedRounds :+= results.collect().map(_.getString(1)).toSet
         FhirLoadSink.asCacheRows(results)

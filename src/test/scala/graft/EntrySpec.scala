@@ -16,15 +16,26 @@ class EntrySpec extends AnyFunSuite {
     assert(out.count() > 0)
   }
 
-  test("every declared query has oracle SQL (or is explicitly exempt)") {
-    // the exemption mechanism stays for future rows-only queries;
-    // currently every query — pq16b included (quantile_disc is exact
-    // at fixture group sizes) — carries an oracle
-    val exempt = Set.empty[String]
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- exempt
-    assert(missing.isEmpty, s"queries without oracle: $missing")
-    assert(exempt.subsetOf(SparkEntry.queries.keySet),
-      "stale exemption: every exempt name must still be a declared query")
+  test("registry: names are unique, every row has non-empty oracle SQL, and the streaming rows are exactly today's 10") {
+    val rows = SparkEntry.registry
+    assert(rows.map(_.name).distinct.size == rows.size)
+    assert(SparkEntry.queries.size == rows.size && SparkEntry.oracleSql.size == rows.size)
+    val blank = rows.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"rows without oracle SQL: $blank")
+    assert(rows.filter(_.streaming).map(_.name).toSet == Set(
+      "pq17_streaming_dedup", "pq18_streaming_sessionize", "pq20_streaming_window",
+      "pq32_streaming_incremental", "pq56_streaming_join", "pq71_streaming_ingest",
+      "pq120_streaming_decontam", "pq122_streaming_footprint",
+      "pq130_streaming_semantic", "pq131_streaming_unimax"))
+  }
+
+  test("registry: two rows with the same name fail, naming the duplicate") {
+    val build: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (s, _) => s.range(1).toDF()
+    val e = intercept[IllegalArgumentException](Query.registry(
+      Seq(Query("vq_a", build, "SELECT 1"), Query("vq_b", build, "SELECT 1")),
+      Seq(Query("vq_a", build, "SELECT 2"))))
+    assert(e.getMessage.contains("vq_a") && !e.getMessage.contains("vq_b"))
   }
 
   test("pq53b executes repeatedly in one JVM — the persisted index overwrites, never leaks") {

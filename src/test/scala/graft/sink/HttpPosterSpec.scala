@@ -83,6 +83,40 @@ class HttpPosterSpec extends AnyFunSuite {
     }
   }
 
+  private def deleteAgainst(statuses: Int*)(check: (HttpPoster, AtomicInteger) => Unit): Unit = {
+    val calls = new AtomicInteger(0)
+    withServer { ex =>
+      val status = statuses(math.min(calls.getAndIncrement(), statuses.size - 1))
+      if (status == 204) { ex.sendResponseHeaders(204, -1); ex.close() }
+      else respond(ex, status, "x")
+    } { base =>
+      check(new HttpPoster(base, maxRetries = 3, backoff429Millis = 1, backoffErrMillis = 1), calls)
+    }
+  }
+
+  test("delete: 404 means already gone") {
+    deleteAgainst(404)((poster, calls) =>
+      assert(poster.delete("Patient", "p1") && calls.get() == 1))
+  }
+
+  test("delete: 409 defers after exactly one request") {
+    deleteAgainst(409)((poster, calls) =>
+      assert(!poster.delete("Patient", "p1") && calls.get() == 1))
+  }
+
+  test("delete: retries through a 429, then 204 means gone") {
+    deleteAgainst(429, 204)((poster, calls) =>
+      assert(poster.delete("Patient", "p1") && calls.get() == 2))
+  }
+
+  test("delete: a persistent 500 throws after maxRetries, naming the last status") {
+    deleteAgainst(500) { (poster, calls) =>
+      val e = intercept[RuntimeException](poster.delete("Patient", "p1"))
+      assert(calls.get() == 3)
+      assert(e.getMessage.contains("DELETE") && e.getMessage.contains("last: 500"))
+    }
+  }
+
   test("FileSource.fetch reads local paths, file:// URIs, and http URLs") {
     val p = java.nio.file.Files.createTempFile("graft-fs", ".json")
     java.nio.file.Files.write(p, """{"ok":true}""".getBytes(StandardCharsets.UTF_8))

@@ -111,7 +111,7 @@ class LoadSpec extends AnyFunSuite {
         """{"result":{"identifier":{"system":"https://s/condition","value":"C1"}}}""")))
     val empty = df(cacheDdl, Seq.empty)
     var loadedBatches = Vector.empty[Set[String]]
-    val leftover = ReferenceResolution.resolveLoop(r, empty, { resolved =>
+    val (leftover, _) = ReferenceResolution.resolveLoop(r, empty, { (resolved, _) =>
       val ids = resolved.collect().map(_.getString(2)).toSet
       loadedBatches :+= ids
       // loading assigns server ids; new cache rows keyed by study identifier
@@ -133,8 +133,8 @@ class LoadSpec extends AnyFunSuite {
       Row("m", "Condition", "C1",
         """{"subject":{"identifier":{"system":"https://s/patient","value":"NEVER"}}}""")))
     val empty = df(cacheDdl, Seq.empty)
-    val leftover = ReferenceResolution.resolveLoop(r, empty,
-      resolved => df(cacheDdl, Seq.empty), maxRounds = 10)
+    val (leftover, _) = ReferenceResolution.resolveLoop(r, empty,
+      (_, _) => df(cacheDdl, Seq.empty), maxRounds = 10)
     assert(leftover.collect().map(_.getString(2)).toSeq == Seq("C1"))
   }
 
