@@ -1,21 +1,36 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Records every Spark job started while attached: its job group (absent
   * for jobs launched outside one, such as streaming micro-batches), its
-  * description, stage count, and start and end in epoch ms. Callbacks run
-  * on the listener-bus thread, so a read sees only delivered events;
-  * [[settle]] waits for delivery to stop. Bench counts jobs per group;
-  * JobProfile lists the jobs of its timed window. */
+  * description, stage count, and start and end in epoch ms. A job with
+  * no description records its call site: for every job of a SQL
+  * execution, the DataFrame action's (AQE submits jobs from a pool
+  * thread, whose own call site names no user code); else the name of its
+  * result stage, the last one created, such as `count at Foo.scala:12`.
+  * Callbacks run on the listener-bus thread, so a read sees only
+  * delivered events; [[settle]] waits for delivery to stop. Bench counts
+  * jobs per group; JobProfile lists the jobs of its timed window. */
 final class JobLog extends SparkListener {
   private val starts = new java.util.concurrent.ConcurrentHashMap[Int, JobLog.Job]()
   private val ends = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+  private val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case x: SparkListenerSQLExecutionStart =>
+      executions.put(x.executionId.toString, x.description)
+      ()
+    case _ =>
+  }
 
   override def onJobStart(js: SparkListenerJobStart): Unit = {
     def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
     starts.put(js.jobId, JobLog.Job(js.jobId, prop("spark.jobGroup.id"),
-      prop("spark.job.description").orElse(prop("callSite.short")).getOrElse("?"),
+      prop("spark.job.description").orElse(prop("callSite.short"))
+        .orElse(prop("spark.sql.execution.id").flatMap(id => Option(executions.get(id))))
+        .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("?"),
       js.stageInfos.size, js.time, None))
   }
 

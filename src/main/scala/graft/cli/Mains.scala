@@ -265,9 +265,10 @@ object PlayMain {
           InvalidReferencesWriter.toJson(leftover, existing).getBytes(StandardCharsets.UTF_8))
         Console.err.println(s"   invalid references written to $invalidRefsPath")
       }
-      // saved only after the last read of `leftover`: the save swaps the
-      // id-cache directory, and the lazy resolution plan still lists the
-      // files it replaces
+      // saved after the last read of `leftover`. After any round the
+      // leftover is read from that round's checkpoint, not from the
+      // id-cache parquet this save swaps out; the save stays last so no
+      // lazy plan over the replaced files is read after the swap
       if (jdbcCache.isEmpty) IdCacheStore.save(cache, idCachePath)
       // HTTP-rejected loads: report the first 5 errors and fail the run
       // (load.py:427-452 prints <=5 issues then sys.exit(1)). Unresolved

@@ -26,9 +26,9 @@ import org.apache.spark.storage.StorageLevel
  * Execution shape: quantization/norms and the per-pair dot products run
  * in typed `mapPartitions` stages (plain `while` loops over the long
  * arrays). The declarative forms ([[quantize]]/[[dot]]/[[norm2]]) are
- * higher-order Column expressions, which Catalyst evaluates interpreted —
- * measured ~10x slower in the pair hot loop — so they are kept only as
- * the executable spec the typed twins are pinned against in tests.
+ * Column expressions; the pair hot loop does not use them (the fold form
+ * of `dot` evaluates interpreted, measured ~10x slower), and tests pin
+ * the typed twins against them.
  *
  * Two search shapes:
  *  - [[Similarity.cosineTopK]]: brute force. The query set is broadcast;
@@ -47,7 +47,9 @@ import org.apache.spark.storage.StorageLevel
 object Similarity {
 
   /** Quantize array<float> to exact integer milliunits: array<bigint>.
-   *  Declarative twin of the typed prep stage — spec/tests only. */
+   *  Declarative twin of the search paths' typed prep stage, and the
+   *  quantizer [[Pca]]'s moment passes (`momentStats`, `partialMoments`)
+   *  read their vectors through. */
   def quantize(vec: Column, scale: Int = 1000): Column =
     transform(vec, x => round(x.cast("double") * scale).cast("long"))
 

@@ -10,9 +10,12 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
  * `mapPartitions` with a pluggable poster — executors own their
  * connections (the shape a real `foreachPartition` HTTP sink needs; the
  * test suite injects a deterministic poster, since this container has no
- * FHIR server). At-least-once delivery + identifier-keyed upsert =
- * effectively-once, the same contract the reference's threaded loader
- * provides (SURVEY.md §7 risks).
+ * FHIR server). The rows to load are hash-partitioned on the resource
+ * key into `spark.default.parallelism` partitions, so every task slot
+ * posts and the server sees at most that many concurrent connections
+ * (the reference's thread pool, 10 by default). At-least-once delivery +
+ * identifier-keyed upsert = effectively-once, the same contract the
+ * reference's threaded loader provides (SURVEY.md §7 risks).
  */
 object FhirLoadSink {
 
@@ -55,11 +58,16 @@ object FhirLoadSink {
 
   /**
    * Execute the load per partition (ref: load.py:233-246 queue +
-   * thread pool -> here, Spark's own executor parallelism; per-partition
-   * poster construction is where a real HTTP client pool would live).
-   * Returns the load results — (module, resourceType, id, _sys, _val,
-   * fhir_id, ok, error) — which feed the study-ids writer, the module
-   * summary, and [[ReferenceResolution.resolveLoop]]'s cache growth.
+   * thread pool -> here, a hash repartition on (module, resourceType, id)
+   * into `spark.default.parallelism` partitions, one poster per partition:
+   * concurrent server connections = that parallelism). An explicit
+   * partition count is never coalesced by AQE, and a hash key keeps a
+   * retried task's rows the same, so a retry re-sends only its own rows.
+   * Per-partition poster construction is where a real HTTP client pool
+   * would live. Returns the load results — (module, resourceType, id,
+   * _sys, _val, fhir_id, ok, error) — which feed the study-ids writer,
+   * the module summary, and [[ReferenceResolution.resolveLoop]]'s cache
+   * growth.
    */
   def load(prepared: DataFrame, makePoster: () => Poster): DataFrame = {
     val outSchema = StructType(Seq(
@@ -70,20 +78,23 @@ object FhirLoadSink {
       StructField("ok", BooleanType),
       StructField("error", StringType, nullable = true)))
     val cols = Seq("module", "resourceType", "id", "_sys", "_val", "verb", "fhir_id", "resource")
-    prepared.select(cols.map(col): _*).mapPartitions { rows =>
-      val poster = makePoster() // per-partition client (connection pool site)
-      rows.map { r =>
-        val (module, rt, id) = (r.getString(0), r.getString(1), r.getString(2))
-        val (sys, v, verb) = (r.getString(3), r.getString(4), r.getString(5))
-        val existing = if (r.isNullAt(6)) null else r.getString(6)
-        try {
-          val fhirId = poster(verb, rt, existing, r.getString(7))
-          Row(module, rt, id, sys, v, fhirId, true, null)
-        } catch {
-          case e: Exception => Row(module, rt, id, sys, v, null, false, e.getMessage)
+    prepared.select(cols.map(col): _*)
+      .repartition(prepared.sparkSession.sparkContext.defaultParallelism,
+        col("module"), col("resourceType"), col("id"))
+      .mapPartitions { rows =>
+        val poster = makePoster() // per-partition client (connection pool site)
+        rows.map { r =>
+          val (module, rt, id) = (r.getString(0), r.getString(1), r.getString(2))
+          val (sys, v, verb) = (r.getString(3), r.getString(4), r.getString(5))
+          val existing = if (r.isNullAt(6)) null else r.getString(6)
+          try {
+            val fhirId = poster(verb, rt, existing, r.getString(7))
+            Row(module, rt, id, sys, v, fhirId, true, null)
+          } catch {
+            case e: Exception => Row(module, rt, id, sys, v, null, false, e.getMessage)
+          }
         }
-      }
-    }(Encoders.row(outSchema))
+      }(Encoders.row(outSchema))
       // eager checkpoint: results feed several downstream consumers
       // (cache growth, summaries, study-ids) and a lineage replay would
       // re-POST every resource — materialize once. Task retry remains

@@ -30,6 +30,9 @@ import scala.jdk.CollectionConverters._
  *     defers the resource;
  *  4. [[resolveLoop]] — the driver-side bounded fixpoint: newly loaded
  *     resources feed the cache, deferred resources retry, ≤ maxRounds.
+ *     Each round materializes its per-resource join once (one local
+ *     checkpoint); that round's resolved and deferred sets are narrow
+ *     reads of it, so no round re-runs an earlier round's plan.
  *
  * ID cache contract: DataFrame(system, value, resource_type, fhir_id) —
  * the (system, unique-id) -> (resourceType, server-id) map of
@@ -90,6 +93,8 @@ object ReferenceResolution {
    * (identifier objects replaced by `reference: "Type/id"`); `deferred`
    * is the original rows whose references were not all found, with a
    * `_missing` count (the InvalidReference set, ref: load.py:264-265).
+   * Eager: runs the extract walk and the joins once, into a local
+   * checkpoint that both returned frames read.
    */
   def resolve(resources: DataFrame, idCache: DataFrame): (DataFrame, DataFrame) = {
     val keyed = resources.withColumn("_rkey",
@@ -113,8 +118,13 @@ object ReferenceResolution {
           struct(concat_ws("\u0000", col("ref_system"), col("ref_value")), col("_target")))))
           .as("_resolved"))
 
+    // materialized once per round: `resolved.isEmpty`, the load's
+    // getOrCreate and the next round's `pending.isEmpty` all read these
+    // blocks instead of re-running the walk and both joins, and the next
+    // round's plan starts here
     val joined = keyed.join(perResource, Seq("_rkey"), "left")
       .withColumn("_missing", coalesce(col("_missing"), lit(0L)))
+      .localCheckpoint(true)
 
     val deferred = joined.filter(col("_missing") > 0)
       .select(col("module"), col("resourceType"), col("id"), col("resource"), col("_missing"))

@@ -24,4 +24,30 @@ class JobLogSpec extends AnyFunSuite {
     assert((grouped ++ outside).forall(j =>
       j.stages == 1 && j.end.exists(_ >= j.start)))
   }
+
+  test("a job with no group and no description records its call site") {
+    val sc = TestSpark.spark.sparkContext
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try {
+      sc.parallelize(1 to 10, 2).count()
+      log.settle()
+    } finally sc.removeSparkListener(log)
+    val mine = log.jobs.filter(_.desc.contains("JobLogSpec.scala"))
+    assert(mine.size == 1 && mine.head.group.isEmpty, log.jobs.mkString("\n"))
+    assert(mine.head.desc.startsWith("count at "), mine.head.desc)
+  }
+
+  test("every job of a DataFrame action, AQE map stages included, records the action's call site") {
+    val spark = TestSpark.spark
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      spark.range(0, 1000, 1, 4).groupBy((org.apache.spark.sql.functions.col("id") % 7).as("k"))
+        .count().collect()
+      log.settle()
+    } finally spark.sparkContext.removeSparkListener(log)
+    assert(log.jobs.size >= 2, log.jobs.mkString("\n"))
+    assert(log.jobs.forall(_.desc.startsWith("collect at JobLogSpec.scala:")), log.jobs.mkString("\n"))
+  }
 }

@@ -19,6 +19,12 @@ object PurgeTestState {
   }
 }
 
+/** Posts seen by the fan-out test's poster, as (task partition, id):
+ *  a JVM singleton for the same reason as [[PurgeTestState]]. */
+object FanOutTestState {
+  val posts = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+}
+
 /** Reference resolution + deferred fixpoint + load sink
  *  (ref: wstlr/load.py:53-83,152-175,264-286; play.py:477-488). */
 class LoadSpec extends AnyFunSuite {
@@ -101,8 +107,10 @@ class LoadSpec extends AnyFunSuite {
     assert(!results("BAD").getBoolean(6) && results("BAD").getString(7).contains("simulated 500"))
   }
 
-  test("resolveLoop converges over rounds as loads grow the cache") {
-    // chain: Patient (no refs) <- Condition (refs Patient) <- Report (refs Condition)
+  /** The 3-round chain: Patient (no refs) <- Condition (refs Patient)
+   *  <- Report (refs Condition). Returns the leftover and the ids each
+   *  round loaded. */
+  private def chainLoop() = {
     val r = resourcesDf(Seq(
       Row("patient", "Patient", "P1", """{"resourceType":"Patient"}"""),
       Row("cond", "Condition", "C1",
@@ -121,11 +129,43 @@ class LoadSpec extends AnyFunSuite {
           s"srv-$id")
       })
     }, maxRounds = 10)
+    (leftover, loadedBatches)
+  }
+
+  test("resolveLoop converges over rounds as loads grow the cache") {
+    val (leftover, loadedBatches) = chainLoop()
     assert(leftover.isEmpty, "all resources should resolve")
     assert(loadedBatches.length == 3)
     assert(loadedBatches(0) == Set("P1"))
     assert(loadedBatches(1) == Set("C1"))
     assert(loadedBatches(2) == Set("R1"))
+  }
+
+  test("resolveLoop's leftover plan starts at the last round's checkpoint, with no join") {
+    val (leftover, _) = chainLoop()
+    val joins = leftover.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }
+    assert(joins.isEmpty, leftover.queryExecution.optimizedPlan.treeString)
+  }
+
+  test("load posts from every task slot, each resource exactly once") {
+    val r = resourcesDf((1 to 64).map(i => Row("patient", "Patient", s"P$i",
+      s"""{"identifier":[{"system":"https://s/patient","value":"P$i","use":"official"}]}"""))
+    ).coalesce(1)
+    val prepared = FhirLoadSink.getOrCreate(r, df(cacheDdl, Seq.empty), "https://s")
+    FanOutTestState.posts.clear()
+    val results = FhirLoadSink.load(prepared, () => (verb, _, _, resource) => {
+      val id = "P\\d+".r.findFirstIn(resource).get
+      FanOutTestState.posts.add((org.apache.spark.TaskContext.getPartitionId(), id))
+      s"srv-$id-${verb.toLowerCase}"
+    }).collect().map(x => (x.getString(2), x.getString(5), x.getBoolean(6))).toSet
+    import scala.jdk.CollectionConverters._
+    val posts = FanOutTestState.posts.asScala.toSeq
+    // local[4]: defaultParallelism is 4, and the input sits in 1 partition
+    assert(posts.map(_._1).distinct.size == 4)
+    assert(posts.map(_._2).sorted == (1 to 64).map(i => s"P$i").sorted)
+    assert(results == (1 to 64).map(i => (s"P$i", s"srv-P$i-post", true)).toSet)
   }
 
   test("resolveLoop stops early and reports resources that can never resolve") {
