@@ -18,6 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *     -> `_display` derived columns from the harmony display map
  *     -> group_by nesting or embed join, per the table's TableType
  *
+ * The display map is collected once per harmony file set, not once per
+ * table: tables that share a `code_harmonization` share its map.
+ *
  * Plan-level pruning: inactive tables simply never build a sub-plan
  * (SURVEY.md §4). Embedded tables don't appear as top-level outputs —
  * they ride inside their target table's array column, `[]`-filled
@@ -28,18 +31,29 @@ object Extractor {
   /**
    * Build the extracted DataFrame per active table. `dataDir` prefixes
    * relative file names from the config (the reference resolves paths
-   * against the project root).
+   * against the project root). `harmony` holds already-read harmony
+   * frames keyed by their `code_harmonization` value; a file set without
+   * one is read here.
    */
   def extract(
       spark: SparkSession,
       config: StudyConfig,
       dd: Option[DdStudy] = None,
-      dataDir: String = ""): Map[String, DataFrame] = {
+      dataDir: String = "",
+      harmony: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] = {
 
     def resolvePaths(filenames: String): Seq[String] =
       CsvSource.fileList(filenames).map { f =>
         CsvSource.resolveUnder(dataDir)(f)
       }
+
+    // harmony display map per file set: local code -> display
+    // (extractor.py:274-282)
+    val displayMaps: Map[String, Map[String, String]] =
+      config.activeDatasets.values.filter(_.embed.isEmpty).flatMap(_.codeHarmonization)
+        .toSeq.distinct.map { h =>
+          h -> Harmony.displayMap(harmony.getOrElse(h, Harmony.read(spark, resolvePaths(h))))
+        }.toMap
 
     // embedded tables keyed by their target dataset (extractor.py:255-266)
     val embeds = config.activeDatasets.collect {
@@ -56,9 +70,7 @@ object Extractor {
         val raw = NormalizeColumns(
           CsvSource.read(spark, resolvePaths(t.filename), t.delimiter, withRowId = needOrder))
 
-        // harmony display map: local code -> display (extractor.py:274-282)
-        val displayMap = t.codeHarmonization
-          .map(h => Harmony.displayMap(Harmony.read(spark, resolvePaths(h))))
+        val displayMap = t.codeHarmonization.map(displayMaps)
           .getOrElse(Map.empty[String, String])
 
         // DD-driven desc->varname and "var:valuedesc"->code substitutions

@@ -163,12 +163,16 @@ object PlayMain {
   /** The projection fan-out `play` loads: DD metadata (terminology,
    *  definitions, harmony CM) + per-table source-data Observations and
    *  QuestionnaireResponses (ref: sourcedata/obscomp.py + questionnaire.py
-   *  — the buildsrcobs/buildsrcqr scripts `play` chains). */
+   *  — the buildsrcobs/buildsrcqr scripts `play` chains). The harmony
+   *  sets come from the result, or are read once here when it carries
+   *  none; the codings lookup is collected once for every builder. */
   def studyResources(spark: SparkSession, config: StudyConfig,
       result: Play.RunResult, dataDir: String): DataFrame = {
     val study = Projection.StudyInfo(config.studyId, config.identifierPrefix, config.publisher)
-    val lookup = Play.harmonyLookup(spark, config, dataDir)
-    val ddMeta = Play.ddMetaResources(spark, config, result.ddStudy, dataDir)
+    val harmony =
+      if (result.harmony.nonEmpty) result.harmony else Play.readHarmony(spark, config, dataDir)
+    val lookup = Play.harmonyLookup(spark, config, dataDir, harmony)
+    val ddMeta = Play.ddMetaResources(spark, config, result.ddStudy, dataDir, harmony)
     val sourceData = result.extracted.toSeq.flatMap { case (table, df) =>
       result.ddStudy.table(table).toSeq.flatMap { ddTable =>
         Seq(ResourceBuilders.observations(df, study, ddTable, lookup),

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.DriverPool
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -423,21 +424,20 @@ object IncrementalPipeline {
     // table; the matched ledger is created lazily by design (first hit).
     // The side-state updates below touch DISJOINT tables and read only
     // materialized checkpoints, so they run CONCURRENTLY on the
-    // dedicated [[stateEc]] pool (Spark schedules jobs from separate
+    // shared [[graft.DriverPool]] (Spark schedules jobs from separate
     // threads freely; each maintainer stays single-writer on ITS
     // table). All of them join before the keeper append — the commit
     // point stays last. The concurrency buys back the per-action
     // scheduling latency that dominates these model-sized updates
     // (~1.5 s/batch at sf0.1).
-    import scala.concurrent.Await
-    val auditF = stateUpdate(labeled(spark, "audit") {
+    val auditF = DriverPool.submit(spark)(labeled(spark, "audit") {
       if (audit && !emptySample) {
         Decontamination.auditBatch(sampled, idCol, "text",
           st.evalTable, st.matchedTable, st.matchedPath)
         ()
       }
     })
-    val mergeF = stateUpdate(labeled(spark, "sample merge") {
+    val mergeF = DriverPool.submit(spark)(labeled(spark, "sample merge") {
       if (sampleK > 0 &&
           (!emptySample || !spark.catalog.tableExists(st.sampleTable))) {
         graft.streaming.StreamingSample.mergeBatch(
@@ -455,7 +455,7 @@ object IncrementalPipeline {
     // and the swap entirely (the replay path then costs zero cursor
     // jobs), except on the very first batch, which must still CREATE
     // the stamped table for the drift guard.
-    val cursorF = stateUpdate(labeled(spark, "cursor advance") {
+    val cursorF = DriverPool.submit(spark)(labeled(spark, "cursor advance") {
       if (!emptyEmission || !cursorExists) {
         val batchSums = spans.groupBy("shard")
           .agg(sum(col("tok_end") - col("tok_start")).as("_adv"))
@@ -480,7 +480,7 @@ object IncrementalPipeline {
     // dup_of_history, fuzzy stage never sees the docs again). Joins
     // the same pre-commit barrier as the other three (disjoint table,
     // checkpointed inputs).
-    val fuzzyF = stateUpdate(labeled(spark, "fuzzy sketch append") {
+    val fuzzyF = DriverPool.submit(spark)(labeled(spark, "fuzzy sketch append") {
       fuzzyState.foreach { case (fk, existed) =>
         // the checkpointed accepted frame carries each doc's
         // (status, sig, bands), so both arms write sketches directly —
@@ -504,14 +504,8 @@ object IncrementalPipeline {
     // tables in the background while the caller already retries the
     // batch — two concurrent upserts on one cursor table is exactly
     // the corruption the single-writer contract exists to prevent.
-    // Each await is bounded purely defensively: stateUpdate completes
-    // its promise on EVERY Throwable (fatal included), so a wedged
-    // await would require a hang inside Spark itself.
-    val joined = Seq("audit" -> auditF, "sample" -> mergeF,
-      "cursor" -> cursorF, "fuzzy" -> fuzzyF).map { case (what, f) =>
-        what -> scala.util.Try(Await.result(f,
-          scala.concurrent.duration.Duration(1, "day")))
-      }
+    val whats = Seq("audit", "sample", "cursor", "fuzzy")
+    val joined = whats.zip(DriverPool.awaitAll(Seq(auditF, mergeF, cursorF, fuzzyF)))
     joined.collectFirst { case (what, scala.util.Failure(e)) =>
       throw new RuntimeException(
         s"processBatch: the $what state update failed (all state " +
@@ -537,27 +531,6 @@ object IncrementalPipeline {
     spans
   }
 
-  /** Dedicated pool for [[processBatch]]'s concurrent side-state
-    * updates: four daemon threads (the maximum in flight per call), so
-    * a caller saturating the global ExecutionContext with its own work
-    * cannot serialize the "concurrent" updates — and each update runs
-    * inside a Promise completed on EVERY Throwable (scala.concurrent's
-    * Future only catches NonFatal, so a fatal error — an executor OOM
-    * surfacing on the await — would otherwise never complete the
-    * promise and stall the join for its full bound). */
-  private lazy val stateEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(4,
-        new java.util.concurrent.ThreadFactory {
-          private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-          def newThread(r: Runnable): Thread = {
-            val t = new Thread(r,
-              s"graft-pipeline-state-${n.incrementAndGet()}")
-            t.setDaemon(true)
-            t
-          }
-        }))
-
   /** Thread-local job label around an action (guide §1.5) — restores
     * the previous description so the caller's labeling survives. */
   private def labeled[T](spark: org.apache.spark.sql.SparkSession,
@@ -566,14 +539,6 @@ object IncrementalPipeline {
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"pipeline: $what")
     try body finally sc.setJobDescription(prev)
-  }
-
-  private def stateUpdate(body: => Unit): scala.concurrent.Future[Unit] = {
-    val p = scala.concurrent.Promise[Unit]()
-    stateEc.execute(() => p.complete(
-      try { body; scala.util.Success(()) }
-      catch { case t: Throwable => scala.util.Failure(t) }))
-    p.future
   }
 
   private def cursorStamps(cfg: Pipeline.Config): Seq[(String, String)] = Seq(

@@ -34,20 +34,22 @@ object ResourceBuilders {
    *  joins (see [[observations]]). */
   private[graft] val MaxLiteralValueCodes = 1024
 
-  /** One driver-side collect of a harmony codings lookup
-   *  (`Harmony.codingsLookup` shape): system -> code -> RAW codings
-   *  (self rows included — callers filter). The lookup is mapping-
-   *  dimension-sized by contract. */
-  private def collectLookup(
-      lookup: DataFrame): Map[String, Map[String, Seq[(String, String, String)]]] =
-    lookup.select(col("system"), col("code"), col("codings"))
-      .collect()
-      .groupBy(_.getString(0))
-      .map { case (sys, rows) =>
-        sys -> rows.map(r => r.getString(1) ->
-          r.getSeq[Row](2).map(c => (c.getString(0), c.getString(1), c.getString(2))).toSeq)
-          .toMap
-      }
+  /** A harmony codings lookup (`Harmony.codingsLookup` shape) and its one
+   *  driver-side collect: system -> code -> RAW codings (self rows
+   *  included — callers filter). The collect runs on first use and serves
+   *  every builder handed this value; the lookup is mapping-dimension-
+   *  sized by contract. */
+  final case class CodingsLookup(frame: DataFrame) {
+    lazy val bySystem: Map[String, Map[String, Seq[(String, String, String)]]] =
+      frame.select(col("system"), col("code"), col("codings"))
+        .collect()
+        .groupBy(_.getString(0))
+        .map { case (sys, rows) =>
+          sys -> rows.map(r => r.getString(1) ->
+            r.getSeq[Row](2).map(c => (c.getString(0), c.getString(1), c.getString(2))).toSeq)
+            .toMap
+        }
+  }
 
   /** Driver-side twin of `nonSelfOnly` (same filter as
    *  wlib/core/_harmonize_mapped.wstl:7-10). */
@@ -202,7 +204,7 @@ object ResourceBuilders {
       data: DataFrame,
       study: StudyInfo,
       dd: DdTable,
-      harmonyLookup: Option[DataFrame] = None,
+      harmonyLookup: Option[CodingsLookup] = None,
       idCols: Seq[String] = Nil,
       maxLiteralValueCodes: Int = MaxLiteralValueCodes): DataFrame = {
     val tableName = dd.tableName
@@ -210,13 +212,14 @@ object ResourceBuilders {
       throw new IllegalArgumentException(s"table $tableName has no subject id"))
     val keyCols = if (idCols.nonEmpty) idCols else Seq(subjectCol)
 
-    // ONE driver-side collect of the harmony lookup (DD-sized metadata),
-    // grouped by system — per-system filtering happens on the collected
-    // map, never as another Spark job (a 100-enum table used to fire
-    // 100+ separate filter+collect actions at plan-build time).
+    // the lookup's ONE driver-side collect (DD-sized metadata, shared by
+    // every builder handed the same lookup), grouped by system —
+    // per-system filtering happens on the collected map, never as another
+    // Spark job (a 100-enum table used to fire 100+ separate
+    // filter+collect actions at plan-build time).
     // HarmonizeMapped semantics = NonSelfOnly
     // (ref: wlib/core/_harmonize_mapped.wstl:7-10).
-    val collected = harmonyLookup.map(collectLookup).getOrElse(Map.empty)
+    val collected = harmonyLookup.map(_.bySystem).getOrElse(Map.empty)
     def mapped(system: String): Map[String, Seq[(String, String, String)]] =
       collected.getOrElse(system, Map.empty)
         .map { case (c, cs) => c -> nonSelfSeq(cs) }
@@ -246,7 +249,7 @@ object ResourceBuilders {
     val joined = harmonyLookup match {
       case Some(lookup) if !useLiteralValueCodings =>
         enumVars.foldLeft(data) { (df, v) =>
-          harmonize(df, lookup, v.fieldName, v.varName, s"_h_${v.fieldName}")
+          harmonize(df, lookup.frame, v.fieldName, v.varName, s"_h_${v.fieldName}")
         }
       case _ => data
     }
@@ -532,7 +535,7 @@ object ResourceBuilders {
       data: DataFrame,
       study: StudyInfo,
       dd: DdTable,
-      harmonyLookup: Option[DataFrame] = None,
+      harmonyLookup: Option[CodingsLookup] = None,
       idCols: Seq[String] = Nil,
       maxLiteralValueCodes: Int = MaxLiteralValueCodes): DataFrame = {
     val subjectCol = dd.subjectId.getOrElse(
@@ -544,7 +547,7 @@ object ResourceBuilders {
     // same literal-CASE dispatch as [[observations]] — but with the RAW
     // codings (self included), because HarmonizeSelectByPrefix filters by
     // system prefix downstream, not NonSelfOnly
-    val collected = harmonyLookup.map(collectLookup).getOrElse(Map.empty)
+    val collected = harmonyLookup.map(_.bySystem).getOrElse(Map.empty)
     val rawValueCodings: Map[String, Map[String, Seq[(String, String, String)]]] =
       if (harmonyLookup.isEmpty) Map.empty
       else enumVars.map(v => v.fieldName -> collected.getOrElse(v.varName, Map.empty)).toMap
@@ -553,7 +556,7 @@ object ResourceBuilders {
     val joined = harmonyLookup match {
       case Some(lookup) if !useLiteralValueCodings =>
         enumVars.foldLeft(data) { (df, v) =>
-          harmonize(df, lookup, v.fieldName, v.varName, s"_qh_${v.fieldName}")
+          harmonize(df, lookup.frame, v.fieldName, v.varName, s"_qh_${v.fieldName}")
         }
       case _ => data
     }

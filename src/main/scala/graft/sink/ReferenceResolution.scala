@@ -97,7 +97,11 @@ object ReferenceResolution {
    * checkpoint that both returned frames read.
    */
   def resolve(resources: DataFrame, idCache: DataFrame): (DataFrame, DataFrame) = {
-    val keyed = resources.withColumn("_rkey",
+    // the join below reads its input on both sides: a lazy checkpoint
+    // lets the one materializing job compute the input once; its blocks
+    // are released as soon as that job is done
+    val input = resources.localCheckpoint(false)
+    val keyed = input.withColumn("_rkey",
       concat_ws("|", col("module"), col("resourceType"), col("id")))
 
     // distinct: a resource referencing the same (system, value) twice
@@ -105,7 +109,7 @@ object ReferenceResolution {
     // into map_from_entries, which THROWS under the default
     // spark.sql.mapKeyDedupPolicy=EXCEPTION; _missing likewise counts
     // distinct unresolved identifiers, not occurrences
-    val refs = extractRefs(resources).distinct()
+    val refs = extractRefs(input).distinct()
     val hits = refs.join(
         idCache.select(col("system").as("ref_system"), col("value").as("ref_value"),
           concat_ws("/", col("resource_type"), col("fhir_id")).as("_target")),
@@ -125,6 +129,7 @@ object ReferenceResolution {
     val joined = keyed.join(perResource, Seq("_rkey"), "left")
       .withColumn("_missing", coalesce(col("_missing"), lit(0L)))
       .localCheckpoint(true)
+    graft.CacheScope.checkpointRdd(input).foreach(_.unpersist(blocking = false))
 
     val deferred = joined.filter(col("_missing") > 0)
       .select(col("module"), col("resourceType"), col("id"), col("resource"), col("_missing"))
@@ -188,7 +193,11 @@ object ReferenceResolution {
     var pending = resources
     var cache = initialCache
     var round = 0
-    while (round < maxRounds && !pending.isEmpty) {
+    // round 1 makes no emptiness probe: it would run the caller's whole
+    // input lineage, which resolve's checkpoint then runs again. An empty
+    // input resolves nothing, so it stops early below with an empty
+    // leftover and the cache unchanged
+    while (round < maxRounds && (round == 0 || !pending.isEmpty)) {
       val (resolved, deferred) = resolve(pending, cache)
       if (resolved.isEmpty) {
         // no progress: every remaining resource waits on an id that no

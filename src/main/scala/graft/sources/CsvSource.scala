@@ -48,6 +48,9 @@ object CsvSource {
   def resolveUnder(dataDir: String)(f: String): String =
     if (dataDir.isEmpty || f.startsWith("/")) f else s"$dataDir/$f"
 
+  /** `_rid`'s file index sits above this bit: (file index << 44) | id. */
+  val FileIndexShift = 44
+
   def read(
       spark: SparkSession,
       paths: Seq[String],
@@ -72,7 +75,7 @@ object CsvSource {
         // (file index << 44) | monotonic id: preserves file-list order above
         // in-file order; 44 bits leave room for partitionId<<33 ids
         named.withColumn(Restructure.RowId,
-          lit(idx.toLong << 44) + monotonically_increasing_id())
+          lit(idx.toLong << FileIndexShift) + monotonically_increasing_id())
       else named
     }
     parts.reduce(_ unionByName (_, allowMissingColumns = true))

@@ -9,7 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
  * standard pattern for libraries shipping native Catalyst expressions
  * (Spark 4 wraps Column around a ColumnNode; `ExpressionUtils` in
  * `org.apache.spark.sql.classic` does the conversion but is
- * `private[sql]`). This is the only file outside the `graft` namespace.
+ * `private[sql]`). This package, with [[LocalProperties]], is the only
+ * code outside the `graft` namespace.
  */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -64,8 +64,8 @@ class EndToEndSpec extends AnyFunSuite {
       demo.withColumnRenamed("subject_id", "participant_id"), study, lookup,
       sexCol = "sex", raceCol = "sex", ethnicityCol = "sex") // no race/eth cols in fixture
       .drop()
-    val observations = ResourceBuilders.observations(demo, study, ddTable, Some(lookup))
-    val qrs = ResourceBuilders.questionnaireResponses(demo, study, ddTable, Some(lookup))
+    val observations = ResourceBuilders.observations(demo, study, ddTable, Some(ResourceBuilders.CodingsLookup(lookup)))
+    val qrs = ResourceBuilders.questionnaireResponses(demo, study, ddTable, Some(ResourceBuilders.CodingsLookup(lookup)))
     val ddmeta = Play.ddMetaResources(spark, config, run.ddStudy, dir.toString)
     val resources = Seq(patients, observations, qrs, ddmeta).reduce(_ unionByName _)
 

@@ -50,4 +50,23 @@ class JobLogSpec extends AnyFunSuite {
     assert(log.jobs.size >= 2, log.jobs.mkString("\n"))
     assert(log.jobs.forall(_.desc.startsWith("collect at JobLogSpec.scala:")), log.jobs.mkString("\n"))
   }
+
+  test("a job submitted through the driver pool records the submitter's job group") {
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try {
+      // every pool thread exists, created or last used under group A
+      sc.setJobGroup("pool-spec-A", "A")
+      try DriverPool.awaitAll((1 to DriverPool.Threads).map(_ => DriverPool.submit(spark)(())))
+      finally sc.clearJobGroup()
+      sc.setJobGroup("pool-spec-B", "B")
+      try DriverPool.awaitAll(Seq(DriverPool.submit(spark)(sc.parallelize(1 to 10, 2).count())))
+      finally sc.clearJobGroup()
+      log.settle()
+    } finally sc.removeSparkListener(log)
+    val mine = log.jobs.filter(_.group.exists(_.startsWith("pool-spec")))
+    assert(mine.map(j => (j.group, j.desc)) == Seq((Some("pool-spec-B"), "B")), log.jobs.mkString("\n"))
+  }
 }

@@ -115,6 +115,46 @@ class MainsSpec extends AnyFunSuite {
     }
   }
 
+  test("play -x reads each harmony file set once and collects the codings lookup once") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    val dir = fixture()
+    val harmonyScans = new AtomicInteger(0)
+    val lookupCollects = new AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        // header-inference reads go through the text source, not CSV
+        if (qe.analyzed.collectLeaves().exists {
+              case l: LogicalRelation => l.relation match {
+                case h: HadoopFsRelation => h.fileFormat.isInstanceOf[CSVFileFormat] &&
+                  h.location.rootPaths.exists(_.getName == "harmony.csv")
+                case _ => false
+              }
+              case _ => false
+            }) harmonyScans.incrementAndGet()
+        if (funcName == "collect" &&
+            qe.analyzed.output.map(_.name) == Seq("system", "code", "codings"))
+          lookupCollects.incrementAndGet()
+      }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val log = new graft.JobLog
+    spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(log)
+    try {
+      assert(PlayMain.run(Array("-x", "-o", dir.resolve("outx").toString,
+        dir.resolve("study.yaml").toString), spark) == 0)
+      log.settle()
+    } finally {
+      spark.sparkContext.removeSparkListener(log)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(Files.exists(dir.resolve("outx/bundles")))
+    assert(harmonyScans.get == 1)
+    assert(lookupCollects.get == 1)
+  }
+
   test("play without host stops after documents; unknown host is an error") {
     val dir = fixture()
     val out = dir.resolve("out2").toString

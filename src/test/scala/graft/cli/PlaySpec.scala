@@ -69,6 +69,45 @@ class PlaySpec extends AnyFunSuite {
     assert(forced.whistleInputPath.isDefined)
   }
 
+  test("Play.run: every extracted table and harmony set reads from a checkpoint") {
+    val (dir, configJson) = fixture()
+    val config = ConfigReader.fromJson(configJson)
+    val result = Play.run(spark, config, dir.toString,
+      Files.createTempDirectory("graft-play-ckpt").toString)
+    def fromCheckpoint(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    assert(result.extracted.nonEmpty && result.extracted.values.forall(fromCheckpoint))
+    assert(result.harmony.map(_.spec) == Seq("harmony.csv"))
+    assert(result.harmony.forall(h => fromCheckpoint(h.frame)))
+  }
+
+  test("Play.run: a harmony file missing a column fails with today's message, no task left") {
+    val (dir, configJson) = fixture()
+    write(dir, "harmony.csv", "local code,text\nM,Male\n")
+    val err = intercept[IllegalArgumentException](Play.run(spark,
+      ConfigReader.fromJson(configJson), dir.toString,
+      Files.createTempDirectory("graft-play-bad").toString))
+    assert(err.getMessage.contains("Harmony file missing required column(s)"), err.getMessage)
+    assert(graft.DriverPool.unfinishedTasks == 0)
+    // a failing DD parse comes first, as in stage order
+    val first = intercept[Exception](Play.run(spark,
+      ConfigReader.fromJson(configJson.replace("demographics_dd.csv", "absent_dd.csv")),
+      dir.toString, Files.createTempDirectory("graft-play-bad2").toString))
+    assert(first.getMessage.contains("absent_dd.csv"), first.getMessage)
+  }
+
+  test("Play.run: a failing DD parse is rethrown after the ConceptMap build it ran beside") {
+    val (dir, configJson) = fixture()
+    val config = ConfigReader.fromJson(configJson.replace("demographics_dd.csv", "absent_dd.csv"))
+    val outDir = Files.createTempDirectory("graft-play-dd").toString
+    val err = intercept[Exception](Play.run(spark, config, dir.toString, outDir))
+    assert(err.getMessage.contains("absent_dd.csv"), err.getMessage)
+    // the ConceptMap task finished before the run threw
+    assert(graft.DriverPool.unfinishedTasks == 0)
+    assert(Files.exists(java.nio.file.Paths.get(outDir, "harmony", "harmony.json")))
+  }
+
   test("Play.run from a reference-style YAML config (the reference's native format)") {
     val (dir, _) = fixture()
     val yaml =

@@ -67,7 +67,7 @@ class ResourceBuildersSpec extends AnyFunSuite {
   test("observations: one per row, components typed by DD type, harmonized categoricals") {
     val data = df("participant_id STRING, sex STRING, age STRING, weight STRING",
       Seq(Row("S1", "M", "12", "not-measured"), Row("S2", "F", "n/a", "70.5")))
-    val out = ResourceBuilders.observations(data, study, mkDd, Some(harmonyLookup))
+    val out = ResourceBuilders.observations(data, study, mkDd, Some(ResourceBuilders.CodingsLookup(harmonyLookup)))
       .orderBy("id").collect()
     assert(out.length == 2)
     assert(out.map(_.getString(0)).forall(_ == "source_data"))
@@ -115,12 +115,12 @@ class ResourceBuildersSpec extends AnyFunSuite {
       Row("S1" +: enumNames.map(_ => "A"): _*),
       Row("S2" +: enumNames.map(_ => "B"): _*)))
 
-    val literal = ResourceBuilders.observations(data, study, dd, Some(lookup))
+    val literal = ResourceBuilders.observations(data, study, dd, Some(ResourceBuilders.CodingsLookup(lookup)))
     // 10 enum variables used to mean 10 broadcast joins; now the plan has none
     assert(!literal.queryExecution.optimizedPlan.toString.toLowerCase.contains("join"))
 
     // wide-vocabulary fallback (threshold exceeded) takes the join path...
-    val joined = ResourceBuilders.observations(data, study, dd, Some(lookup),
+    val joined = ResourceBuilders.observations(data, study, dd, Some(ResourceBuilders.CodingsLookup(lookup)),
       maxLiteralValueCodes = 0)
     assert(joined.queryExecution.optimizedPlan.toString.toLowerCase.contains("join"))
     // ...and produces byte-identical resources
@@ -132,9 +132,9 @@ class ResourceBuildersSpec extends AnyFunSuite {
 
     // questionnaireResponses shares the dispatch: zero joins by default,
     // join fallback byte-identical
-    val qrLit = ResourceBuilders.questionnaireResponses(data, study, dd, Some(lookup))
+    val qrLit = ResourceBuilders.questionnaireResponses(data, study, dd, Some(ResourceBuilders.CodingsLookup(lookup)))
     assert(!qrLit.queryExecution.optimizedPlan.toString.toLowerCase.contains("join"))
-    val qrJn = ResourceBuilders.questionnaireResponses(data, study, dd, Some(lookup),
+    val qrJn = ResourceBuilders.questionnaireResponses(data, study, dd, Some(ResourceBuilders.CodingsLookup(lookup)),
       maxLiteralValueCodes = 0)
     assert(qrJn.queryExecution.optimizedPlan.toString.toLowerCase.contains("join"))
     assert(qrLit.orderBy("id").collect().map(_.getString(3))

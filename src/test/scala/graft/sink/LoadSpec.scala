@@ -28,7 +28,7 @@ object FanOutTestState {
 /** Reference resolution + deferred fixpoint + load sink
  *  (ref: wstlr/load.py:53-83,152-175,264-286; play.py:477-488). */
 class LoadSpec extends AnyFunSuite {
-  import TestSpark.df
+  import TestSpark.{df, spark}
 
   private val cacheDdl = "system STRING, value STRING, resource_type STRING, fhir_id STRING"
 
@@ -147,6 +147,29 @@ class LoadSpec extends AnyFunSuite {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
     }
     assert(joins.isEmpty, leftover.queryExecution.optimizedPlan.treeString)
+  }
+
+  test("resolveLoop runs its input once when everything resolves in round 1") {
+    val rows = (1 to 6).map(i => Row("patient", "Patient", s"P$i", """{"resourceType":"Patient"}"""))
+    val scanned = spark.sparkContext.longAccumulator("resolveLoop input rows")
+    val base = resourcesDf(rows)
+    val r = base.mapPartitions { it => it.map { row => scanned.add(1); row } }(
+      org.apache.spark.sql.Encoders.row(base.schema))
+    var loads = 0
+    val (leftover, _) = ReferenceResolution.resolveLoop(r, df(cacheDdl, Seq.empty),
+      (resolved, _) => { loads += 1; resolved.count(); df(cacheDdl, Seq.empty) })
+    assert(leftover.isEmpty && loads == 1)
+    // no round-1 emptiness probe ahead of resolve's checkpoint
+    assert(scanned.value == rows.size, s"input rows scanned ${scanned.value}")
+  }
+
+  test("resolveLoop on an empty input: empty leftover, the cache unchanged, no load") {
+    val cache = df(cacheDdl, Seq(Row("https://s/patient", "P1", "Patient", "42")))
+    var loads = 0
+    val (leftover, out) = ReferenceResolution.resolveLoop(resourcesDf(Seq.empty), cache,
+      (_, _) => { loads += 1; df(cacheDdl, Seq.empty) })
+    assert(leftover.isEmpty && loads == 0)
+    assert(out eq cache)
   }
 
   test("load posts from every task slot, each resource exactly once") {
