@@ -8,10 +8,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Verified pairs inside one LSH bucket — the one kernel behind every
- * bucketed near-dup path: in-batch MinHash bands
- * ([[IncrementalMinHash.classifyBanded]]), SimHash pigeonhole chunks
- * ([[SimHashNearDup]]) and embedding sign buckets
- * ([[Similarity.nearDupPairs]]).
+ * bucketed near-dup path: batch MinHash bands ([[MinHashNearDup]]),
+ * in-batch MinHash bands ([[IncrementalMinHash.classifyBanded]]),
+ * SimHash pigeonhole chunks ([[SimHashNearDup]]) and embedding sign
+ * buckets ([[Similarity.nearDupPairs]]).
  *
  * Execution: ONE exchange hash-partitions the rows on the bucket key and
  * Spark sorts each partition on (bucket key, id), so a bucket arrives as

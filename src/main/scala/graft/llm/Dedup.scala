@@ -4,7 +4,7 @@ import graft.Presented
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -18,14 +18,14 @@ import org.apache.spark.storage.StorageLevel
  *  2. [[NgramJaccard]] — exact n-gram Jaccard via an inverted-index join
  *     over rare shingles. Deterministic recall for pairs sharing any
  *     rare shingle; expansion bounded by the document-frequency cut.
- *  3. [[MinHashNearDup]] — shingle -> minhash -> band -> bucket-join.
- *     The self-join is keyed on band hashes, so candidate generation is a
- *     shuffle on the band key with per-bucket pair expansion — never an
- *     all-pairs cross join. Exact Jaccard verification runs only on the
- *     candidate pairs.
+ *  3. [[MinHashNearDup]] — shingle -> minhash -> band -> bucket.
+ *     Candidate generation is one shuffle on the band key with
+ *     per-bucket pair expansion ([[BucketPairs]]) — never an all-pairs
+ *     cross join. Exact Jaccard verification runs only on the candidate
+ *     pairs, inside the bucket.
  *  4. SimHash signatures ([[SimHashSignatures]]) — a per-row projection;
  *     near-dup detection by Hamming distance over the 64-bit signature is a
- *     band-join over signature chunks (same pattern as 2).
+ *     band-join over signature chunks (same pattern as 3).
  */
 object ExactDedup {
 
@@ -219,20 +219,23 @@ object MinHashNearDup {
    * Near-duplicate pairs via banded MinHash LSH, verified with exact
    * Jaccard over the shingle sets.
    *
-   * @param shingleN     word n-gram size (docs with fewer tokens are skipped)
+   * @param shingleN     word n-gram size, >= 1 (docs with fewer tokens
+   *                     are skipped)
    * @param numHashes    minhash signature length (= bands * rowsPerBand)
    * @param bands        LSH bands; collision prob = 1-(1-j^r)^b
    * @param threshold    exact-Jaccard cutoff applied to candidates
    * @return (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard rounded
    *         to 3 digits, totally ordered.
    *
-   * Scale shape: shingling + signatures are per-row projections; candidate
-   * generation shuffles (band_key, id) — a few dozen bytes per doc per
-   * band; the only join is bucket-equality on band_key. Jaccard
-   * verification joins shingle sets back for candidate pairs only. Skewed
-   * buckets (a band key shared by thousands of docs) expand quadratically —
-   * callers dealing with adversarial corpora should salt or cap bucket
-   * sizes; AQE's skew-join handles moderate skew.
+   * Execution: one typed pass sketches each row ([[MinHashSketch]]) and
+   * emits one (id, shingle set, band index, band key) row per band; ONE
+   * exchange brings band-mates together and [[BucketPairs]] verifies
+   * every pair inside a bucket by exact Jaccard, so the threshold
+   * applies before the cross-band distinct (a pair matching in several
+   * bands is emitted once per band). Nothing is cached and nothing is
+   * joined back: a bucket holds O(k) shingle sets on the heap, and a hot
+   * bucket's output is its k(k-1)/2 pairs only when every one of them is
+   * a true near-duplicate.
    */
   def apply(
       df: DataFrame,
@@ -242,68 +245,37 @@ object MinHashNearDup {
       numHashes: Int = 9,
       bands: Int = 3,
       threshold: Double = 0.8,
-      ordered: Boolean = true,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
-    require(numHashes % bands == 0, s"numHashes ($numHashes) must divide into bands ($bands)")
-    val rowsPerBand = numHashes / bands
-
-    // One typed pass computes tokenize -> shingle -> minhash -> band keys
-    // (a 64-wide md5 workload per row evaluates interpreted as
-    // higher-order Column expressions — the JVM twins in TextOps keep the
-    // exact md5/lexicographic semantics). The result feeds FOUR plan
-    // branches (both sides of the candidate self-join via the band
-    // explode, plus the sa/sb Jaccard re-joins), so it is persisted —
-    // exchange reuse covers at most the self-join, never the re-reads;
-    // without the cache the shingle/signature work runs 3-4x. Storage is
-    // (id, shingle-set, band keys) only — tiny relative to the corpus.
-    // Released via `scope`.
-    val shSchema = StructType(Seq(
-      df.schema(df.schema.fieldIndex(idCol)).copy(name = "_id"),
-      StructField("_shingles", ArrayType(StringType, containsNull = true), nullable = true),
-      StructField("_bands", ArrayType(StringType, containsNull = true), nullable = true)))
-    val sh = df
+      ordered: Boolean = true): DataFrame = {
+    val sketch = MinHashSketch(shingleN, numHashes, bands)
+    val idField = df.schema(df.schema.fieldIndex(idCol))
+    val bandSchema = StructType(Seq(
+      idField.copy(name = "_id"),
+      StructField("_shingles", ArrayType(StringType, containsNull = false), nullable = false),
+      StructField("_b", IntegerType, nullable = false),
+      StructField("_band_key", StringType, nullable = false)))
+    val banded = df
       .select(col(idCol), col(textCol).cast("string"))
       .mapPartitions { rows =>
         val md = java.security.MessageDigest.getInstance("MD5")
         rows.flatMap { r =>
-          if (r.isNullAt(1)) Iterator.empty
-          else {
-            val toks = TextOps.tokensJvm(r.getString(1))
-            if (toks.length < shingleN) Iterator.empty
-            else {
-              val shingles = TextOps.shinglesJvm(toks, shingleN)
-              val sig = TextOps.minhashSignatureJvm(md, shingles, numHashes)
-              val bandKeys = TextOps.bandKeysJvm(md, sig, bands, rowsPerBand)
-              Iterator.single(Row(r.get(0), shingles, bandKeys))
-            }
-          }
+          val s = sketch(md, r.getString(1))
+          if (s == null) Iterator.empty
+          else s._3.iterator.zipWithIndex.map { case (key, b) => Row(r.get(0), s._1, b, key) }
         }
-      }(Encoders.row(shSchema))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    scope.track(sh)
+      }(Encoders.row(bandSchema))
 
-    val banded = sh.select(col("_id"),
-      posexplode(col("_bands")).as(Seq("_b", "_band_key")))
-
-    // bucket-join: same band index + same band key, ordered pair, distinct
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a._band_key") === col("b._band_key") &&
-          col("a._b") === col("b._b") &&
-          col("a._id") < col("b._id"))
-      .select(col("a._id").as("doc_a"), col("b._id").as("doc_b"))
+    val outSchema = StructType(Seq(
+      idField.copy(name = "doc_a"), idField.copy(name = "doc_b"),
+      StructField("_jac", DoubleType, nullable = false)))
+    // shingle sets are distinct (shinglesJvm), so |A ∩ B| is the count of
+    // A's shingles in B — size(array_intersect(A, B))
+    BucketPairs(banded, Seq("_b", "_band_key"), "_id", outSchema,
+        earliestOnly = false)(r => (r.get(0), r.getSeq[String](1).toSet)) { (a, b) =>
+      val inter = a._2.count(b._2.contains)
+      val jac = inter.toDouble / (a._2.size + b._2.size - inter)
+      if (jac >= threshold) Row(a._1, b._1, jac) else null
+    }
       .distinct()
-
-    // exact-Jaccard verification on candidates only
-    val sa = sh.select(col("_id").as("doc_a"), col("_shingles").as("_sha"))
-    val sb = sh.select(col("_id").as("doc_b"), col("_shingles").as("_shb"))
-    val inter = size(array_intersect(col("_sha"), col("_shb")))
-    val union = size(col("_sha")) + size(col("_shb")) - inter
-    cand
-      .join(sa, Seq("doc_a"))
-      .join(sb, Seq("doc_b"))
-      .withColumn("_jac", inter.cast("double") / union)
-      .filter(col("_jac") >= threshold)
       .select(col("doc_a"), col("doc_b"), round(col("_jac"), 3).as("jaccard"))
       .transform(Presented(_, ordered, "doc_a", "doc_b"))
   }

@@ -157,54 +157,55 @@ object IncrementalDedup {
  * (min matching smaller batch id), else `new`; `dup_of` = -1 for new
  * rows. Batch docs too short to shingle are `new` by construction.
  *
- * Scale shape: one typed signature pass over the BATCH only; band
- * explode joins are bucket-equality on (band index, band key) — the
- * index side shuffles its band rows, not history text; estimate
- * verification joins signatures for candidate pairs only. One persist
- * of the batch sketch feeds the four plan branches (same discipline as
- * MinHashNearDup's shingle cache).
+ * Scale shape: one typed sketch pass over the BATCH only
+ * ([[MinHashSketch]], the per-row sketch [[MinHashNearDup]] computes
+ * too); band explode joins are bucket-equality on (band index, band
+ * key) — the index side shuffles its band rows, not history text;
+ * estimate verification reads the signatures carried on the band rows.
+ * One persist of the batch sketch feeds the plan's branches (the history
+ * join, the in-batch [[BucketPairs]] pass and the id spine).
  */
 object IncrementalMinHash {
 
-  /** Typed sketch pass: (_id, _sig, _bands) for rows with >= shingleN
-    * tokens; ids cast to long. */
+  /** Typed sketch pass: (_id, _sig, _bands) for rows with a non-null
+    * id and >= shingleN tokens; ids cast to long. */
   private def sketch(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("_id",
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField("_sig",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StringType, containsNull = true), nullable = true),
-      org.apache.spark.sql.types.StructField("_bands",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StringType, containsNull = true), nullable = true)))
+      mh: MinHashSketch): DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("_id", LongType, nullable = true),
+      StructField("_sig", ArrayType(StringType, containsNull = true), nullable = true),
+      StructField("_bands", ArrayType(StringType, containsNull = true), nullable = true)))
     df.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .mapPartitions { rows =>
         val md = java.security.MessageDigest.getInstance("MD5")
         rows.flatMap { r =>
-          if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-          else {
-            val toks = TextOps.tokensJvm(r.getString(1))
-            if (toks.length < shingleN) Iterator.empty
-            else {
-              val shingles = TextOps.shinglesJvm(toks, shingleN)
-              val sig = TextOps.minhashSignatureJvm(md, shingles, numHashes)
-              org.apache.spark.sql.Row(r.getLong(0), sig,
-                TextOps.bandKeysJvm(md, sig, bands, rowsPerBand)) :: Nil
-            }
-          }
+          val s = if (r.isNullAt(0)) null else mh(md, r.getString(1))
+          if (s == null) Iterator.empty
+          else Iterator.single(org.apache.spark.sql.Row(r.getLong(0), s._2, s._3))
         }
       }(org.apache.spark.sql.Encoders.row(schema))
   }
 
   /** The persisted index: (keep_id, sig, bands) per accepted doc. */
   def buildIndex(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 9, bands: Int = 3): DataFrame = {
-    require(numHashes % bands == 0, s"numHashes ($numHashes) must divide into bands ($bands)")
-    sketch(df, idCol, textCol, shingleN, numHashes, bands)
+      shingleN: Int = 3, numHashes: Int = 9, bands: Int = 3): DataFrame =
+    sketch(df, idCol, textCol, MinHashSketch(shingleN, numHashes, bands))
       .select(col("_id").as("keep_id"), col("_sig").as("sig"), col("_bands").as("bands"))
+
+  /** [[buildIndex]] over the batch rows `classified` marks `new` — the
+    * sketches the next run's index gains (recomputed on that small
+    * subset; the batch sketch cache is released by then). */
+  private[llm] def acceptedIndex(batch: DataFrame, classified: DataFrame,
+      idCol: String, textCol: String, shingleN: Int, numHashes: Int,
+      bands: Int): DataFrame = {
+    // fresh alias for the id: `classified.doc_id` would collide with a
+    // batch whose idCol is already named doc_id
+    val accepted = batch.join(
+      classified.filter(col("status") === "new")
+        .select(col("doc_id").as("_accepted_id")),
+      batch(idCol).cast("long") === col("_accepted_id")).drop("_accepted_id")
+    buildIndex(accepted, idCol, textCol, shingleN, numHashes, bands)
   }
 
   /** Count of equal signature components — the MinHash Jaccard
@@ -244,9 +245,8 @@ object IncrementalMinHash {
    * chain hops cost extra joins the raw classification doesn't).
    *
    * The batch sketch is cached for the duration of the (lazy) returned
-   * plan — it feeds four plan branches. Same contract as
-   * [[MinHashNearDup]]'s shingle cache: release between batches via the
-   * `scope` handle (or [[graft.CacheScope.releaseSession]]).
+   * plan — it feeds several plan branches. Release it between batches
+   * via the `scope` handle (or [[graft.CacheScope.releaseSession]]).
    *
    * @param minMatch minimum equal signature components out of
    *                 `numHashes` (estimated Jaccard >= minMatch/numHashes)
@@ -254,13 +254,11 @@ object IncrementalMinHash {
   def classify(batch: DataFrame, index: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3, numHashes: Int = 9,
       bands: Int = 3, minMatch: Int = 5,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
-    require(numHashes % bands == 0, s"numHashes ($numHashes) must divide into bands ($bands)")
+      scope: graft.CacheScope = graft.CacheScope.session): DataFrame =
     classifyBanded(batch,
       bandedIndex(index.select(col("keep_id"),
         widthChecked(col("bands"), bands, "bands").as("bands"), col("sig"))),
       idCol, textCol, shingleN, numHashes, bands, minMatch, scope)
-  }
 
   /** An empty band-exploded index — [[classifyBanded]] against it is
     * pure in-batch near-dup semantics (the one-shot builder's stage
@@ -345,8 +343,7 @@ object IncrementalMinHash {
     * the classification spine and the text source, deleting the
     * kept-rejoin the caller used to pay. */
   private def sketchTotal(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
+      mh: MinHashSketch): DataFrame = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       df.schema(df.schema.fieldIndex(idCol)).copy(name = "_oid"),
@@ -372,20 +369,10 @@ object IncrementalMinHash {
           val oid = r.get(0)
           val lid: java.lang.Long =
             if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))
-          val text = if (r.isNullAt(2)) null else r.getString(2)
-          if (lid == null || text == null)
-            org.apache.spark.sql.Row(oid, lid, text, null, null)
-          else {
-            val toks = TextOps.tokensJvm(text)
-            if (toks.length < shingleN)
-              org.apache.spark.sql.Row(oid, lid, text, null, null)
-            else {
-              val shingles = TextOps.shinglesJvm(toks, shingleN)
-              val sig = TextOps.minhashSignatureJvm(md, shingles, numHashes)
-              org.apache.spark.sql.Row(oid, lid, text, sig,
-                TextOps.bandKeysJvm(md, sig, bands, rowsPerBand))
-            }
-          }
+          val text = r.getString(2)
+          val s = if (lid == null) null else mh(md, text)
+          if (s == null) org.apache.spark.sql.Row(oid, lid, text, null, null)
+          else org.apache.spark.sql.Row(oid, lid, text, s._2, s._3)
         }
       }(org.apache.spark.sql.Encoders.row(schema))
   }
@@ -394,16 +381,15 @@ object IncrementalMinHash {
       idCol: String, textCol: String, shingleN: Int, numHashes: Int,
       bands: Int, minMatch: Int,
       scope: graft.CacheScope, withSketch: Boolean): DataFrame = {
-    require(numHashes % bands == 0, s"numHashes ($numHashes) must divide into bands ($bands)")
+    val mh = MinHashSketch(shingleN, numHashes, bands)
     // public path: the batch sketch (rows that CAN sketch only) plus a
     // distinct id spine for the one-row-per-id contract. Sketched
     // (pipeline) path: ONE total pass carries (id, text, sketch) per
     // input row — the frame is its own spine, so neither the distinct
     // nor the sketch re-join nor the caller's kept re-join exist.
     val bs = scope.track(
-      (if (withSketch)
-        sketchTotal(batch, idCol, textCol, shingleN, numHashes, bands)
-      else sketch(batch, idCol, textCol, shingleN, numHashes, bands))
+      (if (withSketch) sketchTotal(batch, idCol, textCol, mh)
+      else sketch(batch, idCol, textCol, mh))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // the batch band rows carry the signature INLINE (duplicated bands×
     // — the same sketch-sized trade the persisted index makes), so
@@ -581,17 +567,10 @@ object IncrementalMinHash {
   }
 
   /** The next run's index: history plus the sketches of the batch's
-    * accepted `new` rows (recomputed on that small subset — the full
-    * batch sketch cache is released by then). */
+    * accepted `new` rows ([[acceptedIndex]]). */
   def mergeIndex(index: DataFrame, batch: DataFrame, classified: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3, numHashes: Int = 9,
-      bands: Int = 3): DataFrame = {
-    // fresh alias for the id: `classified.doc_id` would collide with a
-    // batch whose idCol is already named doc_id
-    val accepted = batch.join(
-      classified.filter(col("status") === "new")
-        .select(col("doc_id").as("_accepted_id")),
-      batch(idCol).cast("long") === col("_accepted_id")).drop("_accepted_id")
-    index.unionByName(buildIndex(accepted, idCol, textCol, shingleN, numHashes, bands))
-  }
+      bands: Int = 3): DataFrame =
+    index.unionByName(acceptedIndex(batch, classified, idCol, textCol,
+      shingleN, numHashes, bands))
 }

@@ -179,8 +179,9 @@ object IndexStore {
   }
 
   /** O(batch) index maintenance for the sketch index: append the banded
-    * sketch rows of the batch's accepted `new` docs (recomputed on that
-    * small subset, exactly [[IncrementalMinHash.mergeIndex]]'s shape). */
+    * sketch rows of the batch's accepted `new` docs
+    * ([[IncrementalMinHash.acceptedIndex]], what
+    * [[IncrementalMinHash.mergeIndex]] unions in). */
   def appendMinhashAccepted(batch: DataFrame, classified: DataFrame,
       idCol: String, textCol: String, tableName: String,
       shingleN: Int = 3, numHashes: Int = 9, bands: Int = 3): Unit = {
@@ -190,13 +191,9 @@ object IndexStore {
       s"$tableName is not a minhash index table (bucket keys $keys)")
     // fail fast on parameter drift before any job runs
     minhashIndex(spark, tableName, shingleN, numHashes, bands)
-    val accepted = batch.join(
-      classified.filter(col("status") === "new")
-        .select(col("doc_id").as("_accepted_id")),
-      batch(idCol).cast("long") === col("_accepted_id")).drop("_accepted_id")
     writeBucketed(
-      IncrementalMinHash.bandedIndex(IncrementalMinHash.buildIndex(
-        accepted, idCol, textCol, shingleN, numHashes, bands)),
+      IncrementalMinHash.bandedIndex(IncrementalMinHash.acceptedIndex(
+        batch, classified, idCol, textCol, shingleN, numHashes, bands)),
       tableName, tablePath(spark, tableName), buckets, keys, "append")
   }
 

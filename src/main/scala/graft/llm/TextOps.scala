@@ -310,3 +310,35 @@ object TextOps {
   def bottomKSketch(shingleCol: Column, k: Int): Column =
     concat_ws(",", slice(sort_array(transform(shingleCol, s => md5Hex(s))), 1, k))
 }
+
+/**
+ * MinHash sketch parameters, checked when the plan is built, and the one
+ * per-row sketch every MinHash pass computes: tokenize -> distinct word
+ * n-gram shingles -> `numHashes` minhash components -> `bands` LSH band
+ * keys. Built on the driver and shipped inside each pass's
+ * `mapPartitions` closure; the passes differ only in how they key and
+ * keep the rows.
+ */
+private[llm] final case class MinHashSketch(shingleN: Int, numHashes: Int, bands: Int) {
+  // shingleN < 1 would give every text the one shingle "" — every doc a
+  // duplicate of every other
+  require(shingleN >= 1, s"shingle size must be >= 1, got $shingleN")
+  require(bands >= 1 && numHashes % bands == 0,
+    s"numHashes ($numHashes) must divide into bands ($bands)")
+
+  /** (shingles, signature, band keys) of `text`, or null when the text
+    * is null or has fewer than `shingleN` tokens. `md` is the caller's
+    * per-partition digest. */
+  def apply(md: java.security.MessageDigest,
+      text: String): (Array[String], Array[String], Array[String]) =
+    if (text == null) null
+    else {
+      val toks = TextOps.tokensJvm(text)
+      if (toks.length < shingleN) null
+      else {
+        val shingles = TextOps.shinglesJvm(toks, shingleN)
+        val sig = TextOps.minhashSignatureJvm(md, shingles, numHashes)
+        (shingles, sig, TextOps.bandKeysJvm(md, sig, bands, numHashes / bands))
+      }
+    }
+}

@@ -1,8 +1,9 @@
 package graft.llm
 
 import graft.TestSpark
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicLong
@@ -72,5 +73,60 @@ class BucketPairsSpec extends AnyFunSuite {
       .groupBy("status", "dup_of").count()
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == Map(("new", -1L) -> 1L, ("dup_in_batch", 1000L) -> (k - 1).toLong))
+  }
+
+  /** The batch-LSH reference: an all-pairs Column self-join on SQL's
+    * `a.id < b.id` with exact 3-gram Jaccard. It equals
+    * [[MinHashNearDup]]'s output on fixtures whose docs are either
+    * identical (every band matches) or share no shingle. */
+  private def referencePairs(docs: DataFrame): Set[(Any, Any, Double)] = {
+    val sh = docs.filter(col("text").isNotNull && size(TextOps.tokens(col("text"))) >= 3)
+      .select(col("doc_id").as("id"), TextOps.shingles(TextOps.tokens(col("text")), 3).as("sh"))
+    val inter = size(array_intersect(col("a.sh"), col("b.sh")))
+    val jac = inter.cast("double") / (size(col("a.sh")) + size(col("b.sh")) - inter)
+    sh.as("a").join(sh.as("b"), col("a.id") < col("b.id"))
+      .filter(jac >= 0.8)
+      .select(col("a.id"), col("b.id"), round(jac, 3))
+      .collect().map(r => (r.get(0), r.get(1), r.getDouble(2))).toSet
+  }
+
+  private def lshPairs(docs: DataFrame): (DataFrame, Seq[(Any, Any, Double)]) = {
+    val out = MinHashNearDup(docs, "doc_id", "text", ordered = false)
+    (out, out.collect().map(r => (r.get(0), r.get(1), r.getDouble(2))).toSeq)
+  }
+
+  private val body = "one shared boilerplate body copied verbatim into every doc"
+
+  test("MinHashNearDup: 300 identical docs give each of the 44,850 pairs once, at jaccard 1.0") {
+    val docs = (0 until 300).map(i => (i.toLong, body)).toDF("doc_id", "text")
+    val (_, got) = lshPairs(docs)
+    assert(got.size == 44850, "a pair matching in all 3 bands is emitted once")
+    assert(got.toSet.size == 44850)
+    assert(got.forall(_._3 == 1.0))
+    assert(got.toSet == referencePairs(docs))
+  }
+
+  test("MinHashNearDup: string ids pair in SQL order, decimal ids keep their type, a null id never pairs") {
+    val other = "an unrelated text that shares no three word shingle"
+    val strDocs = TestSpark.df("doc_id string, text string", Seq(
+      Row("9", body), Row("10", body), Row("100", body), Row(null, body),
+      Row("7", other)))
+    val (strOut, strGot) = lshPairs(strDocs)
+    // "10" < "100" < "9" as strings
+    assert(strGot.sortBy(p => (p._1.toString, p._2.toString)) ==
+      Seq(("10", "100", 1.0), ("10", "9", 1.0), ("100", "9", 1.0)))
+    assert(strGot.toSet == referencePairs(strDocs))
+    assert(strOut.schema("doc_a").dataType == org.apache.spark.sql.types.StringType)
+
+    val decDocs = TestSpark.df("doc_id decimal(10,2), text string", Seq(
+      Row(BigDecimal("9.00").bigDecimal, body), Row(BigDecimal("10.00").bigDecimal, body),
+      Row(BigDecimal("100.00").bigDecimal, body), Row(null, body),
+      Row(BigDecimal("7.00").bigDecimal, other)))
+    val (decOut, decGot) = lshPairs(decDocs)
+    assert(decOut.schema("doc_a").dataType == DecimalType(10, 2))
+    assert(decOut.schema("doc_b").dataType == DecimalType(10, 2))
+    assert(decGot.size == 3)
+    assert(decGot.toSet == referencePairs(decDocs))
+    assert(decGot.forall(p => p._1 != null && p._2 != null))
   }
 }

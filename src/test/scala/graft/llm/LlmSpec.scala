@@ -129,6 +129,18 @@ class LlmSpec extends AnyFunSuite {
     assert(out.head.getDouble(2) >= 0.8)
   }
 
+  test("shingleN < 1 fails at plan construction for MinHashNearDup and IncrementalMinHash.buildIndex") {
+    // with n = 0 every text, empty ones included, has the one shingle ""
+    // — every doc would be a duplicate of every other. Both calls only
+    // build plans, so the throw comes before any job.
+    val in = df("doc_id BIGINT, text STRING", Seq(Row(1L, "a b c"), Row(2L, "x y z")))
+    val e1 = intercept[IllegalArgumentException](
+      MinHashNearDup(in, "doc_id", "text", shingleN = 0))
+    val e2 = intercept[IllegalArgumentException](
+      IncrementalMinHash.buildIndex(in, "doc_id", "text", shingleN = 0))
+    assert(e1.getMessage.contains("shingle size") && e2.getMessage.contains("shingle size"))
+  }
+
   test("NgramJaccard: exact jaccard via rare-shingle index; maxDf cut drops hot-shingle pairs") {
     val base = (1 to 30).map(i => s"w$i").mkString(" ")
     val in = df("doc_id BIGINT, text STRING", Seq(

@@ -92,54 +92,26 @@ class LmScoreSpec extends AnyFunSuite {
   }
 
   test("composition is LAZY: building a score plan runs zero Spark jobs") {
-    // Count ONLY this test's jobs: sbt runs suites in parallel on one
-    // SparkContext, so a global job counter races with whatever another
-    // suite submits. setJobGroup is thread-local — every job this
-    // thread's actions submit carries the group id in its properties,
-    // and nothing else does.
+    // Count ONLY this test's jobs: setJobGroup is thread-local — every
+    // job this thread's actions submit carries the group id in its
+    // properties, and nothing else does.
     val group = s"lmscore-lazy-${java.util.UUID.randomUUID()}"
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            group == js.properties.getProperty("spark.jobGroup.id")) jobs += 1
-    }
     lm.count() // materialize the lazy vals outside the counted window
-    spark.sparkContext.addSparkListener(listener)
+    val log = new graft.JobLog
+    spark.sparkContext.addSparkListener(log)
     spark.sparkContext.setJobGroup(group, "LmScore laziness law")
     try {
-      // The listener bus is async, so after an action returns its
-      // JobStart may not have landed yet; only THIS thread submits
-      // tagged jobs, so polling until the tagged count stays still
-      // drains everything outstanding.
-      def settled(): Int = {
-        val deadline = System.nanoTime() + 30_000_000_000L
-        var last = -1
-        var stableSince = System.nanoTime()
-        while (System.nanoTime() < deadline &&
-            (jobs != last || System.nanoTime() - stableSince < 500_000_000L)) {
-          if (jobs != last) { last = jobs; stableSince = System.nanoTime() }
-          Thread.sleep(10)
-        }
-        jobs
-      }
-      def sentinel(): Int = { spark.range(1).count(); settled() }
-      // a count() is not necessarily one job (AQE can submit extra),
-      // so MEASURE the sentinel's own cost with an empty window first
-      val j1 = sentinel()
-      val sentinelCost = sentinel() - j1
-      val before = jobs
       val uni = LmScore.unigramLogProb(docs, "doc_id", "text", lm, ordered = false)
       val bi = LmScore.bigramLogProb(docs, "doc_id", "text", lm,
         LmScore.bigramCounts(docs, "text", ordered = false), ordered = false)
       assert(uni.schema.fieldNames.toSeq == Seq("doc_id", "n_tokens", "logprob"))
       assert(bi.schema.fieldNames.toSeq == Seq("doc_id", "n_tokens", "logprob"))
-      val after = sentinel()
-      assert(after - before == sentinelCost,
-        s"composing LmScore plans ran ${after - before - sentinelCost} Spark job(s)")
+      log.settle()
+      val jobs = log.jobs.count(_.group.contains(group))
+      assert(jobs == 0, s"composing LmScore plans ran $jobs Spark job(s)")
     } finally {
       spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
+      spark.sparkContext.removeSparkListener(log)
     }
   }
 

@@ -128,19 +128,19 @@ class ScaleSpec extends AnyFunSuite {
   test("plan construction triggers zero Spark jobs (no hidden corpus collect)") {
     val d = spark.read.parquet(s"$base/documents.parquet")
     val e = spark.read.parquet(s"$base/embeddings.parquet")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    // each construction runs under its own job group; one settle after
+    // the last, then every group's job count is checked
+    val log = new graft.JobLog
+    val built = scala.collection.mutable.ArrayBuffer.empty[(String, String, Int)]
+    def boundedJobs(name: String, bound: Int)(build: => DataFrame): Unit = {
+      val group = s"scale-construct-$name-${java.util.UUID.randomUUID()}"
+      spark.sparkContext.setJobGroup(group, s"$name construction")
+      try build finally spark.sparkContext.clearJobGroup()
+      built += ((name, group, bound))
     }
-    def constructionJobs(name: String)(build: => DataFrame): Unit = {
-      jobs.set(0)
-      build
-      Thread.sleep(300) // listener events are posted asynchronously
-      assert(jobs.get() === 0,
-        s"$name construction ran ${jobs.get()} Spark job(s) — a driver-side collect is hiding in plan construction")
-    }
-    spark.sparkContext.addSparkListener(listener)
+    def constructionJobs(name: String)(build: => DataFrame): Unit =
+      boundedJobs(name, 0)(build)
+    spark.sparkContext.addSparkListener(log)
     try {
       // Documented exceptions, absent here: Ivf.topK trains on a capped
       // (<=4096-row) collected sample — standard IVF practice — and
@@ -168,18 +168,20 @@ class ScaleSpec extends AnyFunSuite {
       // the SRP-bucketed ops sniff the embedding DIMENSION via a
       // limit(1) probe — O(1) rows regardless of corpus size; pin that
       // the construction cost stays a few bounded jobs, never a scan
-      def boundedJobs(name: String, bound: Int)(build: => DataFrame): Unit = {
-        jobs.set(0)
-        build
-        Thread.sleep(300)
-        assert(jobs.get() <= bound,
-          s"$name construction ran ${jobs.get()} jobs — more than its limit(1) dimension probe explains")
-      }
       boundedJobs("bucketedTopK", 6)(Similarity.bucketedTopK(
         e, e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 3))
       boundedJobs("nearDupPairs", 6)(Similarity.nearDupPairs(
         e, "vec_id", "embedding", threshold = 0.99))
-    } finally spark.sparkContext.removeSparkListener(listener)
+      log.settle()
+    } finally spark.sparkContext.removeSparkListener(log)
+    val jobs = log.jobs
+    built.foreach { case (name, group, bound) =>
+      val n = jobs.count(_.group.contains(group))
+      if (bound == 0) assert(n === 0,
+        s"$name construction ran $n Spark job(s) — a driver-side collect is hiding in plan construction")
+      else assert(n <= bound,
+        s"$name construction ran $n jobs — more than its limit(1) dimension probe explains")
+    }
   }
 
   test("10x growth: incremental-minhash batch and dup-cluster edge set cost near-linear time") {
