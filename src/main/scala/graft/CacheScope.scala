@@ -73,4 +73,12 @@ object CacheScope {
     df.queryExecution.logical.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
+
+  /** Row count of a lazy `localCheckpoint(false)` DataFrame in ONE job:
+    * counting the checkpoint RDD materializes its storage and counts in
+    * the same job, where `DataFrame.count()` under AQE runs two (the
+    * partial-aggregate map stage, then the result). A frame that is not
+    * a checkpoint root counts through `count()`. */
+  private[graft] def checkpointCount(df: DataFrame): Long =
+    checkpointRdd(df).fold(df.count())(_.count())
 }

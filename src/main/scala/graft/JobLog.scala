@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * execution, the DataFrame action's (AQE submits jobs from a pool
   * thread, whose own call site names no user code); else the name of its
   * result stage, the last one created, such as `count at Foo.scala:12`.
+  * A description or call site in a JDK frame counts as absent.
   * Callbacks run on the listener-bus thread, so a read sees only
   * delivered events; [[settle]] waits for delivery to stop. Bench counts
   * jobs per group; JobProfile lists the jobs of its timed window. */
@@ -27,8 +28,11 @@ final class JobLog extends SparkListener {
 
   override def onJobStart(js: SparkListenerJobStart): Unit = {
     def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+    // a JDK frame (a broadcast's CompletableFuture, which the scheduler
+    // writes as a zero-partition job's description) names no caller
+    def named(k: String) = prop(k).filterNot(JobLog.JdkFrame.matches)
     starts.put(js.jobId, JobLog.Job(js.jobId, prop("spark.jobGroup.id"),
-      prop("spark.job.description").orElse(prop("callSite.short"))
+      named("spark.job.description").orElse(named("callSite.short"))
         .orElse(prop("spark.sql.execution.id").flatMap(id => Option(executions.get(id))))
         .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("?"),
       js.stageInfos.size, js.time, None))
@@ -63,6 +67,10 @@ final class JobLog extends SparkListener {
 }
 
 object JobLog {
+  /** A short-form call site in a `.java` file: graft and the flows that
+    * drive it are Scala, so such a frame is the JDK's. */
+  private val JdkFrame = """\S+ at [\w$]+\.java:\d+""".r
+
   final case class Job(id: Int, group: Option[String], desc: String, stages: Int,
       start: Long, end: Option[Long])
 }

@@ -245,7 +245,7 @@ object Decontamination {
     // the table it writes
     val newly = hits.join(existing, Seq("_id", "_sh"), "left_anti")
       .localCheckpoint(false)
-    val n = newly.count()
+    val n = graft.CacheScope.checkpointCount(newly)
     if (n > 0L) {
       // one file per append: the delta is eval-bounded, and a
       // long-running audit loop must not accrete shuffle-partition-many

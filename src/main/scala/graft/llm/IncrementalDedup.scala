@@ -17,11 +17,11 @@ import org.apache.spark.sql.{Column, DataFrame}
  *    smaller id carries it (`dup_of` = that row's id).
  *  - `new`            — the batch's keeper for an unseen content.
  *
- * Scale shape: the batch's (id, hash) rows cross the wire ONCE — the
- * keeper aggregate sees only map-side-combined distinct hashes, and the
- * keeper join's output keeps the content_hash partitioning the history
- * sort-merge join needs (co-partitioned, AQE-skew-eligible); the index
- * is never broadcast and never rescans the corpus it summarizes.
+ * Scale shape: the batch's (id, hash) rows cross the wire ONCE — into
+ * the in-batch keeper window, whose content_hash partitioning the
+ * history sort-merge join reuses (co-partitioned with a bucketed
+ * index); the index is never broadcast and never rescans the corpus it
+ * summarizes.
  * [[mergeIndex]] folds the accepted `new` rows back in for the next
  * run — the same last-wins union-groupBy as the initial build.
  */
@@ -51,13 +51,18 @@ object IncrementalDedup {
    * Classify `batch` against `index`. Output
    * (doc_id, content_hash, status, dup_of), dup_of null for `new` rows.
    *
-   * The in-batch keeper is a KEYED aggregate equi-joined back, never a
-   * window over the content_hash partition: a crawl batch can carry
-   * millions of copies of one boilerplate document, and a window
-   * partition is one task with no map-side combine — the same Zipfian
-   * straggler the tf-idf df computation guards against. The aggregate
-   * collapses hot hashes before its shuffle and both joins are
-   * AQE-skew-eligible.
+   * The in-batch keeper is a running `min(doc_id)` window over the
+   * content_hash partition (ROWS unbounded preceding to current row,
+   * ids ascending, nulls last — at every row that is the group's min
+   * id, the aggregate's answer), so the plan reads the batch ONCE: no
+   * keeper aggregate joined back, no second pass over the batch. A
+   * crawl batch can carry millions of copies of one boilerplate
+   * document; the window holds each content_hash group in its
+   * SPILLABLE row buffer (O(group), never O(k²) — IncrementalPipelineSpec
+   * pins a 20,000-copy group under a 64-row spill threshold). The
+   * window's hash partitioning on content_hash is what the history
+   * sort-merge join needs, so with buckets = shuffle partitions the
+   * bucketed index joins without a second exchange on either side.
    *
    * The index must be sentinel-normalized (no null content_hash rows) —
    * every builder in this object emits it that way ([[buildIndex]],
@@ -77,11 +82,10 @@ object IncrementalDedup {
     * the gate/containment chain once for classify and AGAIN for the
     * kept-join that re-attached text; with text on the classified rows
     * one checkpoint serves both (kept = filter status = new, no join).
-    * Output (doc_id, text, content_hash, status, dup_of). Same keyed
-    * shapes as [[classify]]: the keeper aggregate still shuffles only
-    * (hash, id) — Catalyst prunes text below the exchange — and text
-    * crosses the wire once in the keeper join, exactly the once the
-    * old kept-join paid. */
+    * Output (doc_id, text, content_hash, status, dup_of). Same plan as
+    * [[classify]]: text crosses the wire once, into the keeper
+    * window's content_hash exchange, exactly the once the old kept-join
+    * paid. */
   private[llm] def classifyWithText(batch: DataFrame, index: DataFrame,
       idCol: String, textCol: String): DataFrame =
     classifyCore(batch, index, idCol, textCol, keepText = true)
@@ -98,10 +102,12 @@ object IncrementalDedup {
       // one-output-row-per-input-row contract and dedup as one content,
       // in-batch and across batches, through plain equi-joins
       contentHash(col(textCol)).as("content_hash"): _*)
-    val keepers = hashed.groupBy("content_hash")
-      .agg(min(col("doc_id")).as("_batch_keep"))
+    val keeper = org.apache.spark.sql.expressions.Window
+      .partitionBy("content_hash").orderBy(col("doc_id").asc_nulls_last)
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.currentRow)
     hashed
-      .join(keepers, Seq("content_hash"))
+      .withColumn("_batch_keep", min(col("doc_id")).over(keeper))
       .join(index.select(col("content_hash"), col("keep_id").as("_hist")),
         Seq("content_hash"), "left")
       .select(
@@ -162,8 +168,11 @@ object IncrementalDedup {
  * too); band explode joins are bucket-equality on (band index, band
  * key) — the index side shuffles its band rows, not history text;
  * estimate verification reads the signatures carried on the band rows.
- * One persist of the batch sketch feeds the plan's branches (the history
- * join, the in-batch [[BucketPairs]] pass and the id spine).
+ * [[classify]] persists the batch sketch, which feeds the plan's
+ * branches (the history join, the in-batch [[BucketPairs]] pass and the
+ * id spine); [[IncrementalPipeline]] instead sketches inside its
+ * classify checkpoint ([[sketchTotal]]) and its branches read that
+ * storage.
  */
 object IncrementalMinHash {
 
@@ -308,89 +317,105 @@ object IncrementalMinHash {
   def classifyBanded(batch: DataFrame, banded: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3, numHashes: Int = 9,
       bands: Int = 3, minMatch: Int = 5,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame =
-    classifyBandedCore(batch, banded, idCol, textCol, shingleN, numHashes,
-      bands, minMatch, scope, withSketch = false)
+      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+    // the batch sketch (rows that CAN sketch only) feeds three plan
+    // branches — the history join, the in-batch pass and, through the
+    // distinct id spine, the one-row-per-id contract — so it persists
+    val bs = scope.track(sketch(batch, idCol, textCol,
+        MinHashSketch(shingleN, numHashes, bands))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val dups = matches(bs, banded, numHashes, bands, minMatch)
+    val spine = batch.select(col(idCol).cast("long").as("doc_id")).distinct()
+    spine.join(dups, spine("doc_id") === dups("_id"), "left")
+      .select(statusCols(spine("doc_id")): _*)
+  }
 
   /**
-   * [[classifyBanded]] with the batch's own sketch AND TEXT carried on
-   * the output — (doc_id, status, dup_of, <textCol>, _sig, _bands,
-   * _self_exact), where doc_id keeps the batch id column's ORIGINAL
-   * type, _sig/_bands are null for docs too short to shingle and
-   * _self_exact is 1 iff the doc's HISTORY match on its own id was
-   * signature-identical (all `numHashes` components equal). Carrying
-   * text through (the [[IncrementalDedup.classifyWithText]] fold
-   * applied to the fuzzy tier) lets [[IncrementalPipeline]] checkpoint
-   * the ACCEPTED rows directly — the old shape re-joined the kept set
-   * on the id to re-attach text, one full id exchange pair per batch —
-   * and still lets the maintainer append accepted sketches without
+   * [[classifyBanded]] over a [[sketchTotal]] frame, with each doc's
+   * sketch AND TEXT carried on the output — (doc_id, status, dup_of,
+   * <textCol>, _sig, _bands, _self_exact), where doc_id keeps the id
+   * column's ORIGINAL type, _sig/_bands are null for docs too short to
+   * shingle and _self_exact is 1 iff the doc's HISTORY match on its own
+   * id was signature-identical (all `numHashes` components equal). The
+   * sketched frame is its own spine (one row per input row, id and
+   * text aboard), so there is no distinct, no sketch re-join and no
+   * kept re-join. [[IncrementalPipeline]] computes the sketch inside
+   * its classify checkpoint, so every branch here reads checkpoint
+   * storage — no persist — and checkpoints the ACCEPTED rows directly;
+   * the maintainer then appends accepted sketches without
    * re-tokenizing. The crash-replay self-match acceptance demands an
    * IDENTICAL signature — a reused id carrying merely near-dup text
-   * never slips through as its own keeper.
+   * never slips through as its own keeper. Rows whose _id is null
+   * (unsketched) are `new` with dup_of -1.
    */
-  private[llm] def classifyBandedSketched(batch: DataFrame, banded: DataFrame,
-      idCol: String, textCol: String, shingleN: Int = 3, numHashes: Int = 9,
-      bands: Int = 3, minMatch: Int = 5,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame =
-    classifyBandedCore(batch, banded, idCol, textCol, shingleN, numHashes,
-      bands, minMatch, scope, withSketch = true)
+  private[llm] def classifyBandedSketched(sketched: DataFrame,
+      banded: DataFrame, idCol: String, textCol: String, numHashes: Int = 9,
+      bands: Int = 3, minMatch: Int = 5): DataFrame = {
+    val bs = sketched.select(col(idCol).as("_oid"), col("_id"), col(textCol),
+      col("_sig"), col("_bands"))
+    val d = matches(bs, banded, numHashes, bands, minMatch)
+      .select(col("_id").as("_did"), col("_hist"), col("_prev"), col("_selfx"))
+    bs.join(d, bs("_id") === col("_did"), "left")
+      .select(statusCols(col("_oid").as("doc_id")) ++ Seq(
+        col(textCol), col("_sig"), col("_bands"),
+        coalesce(col("_selfx"), lit(0)).as("_self_exact")): _*)
+  }
 
-  /** TOTAL sketch pass for the sketched (pipeline) variant: one output
-    * row PER INPUT ROW — (_oid originally-typed id, _id long,
-    * <textCol>, _sig, _bands), with _sig/_bands null when the row
-    * cannot sketch (null id, null text, or fewer than shingleN
-    * tokens). Carrying the id and text through makes this frame BOTH
-    * the classification spine and the text source, deleting the
-    * kept-rejoin the caller used to pay. */
-  private def sketchTotal(df: DataFrame, idCol: String, textCol: String,
-      mh: MinHashSketch): DataFrame = {
+  /** TOTAL sketch pass: `df`'s columns (text cast to string) plus
+    * (_id long, _sig, _bands) — one output row PER INPUT ROW, sketched
+    * only where `where` holds; _id/_sig/_bands are null elsewhere, and
+    * _sig/_bands also when the row cannot sketch (null id, null text,
+    * or fewer than shingleN tokens). Carrying every column through
+    * makes the frame both the [[classifyBandedSketched]] spine and its
+    * text source; [[IncrementalPipeline]] runs it over its exact
+    * classification (`where` = status 'new') before checkpointing.
+    * `idName` names the id column in the non-long-id error (default
+    * `idCol`; the pipeline passes its caller's column name). */
+  private[llm] def sketchTotal(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int = 3, numHashes: Int = 9, bands: Int = 3,
+      where: Column = lit(true), idName: String = ""): DataFrame = {
     import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      df.schema(df.schema.fieldIndex(idCol)).copy(name = "_oid"),
-      StructField("_id", LongType, nullable = true),
-      StructField(textCol, StringType, nullable = true),
-      StructField("_sig", ArrayType(StringType, containsNull = true),
-        nullable = true),
-      StructField("_bands", ArrayType(StringType, containsNull = true),
-        nullable = true)))
+    val mh = MinHashSketch(shingleN, numHashes, bands)
     // a non-null id that is not a long would sketch as unkeyed and so
     // always classify `new` — silently bypassing the fuzzy gate; raise
     // instead (inline, like the index width guards: no extra job)
     val lid = col(idCol).try_cast("long")
-    df.select(col(idCol),
-        when(col(idCol).isNull || lid.isNotNull, lid).otherwise(raise_error(lit(
-          s"IncrementalMinHash.classifyBanded: id column '$idCol' holds a " +
+    val in = df.select(df.columns.toSeq.map(c =>
+        if (c == textCol) col(c).cast("string").as(c) else col(c)) :+
+      when(!where, lit(null).cast("long"))
+        .when(col(idCol).isNull || lid.isNotNull, lid)
+        .otherwise(raise_error(lit(
+          s"IncrementalMinHash.classifyBanded: id column " +
+            s"'${if (idName.isEmpty) idCol else idName}' holds a " +
             "non-null value that is not a long — fuzzy dedup keys on long " +
-            "ids; cast or remap the id column first"))),
-        col(textCol).cast("string"))
-      .mapPartitions { rows =>
+            "ids; cast or remap the id column first"))).as("_id"): _*)
+    val schema = in.schema
+      .add("_sig", ArrayType(StringType, containsNull = true), nullable = true)
+      .add("_bands", ArrayType(StringType, containsNull = true), nullable = true)
+    val (ti, ii) = (in.schema.fieldIndex(textCol), in.schema.fieldIndex("_id"))
+    in.mapPartitions { rows =>
         val md = java.security.MessageDigest.getInstance("MD5")
         rows.map { r =>
-          val oid = r.get(0)
-          val lid: java.lang.Long =
-            if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))
-          val text = r.getString(2)
-          val s = if (lid == null) null else mh(md, text)
-          if (s == null) org.apache.spark.sql.Row(oid, lid, text, null, null)
-          else org.apache.spark.sql.Row(oid, lid, text, s._2, s._3)
+          val s = if (r.isNullAt(ii)) null else mh(md, r.getString(ti))
+          org.apache.spark.sql.Row.fromSeq(r.toSeq ++
+            (if (s == null) Seq(null, null) else Seq(s._2, s._3)))
         }
       }(org.apache.spark.sql.Encoders.row(schema))
   }
 
-  private def classifyBandedCore(batch: DataFrame, banded: DataFrame,
-      idCol: String, textCol: String, shingleN: Int, numHashes: Int,
-      bands: Int, minMatch: Int,
-      scope: graft.CacheScope, withSketch: Boolean): DataFrame = {
-    val mh = MinHashSketch(shingleN, numHashes, bands)
-    // public path: the batch sketch (rows that CAN sketch only) plus a
-    // distinct id spine for the one-row-per-id contract. Sketched
-    // (pipeline) path: ONE total pass carries (id, text, sketch) per
-    // input row — the frame is its own spine, so neither the distinct
-    // nor the sketch re-join nor the caller's kept re-join exist.
-    val bs = scope.track(
-      (if (withSketch) sketchTotal(batch, idCol, textCol, mh)
-      else sketch(batch, idCol, textCol, mh))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  private def statusCols(id: Column): Seq[Column] = Seq(
+    id,
+    when(col("_hist").isNotNull, lit("dup_of_history"))
+      .when(col("_prev").isNotNull, lit("dup_in_batch"))
+      .otherwise(lit("new")).as("status"),
+    coalesce(col("_hist"), col("_prev"), lit(-1L)).as("dup_of"))
+
+  /** Per sketched doc (`bs`: _id, _sig, _bands), its min verified
+    * history keeper `_hist`, its min verified smaller batch id `_prev`,
+    * and `_selfx` = 1 iff it matched its own id in history on every
+    * signature component. */
+  private def matches(bs: DataFrame, banded: DataFrame, numHashes: Int,
+      bands: Int, minMatch: Int): DataFrame = {
     // the batch band rows carry the signature INLINE (duplicated bands×
     // — the same sketch-sized trade the persisted index makes), so
     // candidate verification needs no signature re-join: the old shape
@@ -464,36 +489,13 @@ object IncrementalMinHash {
         if (m >= mm) org.apache.spark.sql.Row(b._1, a._1, 0, false) else null
       }
     }
-    val dups = histPairs.unionByName(batchPairs)
+    histPairs.unionByName(batchPairs)
       .groupBy(col("_id"))
       .agg(
         min(when(col("_fromHist"), col("keep_id"))).as("_hist"),
         min(when(!col("_fromHist"), col("keep_id"))).as("_prev"),
         max(when(col("_fromHist") && col("keep_id") === col("_id") &&
           col("_mc") === numHashes, 1).otherwise(0)).as("_selfx"))
-
-    def statusCols(id: Column) = Seq(
-      id,
-      when(col("_hist").isNotNull, lit("dup_of_history"))
-        .when(col("_prev").isNotNull, lit("dup_in_batch"))
-        .otherwise(lit("new")).as("status"),
-      coalesce(col("_hist"), col("_prev"), lit(-1L)).as("dup_of"))
-    if (!withSketch) {
-      val spine = batch.select(col(idCol).cast("long").as("doc_id")).distinct()
-      spine.join(dups, spine("doc_id") === dups("_id"), "left")
-        .select(statusCols(spine("doc_id")): _*)
-    } else {
-      // the total sketch IS the spine (one row per input row, id and
-      // text aboard): one left join against the per-doc match
-      // aggregate replaces the old spine join + sketch re-join +
-      // the caller's kept re-join
-      val d = dups.select(col("_id").as("_did"), col("_hist"),
-        col("_prev"), col("_selfx"))
-      bs.join(d, bs("_id") === col("_did"), "left")
-        .select(statusCols(col("_oid").as("doc_id")) ++ Seq(
-          col(textCol), col("_sig"), col("_bands"),
-          coalesce(col("_selfx"), lit(0)).as("_self_exact")): _*)
-    }
   }
 
   /**

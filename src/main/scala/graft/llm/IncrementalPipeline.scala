@@ -67,11 +67,17 @@ import org.apache.spark.sql.functions._
  *
  * 100 TB shape: every join against state is keyed; the eval index and
  * keeper index are bucketed on their join keys (only batch-derived
- * rows shuffle); the cursor/bases join broadcasts (shards-sized); the
- * only data-scale shuffles are the chain's own (the batch's gate
- * aggregates, shingle projection, dedup keeper aggregate, packing
- * shard exchange) — identical per-byte cost to the one-shot builder
- * over the same bytes, paid once per byte ever.
+ * rows shuffle); the cursor advance is a shards-sized union-aggregate;
+ * the only data-scale shuffles are the chain's own (the in-batch
+ * keeper window, packing shard exchange) — paid once per byte ever.
+ *
+ * Fixed cost per batch: a batch of a few hundred docs is bound by job
+ * count, not bytes, so nothing is persisted and each intermediate is
+ * materialized once — the batch is read once, inside the classify
+ * checkpoint, which also carries the fuzzy tier's sketches; the three
+ * checkpoint counts run one job each ([[graft.CacheScope.checkpointCount]]);
+ * the sample merge is one rank-limited window. A plain batch with every
+ * stage on runs <= 30 jobs (IncrementalPipelineSpec pins it).
  */
 object IncrementalPipeline {
 
@@ -235,31 +241,11 @@ object IncrementalPipeline {
       graceMs: Long = 0L, batchEmbeddings: Option[DataFrame] = None,
       vecCol: String = "embedding"): DataFrame = {
     if (decontaminate) Pipeline.requireDecontamThreshold(cfg)
-    // the gated batch feeds TWO plan branches inside the classify
-    // checkpoint below (the in-batch keeper aggregate and the rows it
-    // joins back to) and physical plans re-execute shared subtrees per
-    // branch — persist so the per-doc text work (NFC, tokenize,
-    // classifier fold) runs once per batch;
-    // released as soon as the checkpoint materializes (try/finally: a
-    // failure before then — a missing state table, a job abort — must
-    // not leak the cached batch into the block manager, or a caller's
-    // replay-the-batch retry loop grows storage per failure)
+    // not persisted: every consumer below reads the batch through the
+    // classify checkpoint, whose plan reads it ONCE
+    val spark = batch.sparkSession
     val gated = Pipeline.gateStage(
       Pipeline.cleanStage(batch, idCol, textCol, cfg), idCol, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try processBatchFrom(gated, batch.sparkSession, idCol, cfg, st,
-      decontaminate, sampleK, audit, buckets, graceMs, batchEmbeddings,
-      vecCol)
-    finally gated.unpersist(blocking = false)
-  }
-
-  private def processBatchFrom(gated: DataFrame,
-      spark0: SparkSession, idCol: String,
-      cfg: Pipeline.Config, st: State, decontaminate: Boolean,
-      sampleK: Int, audit: Boolean, buckets: Int,
-      graceMs: Long, batchEmbeddings: Option[DataFrame],
-      vecCol: String): DataFrame = {
-    val spark = spark0
     val shingleDecontaminated =
       if (decontaminate) {
         require(spark.catalog.tableExists(st.evalTable),
@@ -294,13 +280,14 @@ object IncrementalPipeline {
     // stage 6: classify against the persisted keeper index, with the
     // text CARRIED THROUGH the classification — ONE checkpoint then
     // serves as the gate/containment materialization, the keeper-append
-    // input, and (as a pure filter, no join) the kept set. The old
-    // shape paid two sequential full-batch materializations here
-    // (decontaminated, then classified) plus a kept-join per consumer.
+    // input, and (as a pure filter, no join) the kept set. With the
+    // fuzzy tier on, the same checkpoint also carries each kept doc's
+    // MinHash sketch (stage 6b's input), so the sketch pass runs once,
+    // inside this materialization, and nothing is persisted.
     // Checkpointed because the keeper append below mutates the very
     // table the classify join reads.
     val dedupExists = spark.catalog.tableExists(st.dedupTable)
-    val classified = (
+    val classifiedLazy =
       if (dedupExists)
         IncrementalDedup.classifyWithText(decontaminatedLazy,
           IndexStore.exactIndex(spark, st.dedupTable), idCol, "text")
@@ -317,21 +304,22 @@ object IncrementalPipeline {
               org.apache.spark.sql.types.StructField("keep_id",
                 org.apache.spark.sql.types.LongType)))),
           idCol, "text")
-      ).transform(c => labeled(spark, "classify ckpt")(c.localCheckpoint(true)))
-    gated.unpersist(blocking = false) // checkpoint holds the data now
+    val classified = labeled(spark, "classify ckpt")(
+      (if (cfg.fuzzyDedup)
+        IncrementalMinHash.sketchTotal(classifiedLazy, "doc_id", "text",
+          cfg.fuzzyShingleN, cfg.fuzzyNumHashes, cfg.fuzzyBands,
+          where = col("status") === "new", idName = idCol)
+      else classifiedLazy).localCheckpoint(true))
     // kept = a FILTER over the classify checkpoint (no join): its
-    // consumers (the fuzzy sketch pass, the emission chain) re-run only
-    // the filter against materialized storage
+    // consumers (the fuzzy tier, the emission chain) re-run only the
+    // filter against materialized storage
     val kept = classified.filter(col("status") === "new")
-      .select(col("doc_id").as(idCol), col("text"))
     // stage 6b: fuzzy (MinHash) tier against the persisted band index;
     // the SKETCHED classification carries each doc's (sig, bands), so
     // the ACCEPTED join (status + sketch riding along) is the one frame
     // both the sketch append and the emission chain need — checkpoint
-    // THAT, not the raw classification: one materialization serves the
-    // append (which mutates the very band table the classify plan
-    // reads) and the packing chain, with no separate classification
-    // checkpoint and no second kept-join.
+    // THAT: one materialization serves the append (which mutates the
+    // very band table the classify plan reads) and the packing chain.
     // Self-match acceptance (see the crash-replay note above) is
     // tightened to SIGNATURE-IDENTICAL matches: a replayed batch
     // re-sketches the same text, so all components equal; a REUSED id
@@ -346,30 +334,25 @@ object IncrementalPipeline {
           if (fuzzyExists) IndexStore.minhashIndex(spark, st.fuzzyTable,
             cfg.fuzzyShingleN, cfg.fuzzyNumHashes, cfg.fuzzyBands)
           else IncrementalMinHash.emptyBandedIndex(spark)
-        val fuzzyScope = new graft.CacheScope
-        val fk = try labeled(spark, "fuzzy kept ckpt") {
-          // the sketched classification carries (id, text) through
-          // (the classifyWithText fold applied to the fuzzy tier), so
-          // the accepted set is a pure FILTER over it — the old shape
-          // re-joined `kept` on the id to re-attach text, one full id
-          // exchange pair per batch. The isNotNull guard mirrors the
-          // old join's null-id semantics exactly (null ids never
-          // joined; cleanStage drops them anyway).
-          val cls = IncrementalMinHash.classifyBandedSketched(kept, banded,
-            idCol, "text", cfg.fuzzyShingleN, cfg.fuzzyNumHashes,
-            cfg.fuzzyBands, cfg.fuzzyMinMatch, scope = fuzzyScope)
-          cls.filter(col("doc_id").isNotNull && (col("status") === "new" ||
-            (col("status") === "dup_of_history" &&
-              col("dup_of") === col("doc_id") && col("_self_exact") === 1)))
+        // the sketched classification carries (id, text) through, so
+        // the accepted set is a pure FILTER over it. The isNotNull guard
+        // keeps null ids out, as the old kept re-join did (cleanStage
+        // drops them anyway).
+        val fk = labeled(spark, "fuzzy kept ckpt") {
+          IncrementalMinHash.classifyBandedSketched(kept, banded, "doc_id",
+              "text", cfg.fuzzyNumHashes, cfg.fuzzyBands, cfg.fuzzyMinMatch)
+            .filter(col("doc_id").isNotNull && (col("status") === "new" ||
+              (col("status") === "dup_of_history" &&
+                col("dup_of") === col("doc_id") && col("_self_exact") === 1)))
             .select(col("doc_id").as(idCol), col("text"), col("status"),
               col("_sig"), col("_bands"))
             .localCheckpoint(true)
-        } finally fuzzyScope.release() // sketch cache dies with the ckpt
+        }
         Some((fk, fuzzyExists))
       }
     val fuzzyKept = fuzzyState match {
       case Some((fk, _)) => fk.select(col(idCol), col("text"))
-      case None => kept
+      case None => kept.select(col("doc_id").as(idCol), col("text"))
     }
     if (audit) require(spark.catalog.tableExists(st.evalTable),
       s"audit=true but ${st.evalTable} does not exist — " +
@@ -379,16 +362,15 @@ object IncrementalPipeline {
     // checkpointed ONLY when the audit/sample side artifacts will read
     // it (otherwise packing is its sole consumer and the spans
     // checkpoint below materializes the chain once); the LAZY
-    // checkpoint + count fold materializes it and answers the
-    // empty-emission probe in ONE job (the auditBatch discipline),
-    // where an eager checkpoint + isEmpty paid two.
+    // checkpoint + RDD count materializes it and answers the
+    // empty-emission probe in ONE job ([[graft.CacheScope.checkpointCount]]).
     val needSampled = audit || sampleK > 0
     val sampledLazy = Sampling.hashSample(fuzzyKept, idCol, cfg.sampleRate, cfg.salt)
-    val sampled =
-      if (needSampled) sampledLazy.localCheckpoint(false) else sampledLazy
-    val emptySample =
-      if (needSampled) labeled(spark, "sampled ckpt+count")(sampled.count()) == 0L
-      else false
+    val (sampled, emptySample) =
+      if (needSampled) labeled(spark, "sampled ckpt+count") {
+        val ck = sampledLazy.localCheckpoint(false)
+        (ck, graft.CacheScope.checkpointCount(ck) == 0L)
+      } else (sampledLazy, false)
     // stage 8: pack from the persisted cursors (zeros on first batch)
     val cursorExists = spark.catalog.tableExists(st.cursorTable)
     val bases =
@@ -400,12 +382,14 @@ object IncrementalPipeline {
         spark.range(0).select(col("id").as("shard"), col("id").as("base"))
     // lazy checkpoint + count: materializes BEFORE any state append
     // (the ordering discipline) and folds the empty-emission probe into
-    // the materializing job
-    val spans = Packing.packSequencesFrom(sampled, idCol, "text",
-        cfg.targetTokens, cfg.shards, bases, cfg.salt)
-      .localCheckpoint(false)
-    val emptyEmission =
-      labeled(spark, "spans ckpt+count")(spans.count()) == 0L
+    // the materializing job; the label covers the checkpoint's own
+    // creation too (under AQE it runs the packing exchanges' map stages)
+    val (spans, emptyEmission) = labeled(spark, "spans ckpt+count") {
+      val ck = Packing.packSequencesFrom(sampled, idCol, "text",
+          cfg.targetTokens, cfg.shards, bases, cfg.salt)
+        .localCheckpoint(false)
+      (ck, graft.CacheScope.checkpointCount(ck) == 0L)
+    }
     // ---- state appends, all O(batch) ----
     // Ordering: the keeper append goes LAST, because it is the COMMIT
     // POINT — once the batch's hashes are in the index, a replay
@@ -451,18 +435,18 @@ object IncrementalPipeline {
     // cursor advance: per-shard token mass of THIS emission (each
     // doc's spans slice [tok_start, tok_end) partition its tokens, so
     // the span sum per shard IS the batch's packed token count there).
-    // An EMPTY emission advances nothing — skip the full_outer action
-    // and the swap entirely (the replay path then costs zero cursor
-    // jobs), except on the very first batch, which must still CREATE
-    // the stamped table for the drift guard.
+    // The new bases are ONE union-aggregate: each shard's old base plus
+    // its spans' token mass. An EMPTY emission advances nothing — skip
+    // the action and the swap entirely (the replay path then costs zero
+    // cursor jobs), except on the very first batch, which must still
+    // CREATE the stamped table for the drift guard.
     val cursorF = DriverPool.submit(spark)(labeled(spark, "cursor advance") {
       if (!emptyEmission || !cursorExists) {
-        val batchSums = spans.groupBy("shard")
-          .agg(sum(col("tok_end") - col("tok_start")).as("_adv"))
-        val newBases = bases.join(batchSums, Seq("shard"), "full_outer")
-          .select(col("shard").cast("long").as("shard"),
-            (coalesce(col("base"), lit(0L)) + coalesce(col("_adv"), lit(0L)))
-              .as("base"))
+        val newBases = bases.select(col("shard").cast("long").as("shard"),
+            col("base"))
+          .unionByName(spans.select(col("shard").cast("long").as("shard"),
+            (col("tok_end") - col("tok_start")).as("base")))
+          .groupBy("shard").agg(sum(col("base")).as("base"))
         // no checkpoint: the upsert writes the new generation to a
         // fresh sibling BEFORE the swap, so this plan's read of the
         // current cursor table stays valid through the write (the

@@ -252,19 +252,16 @@ object Sampling {
    * function of (salt, keys) like every sampler here (and totally
    * ordered: unique keys break the vanishing hash ties).
    *
-   * The naive plan is `row_number() OVER (PARTITION BY stratum ORDER BY
-   * hash)` + `rn <= k`. On Spark 3.5+ that is NOT the Zipfian
-   * straggler it reads as: rank-limit pushdown (`WindowGroupLimit`)
-   * keeps <= k rows per group per map partition BEFORE the exchange, so
-   * the giant stratum never lands in one task (measured at a 1.3M-row
-   * single-stratum fixture: parity with this operator, ~3 s both at
-   * local[32]) — but it still SORTS every partition's full slice to
-   * find its local top k, and it only fires when the `rn <= k` filter
-   * sits immediately on the window. The two phases here replace that
-   * per-partition sort with a codegen'd filter, shrink every downstream
-   * operator to ~safety·k rows per stratum, and keep the shape safe
-   * when the sample feeds further per-row work (where the adjacent
-   * limit, and with it the pushdown, disappears):
+   * The ranking is [[rankedTopK]]'s rank-limited window, whose
+   * map-side `WindowGroupLimit` already keeps a giant stratum out of
+   * any one task — but it still SORTS every partition's full slice,
+   * and the pushdown only fires while the `rn <= k` filter sits on the
+   * window. On a corpus-sized input the two phases here replace that
+   * per-partition sort with a codegen'd filter and shrink every
+   * downstream operator to ~safety·k rows per stratum; on a batch-sized
+   * input the phases' extra jobs cost more than the sort, so the
+   * maintaining merge ([[graft.streaming.StreamingSample.mergeBatch]])
+   * calls [[rankedTopK]] directly:
    *
    *  1. one map-side-combined count aggregate -> per-stratum counts
    *     (strata-sized, broadcast), giving each stratum a survivor rate
@@ -298,10 +295,6 @@ object Sampling {
       k: Int, salt: String = "", safety: Double = 4.0): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(safety > 0, s"safety must be positive, got $safety")
-    val outCols = df.columns.toSeq.map(col)
-    val u32 = conv(substring(
-      md5(concat(lit(salt), col(keyCol).cast("string")).cast("binary")), 1, 8),
-      16, 10).cast("long")
     val base = df.filter(col(keyCol).isNotNull)
     val counts = base.groupBy(col(strataCol).as("_tk_st"))
       .agg(count(lit(1)).as("_tk_cnt"))
@@ -315,26 +308,45 @@ object Sampling {
     // `df` themselves if the input scan dominates.
     val survivors = base
       .join(broadcast(counts), col(strataCol) <=> col("_tk_st"))
-      .filter(u32 < thr)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(strataCol)).orderBy(u32.asc, col(keyCol).asc)
+      .filter(hash32(col(keyCol), salt) < thr)
+      .select(df.columns.toSeq.map(col): _*)
     val shortfall = counts
       .join(survivors.groupBy(col(strataCol).as("_tk_st2"))
           .agg(count(lit(1)).as("_tk_sc")),
         col("_tk_st") <=> col("_tk_st2"), "left")
       .filter(coalesce(col("_tk_sc"), lit(0L)) < need)
       .select(col("_tk_st").as("_tk_fb"))
-    val exact = survivors
-      .join(broadcast(shortfall), col(strataCol) <=> col("_tk_fb"), "left_anti")
-      .withColumn("_tk_rn", row_number().over(w))
-      .filter(col("_tk_rn") <= k)
-      .select(outCols: _*)
-    val rescued = base
-      .join(broadcast(shortfall), col(strataCol) <=> col("_tk_fb"))
-      .withColumn("_tk_rn", row_number().over(w))
-      .filter(col("_tk_rn") <= k)
-      .select(outCols: _*)
+    val exact = rankedTopK(survivors
+      .join(broadcast(shortfall), col(strataCol) <=> col("_tk_fb"), "left_anti"),
+      keyCol, strataCol, k, salt)
+    val rescued = rankedTopK(base
+      .join(broadcast(shortfall), col(strataCol) <=> col("_tk_fb"), "left_semi"),
+      keyCol, strataCol, k, salt)
     exact.unionByName(rescued)
+  }
+
+  /** The sampler's 32-bit key hash: the first 8 hex chars of
+    * md5(salt || key) as a long. */
+  private def hash32(key: Column, salt: String): Column =
+    conv(substring(md5(concat(lit(salt), key.cast("string")).cast("binary")),
+      1, 8), 16, 10).cast("long")
+
+  /** THE fixed-count per-stratum rank: the rows ranked `<= k` by `rank`
+    * over (hash32(salt, key), key) within each stratum, null keys
+    * excluded, original columns. `rank` is `row_number()`, or
+    * `dense_rank()` when duplicate rows must share one slot (the
+    * maintaining merge's replay dedup). The filter sits on the window,
+    * so Spark plans a map-side `WindowGroupLimit`: each map partition
+    * keeps <= k rows per stratum before the exchange. */
+  private[graft] def rankedTopK(df: DataFrame, keyCol: String,
+      strataCol: String, k: Int, salt: String,
+      rank: Column = row_number()): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(strataCol))
+      .orderBy(hash32(col(keyCol), salt).asc, col(keyCol).asc)
+    df.filter(col(keyCol).isNotNull)
+      .withColumn("_tk_rn", rank.over(w))
+      .filter(col("_tk_rn") <= k)
+      .select(df.columns.toSeq.map(col): _*)
   }
 
   /**
@@ -379,12 +391,9 @@ object Sampling {
     * [[weightedSample]] scaladoc for why this beats the A-ES pow form
     * on cross-engine determinism). */
   private def poissonPriority(key: Column, weight: Column,
-      salt: String): Column = {
-    val u32 = conv(substring(
-      md5(concat(lit(salt), key.cast("string")).cast("binary")), 1, 8),
-      16, 10).cast("long")
-    weight.cast("double") / ((u32 + lit(1L)).cast("double") / lit(4294967296.0))
-  }
+      salt: String): Column =
+    weight.cast("double") /
+      ((hash32(key, salt) + lit(1L)).cast("double") / lit(4294967296.0))
 
   /**
    * Per-stratum WEIGHTED sample without replacement: min(k, |stratum|)

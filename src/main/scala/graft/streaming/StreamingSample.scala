@@ -39,10 +39,11 @@ import org.apache.spark.sql.streaming.DataStreamWriter
  * `graceMs` above the longest read and a generation survives that
  * long regardless of merge cadence.
  *
- * SCALE SHAPE: each merge is O(batch) — the ranking pass is the exact
- * batch sampler over (existing ∪ batch) where existing is strata×k
- * rows (model-sized, never corpus-sized), and the swap rewrites only
- * that tiny table.
+ * SCALE SHAPE: each merge is O(batch) — ONE rank-limited window over
+ * (existing ∪ batch), where existing is strata×k rows (model-sized,
+ * never corpus-sized): each map task sorts its slice of slim (key,
+ * stratum) rows and keeps <= k per stratum before the one exchange, and
+ * the swap rewrites only that tiny table.
  *
  * WEIGHTED MODE ([[mergeBatchWeighted]]/[[sinkWeighted]]/
  * [[sampleWeighted]]): the same maintaining discipline drawing
@@ -68,21 +69,19 @@ object StreamingSample {
     val spark = batch.sparkSession
     val slim = batch.select(col(keyCol), col(strataCol))
     val exists = spark.catalog.tableExists(tableName)
-    // ONE ranking pass over (existing ∪ batch): the union operand is
-    // batch-sized regardless (the table is strata×k rows), so
-    // pre-ranking the batch separately would just run the exact
-    // sampler's machinery twice for the same O(batch) result. The
-    // (key, stratum) dedup collapses replays — an existing key
-    // re-delivered would otherwise crowd the min-k window with copies.
+    // ONE rank-limited window over (existing ∪ batch), which is
+    // batch-sized (the table is strata×k rows): one exchange, none of
+    // the one-shot sampler's count/broadcast/shortfall jobs. dense_rank
+    // is the replay dedup: a re-delivered (key, stratum) shares its
+    // copy's rank, so the copies take ONE of the k slots and the
+    // distinct collapses them on the window's own partitioning.
     val merged =
       if (exists) {
         requireStamps(spark, tableName, k, salt, "uniform")
         spark.catalog.refreshTable(tableName)
-        Sampling.topKPerStratum(
-          spark.table(tableName).unionByName(slim)
-            .dropDuplicates(keyCol, strataCol),
-          keyCol, strataCol, k, salt)
-      } else Sampling.topKPerStratum(slim, keyCol, strataCol, k, salt)
+        Sampling.rankedTopK(spark.table(tableName).unionByName(slim),
+          keyCol, strataCol, k, salt, dense_rank()).distinct()
+      } else Sampling.rankedTopK(slim, keyCol, strataCol, k, salt)
     // ONE action per merge: the swap's own write executes the merge
     // plan (SwapTable writes to a FRESH versioned sibling before the
     // ALTER, so reading the current generation during the write is

@@ -69,4 +69,21 @@ class JobLogSpec extends AnyFunSuite {
     val mine = log.jobs.filter(_.group.exists(_.startsWith("pool-spec")))
     assert(mine.map(j => (j.group, j.desc)) == Seq((Some("pool-spec-B"), "B")), log.jobs.mkString("\n"))
   }
+
+  test("a broadcast of an empty relation is named by its SQL execution, not a JDK frame") {
+    val spark = TestSpark.spark
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      spark.range(0, 100, 1, 2).join(org.apache.spark.sql.functions.broadcast(empty),
+        org.apache.spark.sql.functions.col("id") === org.apache.spark.sql.functions.col("k"),
+        "left").collect()
+      log.settle()
+    } finally spark.sparkContext.removeSparkListener(log)
+    assert(log.jobs.exists(_.stages == 0), log.jobs.mkString("\n"))
+    assert(log.jobs.forall(_.desc.startsWith("collect at JobLogSpec.scala:")),
+      log.jobs.mkString("\n"))
+  }
 }

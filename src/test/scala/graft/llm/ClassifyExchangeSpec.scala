@@ -70,19 +70,16 @@ class ClassifyExchangeSpec extends AnyFunSuite {
   test("classifyBandedSketched: batch text crosses at most ONE hash exchange; band rows shuffle without text") {
     val s2 = planSession(buckets = 4)
     import s2.implicits._
-    val scope = new graft.CacheScope
-    try {
-      val batch = Seq(
-        (10L, "the quick brown fox jumps over the lazy dog again and again"),
-        (11L, "entirely fresh words nothing shared with anything else here"))
-        .toDF("doc_id", "text")
-      val cls = IncrementalMinHash.classifyBandedSketched(
-        batch, IncrementalMinHash.emptyBandedIndex(s2), "doc_id", "text",
-        scope = scope)
-      val crossings = textExchanges(cls)
-      assert(crossings.size <= 1,
-        s"batch text crosses ${crossings.size} exchanges (expected <= 1):\n" +
-          cls.queryExecution.executedPlan)
-    } finally scope.release()
+    val batch = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog again and again"),
+      (11L, "entirely fresh words nothing shared with anything else here"))
+      .toDF("doc_id", "text")
+    val cls = IncrementalMinHash.classifyBandedSketched(
+      IncrementalMinHash.sketchTotal(batch, "doc_id", "text"),
+      IncrementalMinHash.emptyBandedIndex(s2), "doc_id", "text")
+    val crossings = textExchanges(cls)
+    assert(crossings.size <= 1,
+      s"batch text crosses ${crossings.size} exchanges (expected <= 1):\n" +
+        cls.queryExecution.executedPlan)
   }
 }

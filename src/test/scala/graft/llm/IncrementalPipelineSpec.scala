@@ -412,7 +412,8 @@ class IncrementalPipelineSpec extends AnyFunSuite {
       // signature-identical arm is pinned directly on the classifier
       val banded = IndexStore.minhashIndex(spark, state.fuzzyTable)
       val cls = IncrementalMinHash.classifyBandedSketched(
-        b1, banded, "doc_id", "text")
+        IncrementalMinHash.sketchTotal(b1, "doc_id", "text"), banded,
+        "doc_id", "text")
       val r = cls.collect().head
       assert(r.getAs[String]("status") == "dup_of_history" &&
         r.getAs[Long]("dup_of") == 1L &&
@@ -454,5 +455,74 @@ class IncrementalPipelineSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("graft.pipeline.salt"))
     } finally cleanup(state)
+  }
+
+  test("job count: a second plain batch with every stage on runs at most 30 jobs") {
+    val state = st("graft_ip_jobs")
+    try {
+      val fc = cfg.copy(fuzzyDedup = true)
+      IncrementalPipeline.saveEvalIndex(evalSet, "doc_id", "text", fc, state,
+        buckets = 4)
+      def batch(m: Int) = IncrementalPipeline.processBatch(
+        docs.filter(pmod(col("doc_id"), lit(2)) === m), "doc_id", "text", fc,
+        state, sampleK = 3, buckets = 4)
+      val first = batch(0)
+      assert(first.count() > 0)
+      IncrementalPipeline.releaseEmission(first)
+      // counted by JobLog under a job group of its own (the driver
+      // pool's threads inherit it)
+      val sc = spark.sparkContext
+      val group = s"ip-jobs-${java.util.UUID.randomUUID()}"
+      val log = new graft.JobLog
+      sc.addSparkListener(log)
+      val second = try {
+        sc.setJobGroup(group, "IncrementalPipelineSpec job count")
+        try batch(1) finally sc.clearJobGroup()
+      } finally { log.settle(); sc.removeSparkListener(log) }
+      val jobs = log.jobs.filter(_.group.contains(group))
+      assert(second.count() > 0, "the second batch must emit")
+      IncrementalPipeline.releaseEmission(second)
+      assert(jobs.size <= 30, s"${jobs.size} jobs:\n" +
+        jobs.groupBy(_.desc).map { case (d, js) => s"${js.size}  $d" }.mkString("\n"))
+    } finally cleanup(state)
+  }
+
+  test("exact classify: a 20,000-copy content group under a 64-row window spill threshold keeps one keeper") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.windowExec.buffer.spill.threshold", "64")
+    import s2.implicits._
+    val hot = "the same boilerplate paragraph copied into every page of a crawl"
+    val batch = (s2.range(0, 20000, 1, 4)
+        .select((col("id") * 7 + 100).as("doc_id"), lit(hot).as("text")))
+      .unionByName(Seq((Option(5L), Option.empty[String]),
+          (Option.empty[Long], Option(hot)))
+        .toDF("doc_id", "text"))
+    val index = s2.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "content_hash STRING, keep_id BIGINT"))
+    type R = (Option[Long], String, String, Option[Long])
+    def rows(df: DataFrame): Set[R] =
+      df.select("doc_id", "content_hash", "status", "dup_of").collect()
+        .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1),
+          r.getString(2), Option(r.get(3)).map(_.asInstanceOf[Long]))).toSet
+    val got = rows(IncrementalDedup.classify(batch, index, "doc_id", "text"))
+    // the in-batch keeper as it was computed before the window: a min
+    // aggregate per content hash joined back to every row
+    val hashed = batch.select(col("doc_id"),
+      coalesce(md5(col("text").cast("binary")), lit("-")).as("content_hash"))
+    val keepers = hashed.groupBy("content_hash")
+      .agg(min(col("doc_id")).as("_keep"))
+    val expect = rows(hashed.join(keepers, Seq("content_hash"))
+      .select(col("doc_id"), col("content_hash"),
+        when(col("doc_id") =!= col("_keep"), lit("dup_in_batch"))
+          .otherwise(lit("new")).as("status"),
+        when(col("doc_id") =!= col("_keep"), col("_keep")).as("dup_of")))
+    assert(got == expect)
+    val hotRows = got.filter(r => r._1.isDefined && r._2 != "-")
+    assert(hotRows.size == 20000)
+    assert(hotRows.filter(_._3 == "new") == Set[R]((Some(100L), hotRows.head._2, "new", None)))
+    assert(hotRows.filter(_._3 != "new").forall(r =>
+      r._3 == "dup_in_batch" && r._4.contains(100L)))
   }
 }

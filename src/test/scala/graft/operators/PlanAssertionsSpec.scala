@@ -153,20 +153,26 @@ class PlanAssertionsSpec extends AnyFunSuite {
     assert(plan.contains("Generate explode"), s"expected a codegen explode:\n$plan")
   }
 
-  test("incremental exact dedup: the batch keeper is a keyed aggregate, never a hash-partition window") {
-    // same Zipfian-straggler class as the tf-idf df pin: millions of
-    // copies of one boilerplate content must collapse map-side, not
-    // land in a single window task
+  test("incremental exact dedup: the batch keeper is one running-min window over content_hash; the batch is read once") {
+    // the keeper is a min(doc_id) window (ROWS unbounded preceding to
+    // current row) over the content_hash partition, not an aggregate
+    // joined back: the batch leaf appears once in the plan. A hot
+    // content group is held in the window's spillable buffer
+    // (IncrementalPipelineSpec pins 20,000 copies under a 64-row spill
+    // threshold)
     import spark.implicits._
     val batch = Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("doc_id", "text")
-    val index = graft.llm.IncrementalDedup.buildIndex(
-      Seq((0L, "c")).toDF("doc_id", "text"), "doc_id", "text")
+    val index = Seq(("c", 0L)).toDF("content_hash", "keep_id")
     val op = graft.llm.IncrementalDedup.classify(batch, index, "doc_id", "text")
       .queryExecution.optimizedPlan.toString
-    assert(!op.contains("windowspecdefinition"),
-      s"incremental dedup regressed to a window:\n$op")
-    assert(op.contains("Aggregate [content_hash#"),
-      s"expected groupBy(content_hash) keeper aggregate:\n$op")
+    val windowSpecs = op.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
+    assert(windowSpecs.size == 1 &&
+      windowSpecs.head.contains("windowspecdefinition(content_hash#") &&
+      windowSpecs.head.contains("specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())"),
+      s"expected one running-min window over content_hash:\n$op")
+    assert(!op.contains("Aggregate"), s"the keeper regressed to an aggregate:\n$op")
+    assert(op.linesIterator.count(_.contains("LocalRelation")) == 2,
+      s"the batch must be read once (plus the one index leaf):\n$op")
   }
 
   test("tfIdfTopTerms: document frequency is a keyed aggregate, never a term-partition window") {

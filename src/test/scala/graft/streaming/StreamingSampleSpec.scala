@@ -281,4 +281,28 @@ class StreamingSampleSpec extends AnyFunSuite {
       assert(e.getMessage.contains("weighted:n_chars"))
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
+
+  test("a merge into an existing table runs at most 3 jobs") {
+    val tbl = "graft_ssample_jobs"
+    val sc = spark.sparkContext
+    try {
+      val path = tmp(tbl)
+      StreamingSample.mergeBatch(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
+        "doc_id", "source", k = 5, salt = "ss", tbl, path)
+      val group = s"ssample-jobs-${java.util.UUID.randomUUID()}"
+      val log = new graft.JobLog
+      sc.addSparkListener(log)
+      try {
+        sc.setJobGroup(group, "StreamingSampleSpec merge")
+        try StreamingSample.mergeBatch(docs.filter(pmod(col("doc_id"), lit(2)) === 1),
+          "doc_id", "source", k = 5, salt = "ss", tbl, path)
+        finally sc.clearJobGroup()
+        log.settle()
+      } finally sc.removeSparkListener(log)
+      val jobs = log.jobs.filter(_.group.contains(group))
+      assert(jobs.size <= 3, jobs.mkString("\n"))
+      assert(rows(StreamingSample.sample(spark, tbl, 5, "ss")) ==
+        rows(Sampling.topKPerStratum(docs, "doc_id", "source", k = 5, salt = "ss")))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
 }
