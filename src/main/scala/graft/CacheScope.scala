@@ -6,19 +6,25 @@ import org.apache.spark.sql.DataFrame
  * Release handle for the intermediates graft operators persist.
  *
  * Several operators cache a shared intermediate for the lifetime of
- * their (lazy) returned plan — MinHash shingle/sketch caches, the
- * tf-idf term-frequency table, the bucketed as-of union — and before
- * this handle existed the only release path was the session-wide
+ * their (lazy) returned plan — the tf-idf term-frequency table, the
+ * bucketed as-of union, the training-set builder's gate stage and
+ * fuzzy-tier sketch, the batch sketch of
+ * [[graft.llm.IncrementalMinHash.classify]] — and before this handle
+ * existed the only release path was the session-wide
  * `spark.catalog.clearCache()`, which a long-lived multi-tenant
  * session cannot call without dropping every tenant's caches.
  *
- * Each caching operator takes a `scope: CacheScope = CacheScope.session`
- * parameter and registers everything it persists there. Callers that
- * want per-operator release pass their own scope, consume the result,
- * then `scope.release()`; callers that don't care inherit the session
- * scope and release everything graft persisted at once via
- * [[CacheScope.releaseSession]] — which, unlike `clearCache()`, never
- * touches caches the application persisted itself.
+ * A caching operator registers everything it persists in a scope:
+ * most take a `scope: CacheScope = CacheScope.session` parameter;
+ * `IncrementalMinHash.classify`/`classifyBanded` always use the
+ * session scope (their loop-shaped callers — the streaming sink and
+ * the maintaining builder — read the sketch from a checkpoint instead
+ * and persist nothing). Callers that want per-operator release pass
+ * their own scope, consume the result, then `scope.release()`; callers
+ * that don't care inherit the session scope and release everything
+ * graft persisted at once via [[CacheScope.releaseSession]] — which,
+ * unlike `clearCache()`, never touches caches the application
+ * persisted itself.
  *
  * Release is idempotent. For plain `persist` caches it is safe even
  * while downstream plans are unconsumed — Spark recomputes from

@@ -27,10 +27,15 @@ import org.apache.spark.sql.functions._
  * collect. Exhausting `maxRounds` without convergence THROWS rather
  * than returning partially-propagated cluster ids. Lineage is cut per
  * round with a LAZY localCheckpoint that the convergence probe's
- * action materializes — one job per round (the iterative-DataFrame
- * norm, same discipline as the reference-resolution fixpoint,
- * [[graft.sink.ReferenceResolution]]). At cluster scale each round is
- * fully partition-parallel over the edge and label sets.
+ * action materializes (the same discipline as the reference-resolution
+ * fixpoint, [[graft.sink.ReferenceResolution]]) — no separate
+ * checkpoint action, but not one job per round either: under AQE each
+ * shuffle-map stage of the round's plan runs as its own job.
+ * `graft.JobProfile pq23_dup_clusters` at sf0.1 measured 49 jobs: 9
+ * set-up jobs, then 5 rounds of 7–8 jobs each — 5–6 from materializing
+ * the round's checkpoint and 2 from the label-sum `head`. At cluster
+ * scale each round is fully partition-parallel over the edge and label
+ * sets.
  *
  * WHY NOT PROBE LESS OFTEN: a `probeEvery = 2` cadence (compose two
  * hop+jump rounds into one checkpointed plan, halving probe actions)
@@ -66,9 +71,10 @@ object DupClusters {
       .localCheckpoint(true) // scanned every round; compute the pair source once
     val edgesCk = graft.CacheScope.checkpointRdd(edges)
     // lazy checkpoints throughout the loop: the convergence probe
-    // (labelSum) is the action that materializes each round, so every
-    // round costs ONE job instead of checkpoint-then-sum's two — at
-    // bench scale the rounds are pure machinery and this halves it.
+    // (labelSum) is the action that materializes each round, so no
+    // round pays a separate checkpoint action. A round is still 7–8
+    // jobs at sf0.1 (pq23): 5–6 shuffle-map jobs that AQE submits while
+    // materializing the checkpoint, and 2 for the label-sum `head`.
     // Each round's checkpoint is released as the next materializes, so
     // the loop holds at most two label-table copies plus the edge set;
     // the survivors (edges + final labels) are released when they are:

@@ -75,52 +75,42 @@ object IncrementalDedup {
    */
   def classify(batch: DataFrame, index: DataFrame,
       idCol: String, textCol: String): DataFrame =
-    classifyCore(batch, index, idCol, textCol, keepText = false)
+    classifyWithText(batch, index, idCol, textCol).drop("text")
 
   /** [[classify]] with the batch's text column CARRIED THROUGH — the
     * [[IncrementalPipeline]] fold: the pipeline previously checkpointed
     * the gate/containment chain once for classify and AGAIN for the
     * kept-join that re-attached text; with text on the classified rows
     * one checkpoint serves both (kept = filter status = new, no join).
-    * Output (doc_id, text, content_hash, status, dup_of). Same plan as
-    * [[classify]]: text crosses the wire once, into the keeper
-    * window's content_hash exchange, exactly the once the old kept-join
-    * paid. */
+    * Output (doc_id, text, content_hash, status, dup_of). Text crosses
+    * the wire once, into the keeper window's content_hash exchange,
+    * exactly the once the old kept-join paid; [[classify]] drops it,
+    * and column pruning removes it below the window, so both entry
+    * points optimize to the same keeper plan. */
   private[llm] def classifyWithText(batch: DataFrame, index: DataFrame,
-      idCol: String, textCol: String): DataFrame =
-    classifyCore(batch, index, idCol, textCol, keepText = true)
-
-  /** The shared classify plan (the classifyBandedCore discipline: one
-    * core, a flag for the variant — the keeper/status logic must never
-    * fork between the public API and the pipeline twin). */
-  private def classifyCore(batch: DataFrame, index: DataFrame,
-      idCol: String, textCol: String, keepText: Boolean): DataFrame = {
-    val hashed = batch.select(
-      Seq(col(idCol).as("doc_id")) ++
-      (if (keepText) Seq(col(textCol).as("text")) else Nil) :+
-      // sentinel-normalized (see NullHash): null-text rows keep the
-      // one-output-row-per-input-row contract and dedup as one content,
-      // in-batch and across batches, through plain equi-joins
-      contentHash(col(textCol)).as("content_hash"): _*)
+      idCol: String, textCol: String): DataFrame = {
     val keeper = org.apache.spark.sql.expressions.Window
       .partitionBy("content_hash").orderBy(col("doc_id").asc_nulls_last)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    hashed
+    batch.select(col(idCol).as("doc_id"), col(textCol).as("text"),
+        // sentinel-normalized (see NullHash): null-text rows keep the
+        // one-output-row-per-input-row contract and dedup as one
+        // content, in-batch and across batches, through plain equi-joins
+        contentHash(col(textCol)).as("content_hash"))
       .withColumn("_batch_keep", min(col("doc_id")).over(keeper))
       .join(index.select(col("content_hash"), col("keep_id").as("_hist")),
         Seq("content_hash"), "left")
       .select(
-        Seq(col("doc_id")) ++
-        (if (keepText) Seq(col("text")) else Nil) ++
-        Seq(
-          col("content_hash"),
-          when(col("_hist").isNotNull, lit("dup_of_history"))
-            .when(col("doc_id") =!= col("_batch_keep"), lit("dup_in_batch"))
-            .otherwise(lit("new")).as("status"),
-          when(col("_hist").isNotNull, col("_hist"))
-            .when(col("doc_id") =!= col("_batch_keep"), col("_batch_keep"))
-            .as("dup_of")): _*)
+        col("doc_id"),
+        col("text"),
+        col("content_hash"),
+        when(col("_hist").isNotNull, lit("dup_of_history"))
+          .when(col("doc_id") =!= col("_batch_keep"), lit("dup_in_batch"))
+          .otherwise(lit("new")).as("status"),
+        when(col("_hist").isNotNull, col("_hist"))
+          .when(col("doc_id") =!= col("_batch_keep"), col("_batch_keep"))
+          .as("dup_of"))
   }
 
   /** The next run's index: history plus the batch's accepted keepers.
@@ -163,59 +153,38 @@ object IncrementalDedup {
  * (min matching smaller batch id), else `new`; `dup_of` = -1 for new
  * rows. Batch docs too short to shingle are `new` by construction.
  *
- * Scale shape: one typed sketch pass over the BATCH only
- * ([[MinHashSketch]], the per-row sketch [[MinHashNearDup]] computes
- * too); band explode joins are bucket-equality on (band index, band
- * key) — the index side shuffles its band rows, not history text;
- * estimate verification reads the signatures carried on the band rows.
- * [[classify]] persists the batch sketch, which feeds the plan's
- * branches (the history join, the in-batch [[BucketPairs]] pass and the
- * id spine); [[IncrementalPipeline]] instead sketches inside its
- * classify checkpoint ([[sketchTotal]]) and its branches read that
- * storage.
+ * One path for every caller: ONE sketch pass ([[sketchTotal]], one row
+ * per input row carrying the doc's sketch) and ONE classify plan
+ * ([[classifyBandedSketched]]), whose output keeps the sketched frame's
+ * columns — so the status and the sketch an accepted doc appends to the
+ * index ([[indexRows]]) come from the same row, and nothing is
+ * sketched twice. The plan reads the sketched frame on several
+ * branches (the candidate matches and the per-row spine they join back
+ * to), so each caller materializes it once: [[classifyBanded]] and the
+ * streaming sink as a lazy local checkpoint, [[Pipeline]] stage 6b as a
+ * persist in its scope, and [[IncrementalPipeline]] inside its classify
+ * checkpoint. Band explode joins are bucket-equality on
+ * (band index, band key) — the index side shuffles its band rows, not
+ * history text; estimate verification reads the signatures carried on
+ * the band rows.
  */
 object IncrementalMinHash {
 
-  /** Typed sketch pass: (_id, _sig, _bands) for rows with a non-null
-    * id and >= shingleN tokens; ids cast to long. */
-  private def sketch(df: DataFrame, idCol: String, textCol: String,
-      mh: MinHashSketch): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("_id", LongType, nullable = true),
-      StructField("_sig", ArrayType(StringType, containsNull = true), nullable = true),
-      StructField("_bands", ArrayType(StringType, containsNull = true), nullable = true)))
-    df.select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        rows.flatMap { r =>
-          val s = if (r.isNullAt(0)) null else mh(md, r.getString(1))
-          if (s == null) Iterator.empty
-          else Iterator.single(org.apache.spark.sql.Row(r.getLong(0), s._2, s._3))
-        }
-      }(org.apache.spark.sql.Encoders.row(schema))
-  }
-
-  /** The persisted index: (keep_id, sig, bands) per accepted doc. */
+  /** The persisted index: (keep_id, sig, bands) per doc that sketches —
+    * non-null id, >= shingleN tokens. A non-null id that is not a long
+    * fails ([[sketchTotal]]). */
   def buildIndex(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 9, bands: Int = 3): DataFrame =
-    sketch(df, idCol, textCol, MinHashSketch(shingleN, numHashes, bands))
-      .select(col("_id").as("keep_id"), col("_sig").as("sig"), col("_bands").as("bands"))
+    indexRows(sketchTotal(df.select(col(idCol), col(textCol)), idCol, textCol,
+      shingleN, numHashes, bands))
 
-  /** [[buildIndex]] over the batch rows `classified` marks `new` — the
-    * sketches the next run's index gains (recomputed on that small
-    * subset; the batch sketch cache is released by then). */
-  private[llm] def acceptedIndex(batch: DataFrame, classified: DataFrame,
-      idCol: String, textCol: String, shingleN: Int, numHashes: Int,
-      bands: Int): DataFrame = {
-    // fresh alias for the id: `classified.doc_id` would collide with a
-    // batch whose idCol is already named doc_id
-    val accepted = batch.join(
-      classified.filter(col("status") === "new")
-        .select(col("doc_id").as("_accepted_id")),
-      batch(idCol).cast("long") === col("_accepted_id")).drop("_accepted_id")
-    buildIndex(accepted, idCol, textCol, shingleN, numHashes, bands)
-  }
+  /** (keep_id, sig, bands) of the sketched rows of a [[sketchTotal]]
+    * frame — the rows an index gains from it. Rows with a null sketch
+    * (unsketched, or too short to shingle) add nothing. */
+  private[graft] def indexRows(sketched: DataFrame): DataFrame =
+    sketched.filter(col("_sig").isNotNull)
+      .select(col("_id").as("keep_id"), col("_sig").as("sig"),
+        col("_bands").as("bands"))
 
   /** Count of equal signature components — the MinHash Jaccard
     * estimator's numerator. */
@@ -237,8 +206,10 @@ object IncrementalMinHash {
         "rebuild it or pass the parameters it was built with"))))
 
   /**
-   * Classify `batch` against `index`. Output (doc_id, status, dup_of),
-   * dup_of = -1 for `new` rows.
+   * Classify `batch` against `index`. Output (doc_id long, status,
+   * dup_of), one row per distinct id, dup_of = -1 for `new` rows; a
+   * null id is one `new` row. A non-null id that is not a long fails
+   * ([[sketchTotal]]).
    *
    * The index must have been built with the SAME `numHashes`/`bands`
    * as this call: every index row's sketch widths are guarded inline
@@ -253,21 +224,20 @@ object IncrementalMinHash {
    * apply [[resolveKeepers]] to the classified batch (opt-in: the
    * chain hops cost extra joins the raw classification doesn't).
    *
-   * The batch sketch is cached for the duration of the (lazy) returned
-   * plan — it feeds several plan branches. Release it between batches
-   * via the `scope` handle (or [[graft.CacheScope.releaseSession]]).
+   * The batch sketch is materialized once for the (lazy) returned plan
+   * and registered in [[graft.CacheScope.session]] ([[classifyBanded]]);
+   * release it only after the result has been consumed.
    *
    * @param minMatch minimum equal signature components out of
    *                 `numHashes` (estimated Jaccard >= minMatch/numHashes)
    */
   def classify(batch: DataFrame, index: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3, numHashes: Int = 9,
-      bands: Int = 3, minMatch: Int = 5,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame =
+      bands: Int = 3, minMatch: Int = 5): DataFrame =
     classifyBanded(batch,
       bandedIndex(index.select(col("keep_id"),
         widthChecked(col("bands"), bands, "bands").as("bands"), col("sig"))),
-      idCol, textCol, shingleN, numHashes, bands, minMatch, scope)
+      idCol, textCol, shingleN, numHashes, bands, minMatch)
 
   /** An empty band-exploded index — [[classifyBanded]] against it is
     * pure in-batch near-dup semantics (the one-shot builder's stage
@@ -310,58 +280,65 @@ object IncrementalMinHash {
    * filter (assert_true) and a non-key projection (sig width), so the
    * scan's partitioning survives to the join.
    *
-   * A candidate pair matched by k bands is verified k times (k <=
-   * `bands`) instead of paying a distinct shuffle first; the min
-   * aggregate dedups.
+   * A thin wrapper over the one classify plan: it sketches the batch's
+   * (id, text) once, runs [[classifyBandedSketched]] and projects
+   * [[classify]]'s contract. The plan reads the sketch three times (the
+   * history candidates, the in-batch pairs and the spine), so the
+   * sketch is a LAZY local checkpoint, computed by the first action and
+   * registered in [[graft.CacheScope.session]]. Not a `persist`: under
+   * AQE every scan of a cached relation is a query stage with its own
+   * materialization job, while checkpoint reads are plain RDD reads.
+   * The checkpoint cuts lineage, so release the scope only after the
+   * result has been consumed.
    */
   def classifyBanded(batch: DataFrame, banded: DataFrame,
       idCol: String, textCol: String, shingleN: Int = 3, numHashes: Int = 9,
-      bands: Int = 3, minMatch: Int = 5,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
-    // the batch sketch (rows that CAN sketch only) feeds three plan
-    // branches — the history join, the in-batch pass and, through the
-    // distinct id spine, the one-row-per-id contract — so it persists
-    val bs = scope.track(sketch(batch, idCol, textCol,
-        MinHashSketch(shingleN, numHashes, bands))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val dups = matches(bs, banded, numHashes, bands, minMatch)
-    val spine = batch.select(col(idCol).cast("long").as("doc_id")).distinct()
-    spine.join(dups, spine("doc_id") === dups("_id"), "left")
-      .select(statusCols(spine("doc_id")): _*)
+      bands: Int = 3, minMatch: Int = 5): DataFrame = {
+    val sketched = sketchTotal(batch.select(col(idCol), col(textCol)), idCol,
+        textCol, shingleN, numHashes, bands)
+      .select(col("_id"), col("_sig"), col("_bands"))
+      .localCheckpoint(false)
+    graft.CacheScope.checkpointRdd(sketched).foreach(graft.CacheScope.session.track)
+    contractRows(classifyBandedSketched(sketched, banded, numHashes, bands,
+      minMatch))
   }
+
+  /** [[classify]]'s contract over [[classifyBandedSketched]] output:
+    * (doc_id long, status, dup_of), one row per distinct id — rows that
+    * share an id share its classification, so the distinct keeps one. */
+  private[graft] def contractRows(classified: DataFrame): DataFrame =
+    classified.select(col("_id").as("doc_id"), col("status"), col("dup_of"))
+      .distinct()
 
   /**
-   * [[classifyBanded]] over a [[sketchTotal]] frame, with each doc's
-   * sketch AND TEXT carried on the output — (doc_id, status, dup_of,
-   * <textCol>, _sig, _bands, _self_exact), where doc_id keeps the id
-   * column's ORIGINAL type, _sig/_bands are null for docs too short to
-   * shingle and _self_exact is 1 iff the doc's HISTORY match on its own
-   * id was signature-identical (all `numHashes` components equal). The
-   * sketched frame is its own spine (one row per input row, id and
-   * text aboard), so there is no distinct, no sketch re-join and no
-   * kept re-join. [[IncrementalPipeline]] computes the sketch inside
-   * its classify checkpoint, so every branch here reads checkpoint
-   * storage — no persist — and checkpoints the ACCEPTED rows directly;
-   * the maintainer then appends accepted sketches without
-   * re-tokenizing. The crash-replay self-match acceptance demands an
-   * IDENTICAL signature — a reused id carrying merely near-dup text
-   * never slips through as its own keeper. Rows whose _id is null
-   * (unsketched) are `new` with dup_of -1.
+   * The one classify plan, over a [[sketchTotal]] frame: the frame's
+   * columns plus (status, dup_of, _self_exact), one output row per
+   * input row. status/dup_of are per `_id` (rows sharing an id share
+   * them); rows with a null `_id` (unsketched) are `new` with dup_of -1.
+   * _self_exact is 1 iff the doc's HISTORY match on its own id was
+   * signature-identical (all `numHashes` components equal) — the
+   * crash-replay test [[IncrementalPipeline]] applies: a replayed batch
+   * re-sketches the same text, so all components are equal, while a
+   * reused id carrying merely near-dup text never slips through as its
+   * own keeper. The sketched frame is its own spine (id, sketch and any
+   * carried columns aboard), so there is no distinct, no sketch re-join
+   * and no re-join of the caller's rows.
    */
-  private[llm] def classifyBandedSketched(sketched: DataFrame,
-      banded: DataFrame, idCol: String, textCol: String, numHashes: Int = 9,
-      bands: Int = 3, minMatch: Int = 5): DataFrame = {
-    val bs = sketched.select(col(idCol).as("_oid"), col("_id"), col(textCol),
-      col("_sig"), col("_bands"))
-    val d = matches(bs, banded, numHashes, bands, minMatch)
+  private[graft] def classifyBandedSketched(sketched: DataFrame,
+      banded: DataFrame, numHashes: Int = 9, bands: Int = 3,
+      minMatch: Int = 5): DataFrame = {
+    val d = matches(sketched, banded, numHashes, bands, minMatch)
       .select(col("_id").as("_did"), col("_hist"), col("_prev"), col("_selfx"))
-    bs.join(d, bs("_id") === col("_did"), "left")
-      .select(statusCols(col("_oid").as("doc_id")) ++ Seq(
-        col(textCol), col("_sig"), col("_bands"),
-        coalesce(col("_selfx"), lit(0)).as("_self_exact")): _*)
+    sketched.join(d, sketched("_id") === col("_did"), "left")
+      .select(sketched("*"),
+        when(col("_hist").isNotNull, lit("dup_of_history"))
+          .when(col("_prev").isNotNull, lit("dup_in_batch"))
+          .otherwise(lit("new")).as("status"),
+        coalesce(col("_hist"), col("_prev"), lit(-1L)).as("dup_of"),
+        coalesce(col("_selfx"), lit(0)).as("_self_exact"))
   }
 
-  /** TOTAL sketch pass: `df`'s columns (text cast to string) plus
+  /** The one sketch pass: `df`'s columns (text cast to string) plus
     * (_id long, _sig, _bands) — one output row PER INPUT ROW, sketched
     * only where `where` holds; _id/_sig/_bands are null elsewhere, and
     * _sig/_bands also when the row cannot sketch (null id, null text,
@@ -369,23 +346,23 @@ object IncrementalMinHash {
     * makes the frame both the [[classifyBandedSketched]] spine and its
     * text source; [[IncrementalPipeline]] runs it over its exact
     * classification (`where` = status 'new') before checkpointing.
-    * `idName` names the id column in the non-long-id error (default
-    * `idCol`; the pipeline passes its caller's column name). */
-  private[llm] def sketchTotal(df: DataFrame, idCol: String, textCol: String,
+    * A non-null id that is not a long raises (inline, no extra job):
+    * cast to null it would sketch as unkeyed and classify `new`, or
+    * drop out of an index — silently bypassing the fuzzy gate. `idName`
+    * names the id column in that error (default `idCol`; the pipeline
+    * passes its caller's column name). */
+  private[graft] def sketchTotal(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 9, bands: Int = 3,
       where: Column = lit(true), idName: String = ""): DataFrame = {
     import org.apache.spark.sql.types._
     val mh = MinHashSketch(shingleN, numHashes, bands)
-    // a non-null id that is not a long would sketch as unkeyed and so
-    // always classify `new` — silently bypassing the fuzzy gate; raise
-    // instead (inline, like the index width guards: no extra job)
     val lid = col(idCol).try_cast("long")
     val in = df.select(df.columns.toSeq.map(c =>
         if (c == textCol) col(c).cast("string").as(c) else col(c)) :+
       when(!where, lit(null).cast("long"))
         .when(col(idCol).isNull || lid.isNotNull, lid)
         .otherwise(raise_error(lit(
-          s"IncrementalMinHash.classifyBanded: id column " +
+          s"IncrementalMinHash: id column " +
             s"'${if (idName.isEmpty) idCol else idName}' holds a " +
             "non-null value that is not a long — fuzzy dedup keys on long " +
             "ids; cast or remap the id column first"))).as("_id"): _*)
@@ -403,13 +380,6 @@ object IncrementalMinHash {
       }(org.apache.spark.sql.Encoders.row(schema))
   }
 
-  private def statusCols(id: Column): Seq[Column] = Seq(
-    id,
-    when(col("_hist").isNotNull, lit("dup_of_history"))
-      .when(col("_prev").isNotNull, lit("dup_in_batch"))
-      .otherwise(lit("new")).as("status"),
-    coalesce(col("_hist"), col("_prev"), lit(-1L)).as("dup_of"))
-
   /** Per sketched doc (`bs`: _id, _sig, _bands), its min verified
     * history keeper `_hist`, its min verified smaller batch id `_prev`,
     * and `_selfx` = 1 iff it matched its own id in history on every
@@ -422,8 +392,7 @@ object IncrementalMinHash {
     // paid a pair distinct plus TWO extra shuffles joining bs back per
     // side; verifying a pair once per matching band instead is free
     // under the min/max aggregates. (posexplode drops null-_bands rows,
-    // so the total sketch's unsketchable rows generate no candidates —
-    // the same rows the public sketch never emits.)
+    // so unsketched rows generate no candidates.)
     val bBand = bs.select(col("_id"), col("_sig"),
       posexplode(col("_bands")).as(Seq("_b", "_bk")))
     val hBand = banded
@@ -567,12 +536,4 @@ object IncrementalMinHash {
     curCk.foreach(scope.track)
     cur.drop("_resolved")
   }
-
-  /** The next run's index: history plus the sketches of the batch's
-    * accepted `new` rows ([[acceptedIndex]]). */
-  def mergeIndex(index: DataFrame, batch: DataFrame, classified: DataFrame,
-      idCol: String, textCol: String, shingleN: Int = 3, numHashes: Int = 9,
-      bands: Int = 3): DataFrame =
-    index.unionByName(acceptedIndex(batch, classified, idCol, textCol,
-      shingleN, numHashes, bands))
 }

@@ -339,13 +339,15 @@ object IncrementalPipeline {
         // keeps null ids out, as the old kept re-join did (cleanStage
         // drops them anyway).
         val fk = labeled(spark, "fuzzy kept ckpt") {
-          IncrementalMinHash.classifyBandedSketched(kept, banded, "doc_id",
-              "text", cfg.fuzzyNumHashes, cfg.fuzzyBands, cfg.fuzzyMinMatch)
+          IncrementalMinHash.classifyBandedSketched(
+              kept.select(col("doc_id"), col("text"), col("_id"), col("_sig"),
+                col("_bands")),
+              banded, cfg.fuzzyNumHashes, cfg.fuzzyBands, cfg.fuzzyMinMatch)
             .filter(col("doc_id").isNotNull && (col("status") === "new" ||
               (col("status") === "dup_of_history" &&
                 col("dup_of") === col("doc_id") && col("_self_exact") === 1)))
-            .select(col("doc_id").as(idCol), col("text"), col("status"),
-              col("_sig"), col("_bands"))
+            .select(col("doc_id").as(idCol), col("text"), col("_id"),
+              col("status"), col("_sig"), col("_bands"))
             .localCheckpoint(true)
         }
         Some((fk, fuzzyExists))
@@ -469,16 +471,12 @@ object IncrementalPipeline {
         // the checkpointed accepted frame carries each doc's
         // (status, sig, bands), so both arms write sketches directly —
         // no second tokenize/hash pass over the accepted docs' text
-        val cls = fk.select(col(idCol).as("doc_id"), col("status"),
-          col("_sig"), col("_bands"))
         if (existed)
-          IndexStore.appendMinhashSketched(cls, st.fuzzyTable,
+          IndexStore.appendMinhashSketched(fk, st.fuzzyTable,
             cfg.fuzzyShingleN, cfg.fuzzyNumHashes, cfg.fuzzyBands)
         else
           IndexStore.saveMinhash(
-            cls.filter(col("status") === "new" && col("_sig").isNotNull)
-              .select(col("doc_id").as("keep_id"), col("_sig").as("sig"),
-                col("_bands").as("bands")),
+            IncrementalMinHash.indexRows(fk.filter(col("status") === "new")),
             st.fuzzyTable, st.fuzzyPath, buckets, cfg.fuzzyShingleN,
             cfg.fuzzyNumHashes, cfg.fuzzyBands)
       }

@@ -171,7 +171,10 @@ object IndexStore {
 
   /** The banded index, parameter-checked against the table's stamped
     * sketch parameters, ready for [[IncrementalMinHash.classifyBanded]]
-    * — minus any pending [[tombstone]] ids (see [[exactIndex]]). */
+    * and the streaming sink's [[IncrementalMinHash.classifyBandedSketched]]
+    * — minus any pending [[tombstone]] ids (see [[exactIndex]]). Its rows
+    * come from [[saveMinhash]] and [[appendMinhashSketched]], which write
+    * the sketches the classification already carries. */
   def minhashIndex(spark: SparkSession, tableName: String,
       shingleN: Int = 3, numHashes: Int = 9, bands: Int = 3): DataFrame = {
     requireStamped(spark, tableName, minhashProps(shingleN, numHashes, bands))
@@ -179,34 +182,15 @@ object IndexStore {
   }
 
   /** O(batch) index maintenance for the sketch index: append the banded
-    * sketch rows of the batch's accepted `new` docs
-    * ([[IncrementalMinHash.acceptedIndex]], what
-    * [[IncrementalMinHash.mergeIndex]] unions in). */
-  def appendMinhashAccepted(batch: DataFrame, classified: DataFrame,
-      idCol: String, textCol: String, tableName: String,
-      shingleN: Int = 3, numHashes: Int = 9, bands: Int = 3): Unit = {
-    val spark = batch.sparkSession
-    val (buckets, keys) = bucketSpecOf(spark, tableName)
-    require(keys == Seq("band_idx", "band_key"),
-      s"$tableName is not a minhash index table (bucket keys $keys)")
-    // fail fast on parameter drift before any job runs
-    minhashIndex(spark, tableName, shingleN, numHashes, bands)
-    writeBucketed(
-      IncrementalMinHash.bandedIndex(IncrementalMinHash.acceptedIndex(
-        batch, classified, idCol, textCol, shingleN, numHashes, bands)),
-      tableName, tablePath(spark, tableName), buckets, keys, "append")
-  }
-
-  /** [[appendMinhashAccepted]] from a SKETCH-CARRYING classification
-    * ([[IncrementalMinHash.classifyBandedSketched]] output): the
-    * accepted `new` docs' signatures and band keys are already on the
-    * classified rows, so the append writes them directly instead of
-    * re-tokenizing and re-hashing the accepted docs — one projection +
-    * explode over a model-sized frame, no second sketch pass over the
-    * batch text (guide §1.2: don't compute things twice). Docs with a
-    * null sketch (too short to shingle) have nothing to append, exactly
-    * as [[IncrementalMinHash.buildIndex]] drops them. */
-  private[llm] def appendMinhashSketched(classified: DataFrame,
+    * sketch rows of a SKETCH-CARRYING classification's accepted `new`
+    * docs ([[IncrementalMinHash.classifyBandedSketched]] output, or any
+    * frame with its (_id, status, _sig, _bands) columns). The sketches
+    * ride on the classified rows, so the append writes them directly —
+    * one projection + explode, no second sketch pass over the batch
+    * text. Docs with a null sketch (too short to shingle) have nothing
+    * to append, exactly as [[IncrementalMinHash.buildIndex]] drops
+    * them. */
+  private[graft] def appendMinhashSketched(classified: DataFrame,
       tableName: String, shingleN: Int = 3, numHashes: Int = 9,
       bands: Int = 3): Unit = {
     val spark = classified.sparkSession
@@ -216,10 +200,8 @@ object IndexStore {
     // fail fast on parameter drift before any job runs
     requireStamped(spark, tableName, minhashProps(shingleN, numHashes, bands))
     writeBucketed(
-      IncrementalMinHash.bandedIndex(
-        classified.filter(col("status") === "new" && col("_sig").isNotNull)
-          .select(col("doc_id").as("keep_id"), col("_sig").as("sig"),
-            col("_bands").as("bands"))),
+      IncrementalMinHash.bandedIndex(IncrementalMinHash.indexRows(
+        classified.filter(col("status") === "new"))),
       tableName, tablePath(spark, tableName), buckets, keys, "append")
   }
 

@@ -184,8 +184,8 @@ object Pipeline {
     *                already keys).
     *
     * `cfg.fuzzyDedup` enables stage 6b — MinHash near-dup dedup AFTER
-    * exact dedup ([[IncrementalMinHash.classifyBanded]] against an
-    * empty history: in-batch semantics — a doc near-duplicating a
+    * exact dedup ([[IncrementalMinHash.classifyBandedSketched]] against
+    * an empty history: in-batch semantics — a doc near-duplicating a
     * smaller-id doc drops, `cfg.fuzzyMinMatch` of
     * `cfg.fuzzyNumHashes` signature components). Off ≡ today's chain
     * bit-for-bit.
@@ -253,16 +253,22 @@ object Pipeline {
     val deduped = semDecontaminated.join(keepers, idCol)
     // stage 6b: MinHash near-dup tier — classify against an EMPTY
     // history (in-batch semantics; the maintaining builder's persisted
-    // index is the same operator with history filled in)
+    // index is the same operator with history filled in). The sketch
+    // carries the doc's columns and the classify plan reads it on
+    // several branches, so it persists into `scope`; the kept docs are a
+    // filter over the classification, with no join back to `deduped`.
     val fuzzyDeduped =
       if (!cfg.fuzzyDedup) deduped
       else {
-        val cls = IncrementalMinHash.classifyBanded(deduped,
-          IncrementalMinHash.emptyBandedIndex(df.sparkSession), idCol, "text",
-          cfg.fuzzyShingleN, cfg.fuzzyNumHashes, cfg.fuzzyBands,
-          cfg.fuzzyMinMatch, scope = scope)
-        deduped.join(cls.filter(col("status") === "new")
-          .select(col("doc_id").as(idCol)), idCol)
+        val sketched = scope.track(
+          IncrementalMinHash.sketchTotal(deduped, idCol, "text",
+              cfg.fuzzyShingleN, cfg.fuzzyNumHashes, cfg.fuzzyBands)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        IncrementalMinHash.classifyBandedSketched(sketched,
+            IncrementalMinHash.emptyBandedIndex(df.sparkSession),
+            cfg.fuzzyNumHashes, cfg.fuzzyBands, cfg.fuzzyMinMatch)
+          .filter(col("status") === "new")
+          .select(deduped.columns.map(c => col(c)): _*)
       }
     val sampled = Sampling.hashSample(fuzzyDeduped, idCol, cfg.sampleRate, cfg.salt)
     Packing.packSequences(sampled, idCol, "text", cfg.targetTokens, cfg.shards,

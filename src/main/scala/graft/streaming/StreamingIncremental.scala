@@ -164,22 +164,30 @@ object StreamingIncremental {
   /**
    * The near-dup sibling of [[sinkExact]]: classify each micro-batch
    * against the bucketed MinHash band-index table
-   * ([[graft.llm.IncrementalMinHash.classifyBanded]] — candidates by
+   * ([[graft.llm.IncrementalMinHash.classifyBandedSketched]] over the
+   * batch's [[graft.llm.IncrementalMinHash.sketchTotal]] — candidates by
    * band-key equality, verified by the signature-match estimate),
    * append the accepted docs' banded sketch rows O(batch), and run
    * maintenance on cadence. Sketch parameters must match the table's
    * stamped properties — drift fails fast before any job runs
    * (the [[graft.llm.IndexStore.minhashIndex]] guard).
    *
+   * The sketch-carrying classification is checkpointed once per
+   * micro-batch: `onBatch` gets its (doc_id long, status, dup_of)
+   * projection — [[graft.llm.IncrementalMinHash.classify]]'s contract,
+   * one row per distinct id — and the append writes the sketches it
+   * carries, so each doc is sketched once. Nothing outlives the batch
+   * but that checkpoint (as in [[sinkExact]], Spark's context cleaner
+   * frees its blocks once the micro-batch's frames are unreachable); the
+   * batch sketch's own checkpoint is dropped as soon as the
+   * classification's is taken.
+   *
    * Replay convergence holds here too: a re-delivered accepted doc
    * finds its own banded sketch in the table (all bands equal, match
    * count = numHashes ≥ minMatch), classifies `dup_of_history`, and
-   * appends nothing. The per-batch sketch cache classifyBanded persists
-   * is scoped to the batch and released once the classified result is
-   * checkpointed — a long-running stream holds no cross-batch cache.
-   * Restart self-healing ([[graft.llm.IndexStore.recover]] first thing
-   * every batch) and the `retractions` takedown feed work exactly as on
-   * [[sinkExact]].
+   * appends nothing. Restart self-healing
+   * ([[graft.llm.IndexStore.recover]] first thing every batch) and the
+   * `retractions` takedown feed work exactly as on [[sinkExact]].
    */
   def sinkMinhash(stream: DataFrame, idCol: String, textCol: String,
       tableName: String, onBatch: (DataFrame, Long) => Unit = (_, _) => (),
@@ -198,16 +206,25 @@ object StreamingIncremental {
         else IndexStore.retract(spark, tableName, ids, graceMs = graceMs)
         ()
       }
-      val scope = new graft.CacheScope
-      try {
-        val classified = IncrementalMinHash.classifyBanded(batch,
-          IndexStore.minhashIndex(spark, tableName, shingleN, numHashes, bands),
-          idCol, textCol, shingleN, numHashes, bands, minMatch, scope)
+      // the classify plan reads the sketch on several branches: a lazy
+      // checkpoint computes it once, and is dropped once the
+      // classification (which carries the sketches on) is checkpointed
+      val sketched = IncrementalMinHash.sketchTotal(
+          batch.select(col(idCol), col(textCol)), idCol, textCol, shingleN,
+          numHashes, bands)
+        .localCheckpoint(false)
+      val classified =
+        try IncrementalMinHash.classifyBandedSketched(sketched,
+            IndexStore.minhashIndex(spark, tableName, shingleN, numHashes, bands),
+            numHashes, bands, minMatch)
+          .select(col("_id"), col("status"), col("dup_of"), col("_sig"),
+            col("_bands"))
           .localCheckpoint(true)
-        onBatch(classified, batchId)
-        IndexStore.appendMinhashAccepted(batch, classified, idCol, textCol,
-          tableName, shingleN, numHashes, bands)
-      } finally scope.release()
+        finally graft.CacheScope.checkpointRdd(sketched)
+          .foreach(_.unpersist(blocking = false))
+      onBatch(IncrementalMinHash.contractRows(classified), batchId)
+      IndexStore.appendMinhashSketched(classified, tableName, shingleN,
+        numHashes, bands)
       if (maintainEvery > 0 && batches.incrementAndGet() % maintainEvery == 0) {
         IndexStore.maintain(spark, tableName, maxFilesPerBucket,
           rebucketTo = rebucketTo, graceMs = graceMs)

@@ -76,7 +76,7 @@ class ClassifyExchangeSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val cls = IncrementalMinHash.classifyBandedSketched(
       IncrementalMinHash.sketchTotal(batch, "doc_id", "text"),
-      IncrementalMinHash.emptyBandedIndex(s2), "doc_id", "text")
+      IncrementalMinHash.emptyBandedIndex(s2))
     val crossings = textExchanges(cls)
     assert(crossings.size <= 1,
       s"batch text crosses ${crossings.size} exchanges (expected <= 1):\n" +

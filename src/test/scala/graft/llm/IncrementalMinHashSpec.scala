@@ -36,6 +36,49 @@ class IncrementalMinHashSpec extends AnyFunSuite {
       (21L, "too short"))) // < shingleN tokens: no sketch, cannot be a dup
     assert(got(20L) == ("dup_of_history", 2L))
     assert(got(21L) == ("new", -1L))
+    // the output contract: one row per DISTINCT id — a duplicated id is
+    // one row with its shared status, the null id is one `new` row
+    val index = IncrementalMinHash.buildIndex(history, "doc_id", "text")
+    val fresh = "entirely fresh words nothing shared with the indexed corpus here"
+    val rows = IncrementalMinHash.classify(Seq[(java.lang.Long, String)](
+        (20L, "pack my box with five dozen liquor jugs for the long trip"),
+        (20L, "pack my box with five dozen liquor jugs for the long trip"),
+        (null, fresh), (null, "too short"), (21L, "too short"), (22L, fresh))
+      .toDF("doc_id", "text"), index, "doc_id", "text").collect()
+      .map(r => (Option(r.get(0)), r.getString(1), r.getLong(2))).toSeq
+    assert(rows.sortBy(_._1.map(_.toString)) == Seq(
+      (None, "new", -1L),
+      (Some(20L), "dup_of_history", 2L),
+      (Some(21L), "new", -1L),
+      (Some(22L), "new", -1L)))
+  }
+
+  test("a non-numeric id fails classify and buildIndex with the id-column message, ANSI on or off") {
+    // cast to null (a non-ANSI session's cast), "doc-x" would classify
+    // `new` however close it is to history, and drop out of an index
+    def messages(run: => Unit): Seq[String] = {
+      val ex = intercept[Exception](run)
+      Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).take(8)
+        .map(e => String.valueOf(e.getMessage)).toSeq
+    }
+    for (ansi <- Seq("true", "false")) {
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.ansi.enabled", ansi)
+      import s2.implicits._
+      val bad = Seq(
+        ("40", "entirely fresh words nothing shared with the indexed corpus here"),
+        ("doc-x", "the quick brown fox jumps over the lazy dog again and again"))
+        .toDF("doc_id", "text")
+      val index = IncrementalMinHash.buildIndex(
+        s2.createDataFrame(history.collect().toSeq.map(r => (r.getLong(0), r.getString(1))))
+          .toDF("doc_id", "text"), "doc_id", "text")
+      Seq(
+        messages(IncrementalMinHash.classify(bad, index, "doc_id", "text").collect()),
+        messages(IncrementalMinHash.buildIndex(bad, "doc_id", "text").collect())
+      ).foreach(m => assert(
+        m.exists(_.contains("id column 'doc_id' holds a non-null value that is not a long")),
+        s"ansi=$ansi: " + m.mkString("\n")))
+    }
   }
 
   test("history precedence beats in-batch: a copy of history with a smaller batch twin") {
@@ -77,14 +120,17 @@ class IncrementalMinHashSpec extends AnyFunSuite {
     assert(run(rows.toDF("doc_id", "text").coalesce(1)) == base)
   }
 
-  test("mergeIndex folds accepted new rows in: re-running the batch flips new to dup_of_history") {
+  test("the accepted rows' carried sketches fold into the index: re-running the batch flips new to dup_of_history") {
     val index = IncrementalMinHash.buildIndex(history, "doc_id", "text")
     val batch = Seq(
       (40L, "entirely fresh words nothing shared with the indexed corpus here"),
       (41L, "the quick brown fox jumps over the lazy dog again and again extra"))
       .toDF("doc_id", "text")
-    val first = IncrementalMinHash.classify(batch, index, "doc_id", "text")
-    val merged = IncrementalMinHash.mergeIndex(index, batch, first, "doc_id", "text")
+    val first = IncrementalMinHash.classifyBandedSketched(
+      IncrementalMinHash.sketchTotal(batch, "doc_id", "text"),
+      IncrementalMinHash.bandedIndex(index))
+    val merged = index.unionByName(
+      IncrementalMinHash.indexRows(first.filter($"status" === "new")))
     // only the accepted `new` row joined the index (the history near-dup
     // must not: its content is already represented by keeper 1)
     assert(merged.count() == history.count() + 1)

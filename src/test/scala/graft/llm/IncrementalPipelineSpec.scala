@@ -412,8 +412,7 @@ class IncrementalPipelineSpec extends AnyFunSuite {
       // signature-identical arm is pinned directly on the classifier
       val banded = IndexStore.minhashIndex(spark, state.fuzzyTable)
       val cls = IncrementalMinHash.classifyBandedSketched(
-        IncrementalMinHash.sketchTotal(b1, "doc_id", "text"), banded,
-        "doc_id", "text")
+        IncrementalMinHash.sketchTotal(b1, "doc_id", "text"), banded)
       val r = cls.collect().head
       assert(r.getAs[String]("status") == "dup_of_history" &&
         r.getAs[Long]("dup_of") == 1L &&

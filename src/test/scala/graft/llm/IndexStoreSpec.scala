@@ -431,11 +431,11 @@ class IndexStoreSpec extends AnyFunSuite {
         tbl, tmpPath(tbl), buckets = 8)
       val batch = d.filter(col("doc_id") % 3 === 0)
         .select((col("doc_id") + 100000).as("doc_id"), col("text"))
-      IndexStore.appendMinhashAccepted(batch,
-        IncrementalMinHash.classifyBanded(batch,
-          IndexStore.minhashIndex(s2, tbl), "doc_id", "text")
-          .localCheckpoint(true),
-        "doc_id", "text", tbl)
+      IndexStore.appendMinhashSketched(
+        IncrementalMinHash.classifyBandedSketched(
+          IncrementalMinHash.sketchTotal(batch, "doc_id", "text"),
+          IndexStore.minhashIndex(s2, tbl)).localCheckpoint(true),
+        tbl)
       val before = sortedRows(IndexStore.minhashIndex(s2, tbl))
       assert(IndexStore.maintain(s2, tbl, maxFilesPerBucket = 1,
         Some(tmpPath(tbl + "_v2"))))
@@ -481,7 +481,7 @@ class IndexStoreSpec extends AnyFunSuite {
     } finally s2.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
-  test("minhash index: append law — appended accepted docs reproduce mergeIndex's banded rows; compaction carries the sketch properties") {
+  test("minhash index: append law — appended accepted docs reproduce the banded rows of history ∪ buildIndex(accepted); compaction carries the sketch properties") {
     val s2 = planSession(buckets = 8)
     val d = s2.read.parquet(s"$dir/documents.parquet")
     val history = d.filter(col("doc_id") % 2 === 0)
@@ -492,15 +492,26 @@ class IndexStoreSpec extends AnyFunSuite {
     val tbl2 = "graft_idx_mh_compacted"
     try {
       IndexStore.saveMinhash(initial, tbl, tmpPath(tbl), buckets = 8)
-      val classified = IncrementalMinHash.classifyBanded(
-        batch, IndexStore.minhashIndex(s2, tbl), "doc_id", "text")
+      // the sketch-carrying classification: the append writes the
+      // sketches it carries, never re-sketching the batch
+      val classified = IncrementalMinHash.classifyBandedSketched(
+          IncrementalMinHash.sketchTotal(batch, "doc_id", "text"),
+          IndexStore.minhashIndex(s2, tbl))
         .localCheckpoint(true)
-      IndexStore.appendMinhashAccepted(batch, classified, "doc_id", "text", tbl)
+      val accepted = classified.filter(col("status") === "new")
+        .select(col("doc_id"), col("text"))
+      assert(accepted.count() > 0 &&
+        classified.filter(col("status") =!= "new").count() > 0,
+        "the batch must mix accepted and dropped docs")
+      IndexStore.appendMinhashSketched(classified, tbl)
       val appended = sortedRows(IndexStore.minhashIndex(s2, tbl))
-      val merged = sortedRows(IncrementalMinHash.bandedIndex(
-        IncrementalMinHash.mergeIndex(initial, batch, classified, "doc_id", "text")))
-      assert(appended == merged,
-        "O(batch) banded append diverged from mergeIndex's banded rows")
+      // the O(corpus) rebuild it must equal: history plus the accepted
+      // docs' sketches, computed from their text
+      val rebuilt = sortedRows(IncrementalMinHash.bandedIndex(
+        initial.unionByName(
+          IncrementalMinHash.buildIndex(accepted, "doc_id", "text"))))
+      assert(appended == rebuilt,
+        "O(batch) banded append diverged from the rebuilt index's banded rows")
       IndexStore.compactMinhash(s2, tbl, tbl2, tmpPath(tbl2), buckets = 8)
       assert(sortedRows(IndexStore.minhashIndex(s2, tbl2)) == appended)
       // properties survived compaction: a drifted call still fails fast

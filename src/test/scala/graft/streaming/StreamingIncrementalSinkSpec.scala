@@ -309,6 +309,50 @@ class StreamingIncrementalSinkSpec extends AnyFunSuite {
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 
+  test("sinkMinhash: a non-numeric id fails the micro-batch with the id-column message and appends nothing") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    // ANSI off: the session whose plain cast turns "doc-x" into a null id
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.ansi.enabled", "false")
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s2.sqlContext
+    import s2.implicits._
+
+    val tbl = "graft_stream_sink_mh_badid"
+    val histText = "the quick brown fox jumps over the lazy dog again"
+    try {
+      IndexStore.saveMinhash(
+        graft.llm.IncrementalMinHash.buildIndex(
+          Seq((10L, histText)).toDF("doc_id", "text"), "doc_id", "text"),
+        tbl,
+        Files.createTempDirectory("graft_sink_mh_badid").resolve(tbl).toString,
+        buckets = 1)
+      val seen = new java.util.concurrent.atomic.AtomicLong(0L)
+      val input = MemoryStream[(String, String)]
+      val q = StreamingIncremental.sinkMinhash(
+        input.toDF().toDF("doc_id", "text"), "doc_id", "text", tbl,
+        (c: DataFrame, _: Long) => { seen.addAndGet(c.count()); () },
+        maintainEvery = 0)
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft_sink_mh_badid_chk").toString)
+        .start()
+      // "doc-x" copies history: cast to null it would classify `new`
+      input.addData(("2", "completely different words fill this other document"),
+        ("doc-x", histText))
+      val ex = intercept[Exception](q.processAllAvailable())
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+        .takeWhile(_ != null).take(10).map(e => String.valueOf(e.getMessage)).toSeq
+      assert(msgs.exists(_.contains(
+        "id column 'doc_id' holds a non-null value that is not a long")),
+        msgs.mkString("\n"))
+      q.stop()
+      assert(seen.get == 0L, "onBatch must not see a failed micro-batch")
+      s2.catalog.refreshTable(tbl)
+      assert(IndexStore.minhashIndex(s2, tbl).select("keep_id").distinct()
+        .collect().map(_.getLong(0)).toSet == Set(10L),
+        "a failed micro-batch must append nothing")
+    } finally s2.sql(s"DROP TABLE IF EXISTS $tbl")
+  }
+
   test("sinkCoded: batches append into cells, replays and duplicates don't double-index, compaction on cadence, retraction feed composes, search stays exact") {
     import graft.llm.{Clustering, ProductQuant}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
