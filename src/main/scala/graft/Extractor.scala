@@ -18,7 +18,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *     -> `_display` derived columns from the harmony display map
  *     -> group_by nesting or embed join, per the table's TableType
  *
- * The display map is collected once per harmony file set, not once per
+ * The display map is derived once per harmony file set, not once per
  * table: tables that share a `code_harmonization` share its map.
  *
  * Plan-level pruning: inactive tables simply never build a sub-plan
@@ -32,15 +32,15 @@ object Extractor {
    * Build the extracted DataFrame per active table. `dataDir` prefixes
    * relative file names from the config (the reference resolves paths
    * against the project root). `harmony` holds already-read harmony
-   * frames keyed by their `code_harmonization` value; a file set without
-   * one is read here.
+   * mappings keyed by their `code_harmonization` value; a file set
+   * without one is read here.
    */
   def extract(
       spark: SparkSession,
       config: StudyConfig,
       dd: Option[DdStudy] = None,
       dataDir: String = "",
-      harmony: Map[String, DataFrame] = Map.empty): Map[String, DataFrame] = {
+      harmony: Map[String, Harmony.Mappings] = Map.empty): Map[String, DataFrame] = {
 
     def resolvePaths(filenames: String): Seq[String] =
       CsvSource.fileList(filenames).map { f =>

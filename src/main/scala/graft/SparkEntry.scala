@@ -602,7 +602,9 @@ object SparkEntry {
     // VQ-21b: harmony target-group last-wins polarity
     // (conceptmap.py:119-127 `targets`): duplicate (system, code) pairs
     // keep the LAST row's display (firstWins dedup, by contrast, keeps
-    // the first) and groups list codes in surviving-row order.
+    // the first) and groups list codes in first-occurrence order. The
+    // mapping is collected to the driver, as a harmony file set is, and
+    // the groups come back as a local relation.
     Query("vq21b_harmony_lastwins", (s, dir) => {
       val m = t(s, dir, "customer").select(
         lit("t").as("table_name"),
@@ -610,10 +612,12 @@ object SparkEntry {
         col("c_nationkey").cast("string").as("code"),
         concat(lit("d"), col("c_custkey")).as("display"),
         col("c_custkey").as(Restructure.RowId))
-      graft.harmony.Harmony.targetCodeGroups(m)
-        .select(col("system"), posexplode(col("codes")).as(Seq("pos", "c")))
-        .select(col("system"), col("pos"),
-          col("c.code").as("code"), col("c.display").as("display"))
+      val rows = graft.harmony.Harmony.targetCodeGroups(graft.harmony.Harmony.collect(m, Nil))
+        .flatMap(g => g.codes.zipWithIndex.map { case ((code, display), pos) =>
+          org.apache.spark.sql.Row(g.system, pos, code, display) })
+      s.createDataFrame(java.util.Arrays.asList(rows: _*),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "system STRING, pos INT, code STRING, display STRING"))
     }, oracle =
       """WITH m AS (SELECT c_mktsegment AS system,
         |                  CAST(c_nationkey AS VARCHAR) AS code,

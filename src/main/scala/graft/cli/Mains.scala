@@ -165,7 +165,8 @@ object PlayMain {
    *  QuestionnaireResponses (ref: sourcedata/obscomp.py + questionnaire.py
    *  — the buildsrcobs/buildsrcqr scripts `play` chains). The harmony
    *  sets come from the result, or are read once here when it carries
-   *  none; the codings lookup is collected once for every builder. */
+   *  none; the codings lookup and the DD metadata derive from them on
+   *  the driver. */
   def studyResources(spark: SparkSession, config: StudyConfig,
       result: Play.RunResult, dataDir: String): DataFrame = {
     val study = Projection.StudyInfo(config.studyId, config.identifierPrefix, config.publisher)

@@ -47,7 +47,7 @@ object BuildCmMain {
               throw new java.nio.file.NoSuchFileException(csv)
             val namePrefix = Paths.get(csv).getFileName.toString.split("\\.").head
             val groups = Harmony.conceptMapGroups(Harmony.read(spark, Seq(csv)), curies)
-            val json = Harmony.conceptMapJson(groups, namePrefix)
+            val json = Harmony.conceptMapJson(spark, groups, namePrefix)
             val out = csv.replaceAll("\\.[^./\\\\]*$", "") + ".json"
             println(s"Writing Harmony ConceptMap: $out")
             Files.write(Paths.get(out), json.getBytes(StandardCharsets.UTF_8))

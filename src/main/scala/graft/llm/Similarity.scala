@@ -25,7 +25,7 @@ import org.apache.spark.storage.StorageLevel
  *
  * Execution shape: quantization/norms and the per-pair dot products run
  * in typed `mapPartitions` stages (plain `while` loops over the long
- * arrays). The declarative forms ([[quantize]]/[[dot]]/[[norm2]]) are
+ * arrays). The declarative forms ([[quantize]]/[[dot]]) are
  * Column expressions; the pair hot loop does not use them (the fold form
  * of `dot` evaluates interpreted, measured ~10x slower), and tests pin
  * the typed twins against them.
@@ -62,9 +62,6 @@ object Similarity {
     ColumnBridge.column(graft.plans.LongArrayDot(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
   }
-
-  /** Squared L2 norm (exact BIGINT) of a quantized vector. */
-  def norm2(v: Column): Column = dot(v, v)
 
   /** Cosine similarity of quantized vectors given precomputed norms. */
   def cosine(dotCol: Column, n2a: Column, n2b: Column): Column =

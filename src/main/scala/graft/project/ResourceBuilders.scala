@@ -1,11 +1,15 @@
 package graft.project
 
 import graft.functions.WhistlerFunctions._
+import graft.harmony.Harmony
 import graft.model.{DdStudy, DdTable, DdType}
 import graft.project.Projection.StudyInfo
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /**
  * DD-catalog-driven resource builders — the replacement for the
@@ -34,21 +38,19 @@ object ResourceBuilders {
    *  joins (see [[observations]]). */
   private[graft] val MaxLiteralValueCodes = 1024
 
-  /** A harmony codings lookup (`Harmony.codingsLookup` shape) and its one
-   *  driver-side collect: system -> code -> RAW codings (self rows
-   *  included — callers filter). The collect runs on first use and serves
-   *  every builder handed this value; the lookup is mapping-dimension-
-   *  sized by contract. */
-  final case class CodingsLookup(frame: DataFrame) {
-    lazy val bySystem: Map[String, Map[String, Seq[(String, String, String)]]] =
-      frame.select(col("system"), col("code"), col("codings"))
-        .collect()
-        .groupBy(_.getString(0))
-        .map { case (sys, rows) =>
-          sys -> rows.map(r => r.getString(1) ->
-            r.getSeq[Row](2).map(c => (c.getString(0), c.getString(1), c.getString(2))).toSeq)
-            .toMap
-        }
+  /** A harmony codings lookup ([[graft.harmony.Harmony.codingsLookup]]):
+   *  system -> code -> RAW codings (self rows included — callers filter),
+   *  derived on the driver from the harmony value and shared by every
+   *  builder handed it. */
+  final case class CodingsLookup(bySystem: Map[String, Map[String, Seq[(String, String, String)]]]) {
+    /** The lookup as a (code, system, codings) frame over a local
+     *  relation, for the broadcast-join fallback. */
+    def frame(spark: SparkSession): DataFrame = {
+      val rows = for ((system, codes) <- bySystem.toSeq; (code, cs) <- codes.toSeq)
+        yield Row(code, system, cs.map { case (c, d, s) => Row(c, d, s) })
+      spark.createDataFrame(rows.asJava,
+        StructType.fromDDL(s"code STRING, system STRING, codings $CodingType"))
+    }
   }
 
   /** Driver-side twin of `nonSelfOnly` (same filter as
@@ -129,8 +131,7 @@ object ResourceBuilders {
           v.values.map(e => Row(e.code, e.description))))
       tableEntry +: varEntries
     }
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(entries, math.max(1, entries.size / 256)), entrySchema)
+    val df = spark.createDataFrame(entries.asJava, entrySchema)
 
     val termId = when(col("varname").isNotNull,
       buildVariableTerminologyId(lit(study.id), col("table_name"), col("varname")))
@@ -249,7 +250,7 @@ object ResourceBuilders {
     val joined = harmonyLookup match {
       case Some(lookup) if !useLiteralValueCodings =>
         enumVars.foldLeft(data) { (df, v) =>
-          harmonize(df, lookup.frame, v.fieldName, v.varName, s"_h_${v.fieldName}")
+          harmonize(df, lookup.frame(data.sparkSession), v.fieldName, v.varName, s"_h_${v.fieldName}")
         }
       case _ => data
     }
@@ -386,19 +387,19 @@ object ResourceBuilders {
 
   /**
    * The ValueSet over one side of the harmony ConceptMap: one
-   * compose.include per code group (system + concepts). `vsName` is
-   * `sources` or `targets` (ref: wlib_dd_conceptmap.wstl:89-91
-   * ProcessDDHarmony emits both). Module `harmony`.
+   * compose.include per code group (system + concepts), in group order.
+   * `vsName` is `sources` or `targets` (ref: wlib_dd_conceptmap.wstl:89-91
+   * ProcessDDHarmony emits both). Module `harmony`. The groups come from
+   * the driver as a one-row local relation, so collecting the resource
+   * runs no Spark job.
    */
-  def harmonyValueSet(codeGroups: DataFrame, study: StudyInfo, vsName: String,
-      urlBase: String = graft.model.Dd.SystemBase): DataFrame = {
+  def harmonyValueSet(spark: SparkSession, codeGroups: Seq[Harmony.CodeGroup], study: StudyInfo,
+      vsName: String, urlBase: String = graft.model.Dd.SystemBase): DataFrame = {
     val idValue = s"${study.id}.cm-valueset.$vsName"
-    val one = codeGroups
-      .agg(array_sort(collect_list(struct(col("_gord"),
-        struct(col("system").as("system"),
-          expr("transform(codes, c -> struct(c.code as code, c.display as display))")
-            .as("concept")).as("i")))).as("_is"))
-      .withColumn("_include", expr("transform(_is, x -> x.i)"))
+    val include = codeGroups.sortBy(_.order).map(g =>
+      Row(g.system, g.codes.map { case (code, display) => Row(code, display) }))
+    val one = spark.createDataFrame(java.util.List.of(Row(include)), StructType.fromDDL(
+      "_include array<struct<system:string,concept:array<struct<code:string,display:string>>>>"))
     val resource = struct(
       lit("ValueSet").as("resourceType"),
       metaTag(study).as("meta"),
@@ -451,17 +452,18 @@ object ResourceBuilders {
 
   /**
    * The study's harmony ConceptMap as a FHIR resource: all
-   * [[graft.harmony.Harmony.conceptMapGroups]] rows aggregated into one
-   * `group` array (dimension-sized), with the study identifier, purpose,
-   * and the IG-style data-to-public URL. Module `harmony`.
+   * [[graft.harmony.Harmony.conceptMapGroups]] in one `group` array, with
+   * the study identifier, purpose, and the IG-style data-to-public URL.
+   * Module `harmony`. Groups order by first row; a row's target and self
+   * groups tie there (same row, same source) and order by target, as
+   * Spark compares strings. The groups come from the driver as a one-row
+   * local relation, so collecting the resource runs no Spark job.
    */
-  def harmonyConceptMap(groups: DataFrame, study: StudyInfo,
+  def harmonyConceptMap(spark: SparkSession, groups: Seq[Harmony.Group], study: StudyInfo,
       urlBase: String = graft.model.Dd.SystemBase): DataFrame = {
     val idValue = s"${study.id}.concept-map"
-    val one = groups
-      .agg(array_sort(collect_list(struct(col("_gord"),
-        struct(col("source"), col("target"), col("element")).as("g")))).as("_gs"))
-      .withColumn("group", expr("transform(_gs, x -> x.g)"))
+    val one = Harmony.groupsFrame(spark,
+      groups.sortBy(g => (g.order, UTF8String.fromString(g.target))))
     val resource = struct(
       lit("ConceptMap").as("resourceType"),
       metaTag(study).as("meta"),
@@ -556,7 +558,7 @@ object ResourceBuilders {
     val joined = harmonyLookup match {
       case Some(lookup) if !useLiteralValueCodings =>
         enumVars.foldLeft(data) { (df, v) =>
-          harmonize(df, lookup.frame, v.fieldName, v.varName, s"_qh_${v.fieldName}")
+          harmonize(df, lookup.frame(data.sparkSession), v.fieldName, v.varName, s"_qh_${v.fieldName}")
         }
       case _ => data
     }

@@ -57,15 +57,15 @@ class EndToEndSpec extends AnyFunSuite {
 
     // 2. projections: patients + per-row observations + QRs + dd metadata
     val study = Projection.StudyInfo("E2E", "https://e2e")
-    val lookup = Harmony.codingsLookup(
-      Harmony.read(spark, Seq(dir.resolve("harmony.csv").toString)))
+    val lookup = ResourceBuilders.CodingsLookup(Harmony.codingsLookup(
+      Harmony.read(spark, Seq(dir.resolve("harmony.csv").toString))))
     val ddTable = run.ddStudy.table("demographics").get
     val patients = Projection.participant(
-      demo.withColumnRenamed("subject_id", "participant_id"), study, lookup,
+      demo.withColumnRenamed("subject_id", "participant_id"), study, lookup.frame(spark),
       sexCol = "sex", raceCol = "sex", ethnicityCol = "sex") // no race/eth cols in fixture
       .drop()
-    val observations = ResourceBuilders.observations(demo, study, ddTable, Some(ResourceBuilders.CodingsLookup(lookup)))
-    val qrs = ResourceBuilders.questionnaireResponses(demo, study, ddTable, Some(ResourceBuilders.CodingsLookup(lookup)))
+    val observations = ResourceBuilders.observations(demo, study, ddTable, Some(lookup))
+    val qrs = ResourceBuilders.questionnaireResponses(demo, study, ddTable, Some(lookup))
     val ddmeta = Play.ddMetaResources(spark, config, run.ddStudy, dir.toString)
     val resources = Seq(patients, observations, qrs, ddmeta).reduce(_ unionByName _)
 

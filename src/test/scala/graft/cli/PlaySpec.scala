@@ -69,17 +69,88 @@ class PlaySpec extends AnyFunSuite {
     assert(forced.whistleInputPath.isDefined)
   }
 
-  test("Play.run: every extracted table and harmony set reads from a checkpoint") {
+  /** Query executions over a CSV relation named `file` while `body` runs
+   *  (header inference reads go through the text source, not CSV), and
+   *  the jobs it ran. */
+  private def traced[A](file: String)(body: => A): (A, Int, Seq[graft.JobLog.Job]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+    val scans = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.collectLeaves().exists {
+              case l: LogicalRelation => l.relation match {
+                case h: HadoopFsRelation => h.fileFormat.isInstanceOf[CSVFileFormat] &&
+                  h.location.rootPaths.exists(_.getName == file)
+                case _ => false
+              }
+              case _ => false
+            }) scans.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val log = new graft.JobLog
+    spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(log)
+    try {
+      val a = body
+      log.settle()
+      (a, scans.get, log.jobs)
+    } finally {
+      spark.sparkContext.removeSparkListener(log)
+      spark.listenerManager.unregister(listener)
+    }
+  }
+
+  test("Play.run: one read per harmony set; only a written document checkpoints") {
     val (dir, configJson) = fixture()
     val config = ConfigReader.fromJson(configJson)
-    val result = Play.run(spark, config, dir.toString,
-      Files.createTempDirectory("graft-play-ckpt").toString)
+    val outDir = Files.createTempDirectory("graft-play-ckpt").toString
     def fromCheckpoint(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.analyzed.collectLeaves().forall(
         _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
-    assert(result.extracted.nonEmpty && result.extracted.values.forall(fromCheckpoint))
-    assert(result.harmony.map(_.spec) == Seq("harmony.csv"))
-    assert(result.harmony.forall(h => fromCheckpoint(h.frame)))
+    val (written, writtenScans, _) = traced("harmony.csv")(Play.run(spark, config, dir.toString, outDir))
+    assert(written.whistleInputPath.isDefined)
+    assert(written.extracted.nonEmpty && written.extracted.values.forall(fromCheckpoint))
+    assert(written.harmony.map(_.spec) == Seq("harmony.csv"))
+    assert(written.harmony.head.mappings.rows.map(_.localCode) == Seq("M", "F"))
+    assert(writtenScans == 1)
+    // an up-to-date document: the tables come back as plans, and no
+    // checkpoint job runs for tables nothing reads
+    val (fresh, freshScans, jobs) = traced("harmony.csv")(Play.run(spark, config, dir.toString, outDir))
+    assert(fresh.whistleInputPath.isEmpty)
+    assert(fresh.extracted.nonEmpty && !fresh.extracted.values.exists(fromCheckpoint))
+    assert(freshScans == 1)
+    assert(!jobs.exists(_.desc.contains("localCheckpoint at Play.scala")), jobs.map(_.desc))
+  }
+
+  test("Play.run: a harmony set over the row bound fails naming its files, no task left") {
+    val (dir, configJson) = fixture()
+    val config = ConfigReader.fromJson(configJson)
+    val outDir = Files.createTempDirectory("graft-play-bound").toString
+    val err = intercept[IllegalArgumentException](Play.run(spark, config, dir.toString, outDir,
+      force = false, extraDeps = Nil, maxHarmonyRows = 1))
+    assert(err.getMessage.contains(dir.resolve("harmony.csv").toString), err.getMessage)
+    assert(graft.DriverPool.unfinishedTasks == 0)
+    // the fixture's two rows are at a bound of two
+    assert(Play.run(spark, config, dir.toString, outDir,
+      force = false, extraDeps = Nil, maxHarmonyRows = 2).harmony.head.mappings.rows.length == 2)
+  }
+
+  test("given the harmony sets, the ConceptMap build runs no job and the DD metadata one") {
+    val (dir, configJson) = fixture()
+    val config = ConfigReader.fromJson(configJson)
+    val harmony = Play.readHarmony(spark, config, dir.toString)
+    val dd = Play.loadDdCatalog(spark, config, dir.toString)
+    val outDir = Files.createTempDirectory("graft-play-jobs").toString
+    val (paths, _, cmJobs) = traced("harmony.csv")(
+      Play.buildConceptMaps(spark, config, dir.toString, outDir, harmony))
+    assert(paths.length == 1 && cmJobs.isEmpty, cmJobs.map(_.desc))
+    val (meta, _, metaJobs) = traced("harmony.csv")(
+      Play.ddMetaResources(spark, config, dd, dir.toString, harmony).collect())
+    assert(meta.map(_.getString(1)).toSet == Set("CodeSystem", "ValueSet",
+      "ObservationDefinition", "ActivityDefinition", "ConceptMap"))
+    assert(metaJobs.length <= 1, metaJobs.map(_.desc))
   }
 
   test("Play.run: a harmony file missing a column fails with today's message, no task left") {
@@ -164,7 +235,7 @@ class PlaySpec extends AnyFunSuite {
     val (dir, _) = fixture()
     val groups = Harmony.conceptMapGroups(
       Harmony.read(spark, Seq(dir.resolve("harmony.csv").toString)))
-    val out = ResourceBuilders.harmonyConceptMap(groups,
+    val out = ResourceBuilders.harmonyConceptMap(spark, groups,
       Projection.StudyInfo("PFIX", "https://pfix")).collect()
     assert(out.length == 1)
     val j = out.head.getString(3)

@@ -142,7 +142,8 @@ class ProjectionSpec extends AnyFunSuite {
         Row("SUB1", "M", "White", "Hispanic"),
         Row("SUB2", "F", "NA", null),
         Row("SUB3", ".", null, null)))
-    val lookup = Harmony.codingsLookup(Harmony.read(spark, Seq(harmonyFixture())))
+    val lookup = ResourceBuilders.CodingsLookup(
+      Harmony.codingsLookup(Harmony.read(spark, Seq(harmonyFixture())))).frame(spark)
     val out = Projection.participant(subjects,
       Projection.StudyInfo("STUDY1", "https://mystudy"), lookup)
       .orderBy("id").collect()
