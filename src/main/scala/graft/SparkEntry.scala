@@ -699,7 +699,7 @@ object SparkEntry {
     // event ids, same ts), so the one key carries ~5M rows at sf0.1.
     // Here the plain variant's single window task is the serial
     // bottleneck and the bucketed carry's constant overhead (two
-    // buckets-sized shuffles + the union persist) buys ~bucket-count-way
+    // buckets-sized shuffles) buys ~bucket-count-way
     // parallelism: the A/B pair demonstrates the CROSSOVER the
     // vq26b/26c floor-scale pair prices from the other side.
     Query("vq26d_asof_hot_plain_amp", (s, dir) =>
@@ -752,12 +752,7 @@ object SparkEntry {
       .select(lit(0).as("g"), col("ts"), col("ts").as("ref_ts"), col("ref_value"))
     val joined =
       if (bucketed) AsOfJoin.bucketed(clicks, purchases, Seq("g"), "ts",
-        Seq("ref_ts", "ref_value"), bucketSeconds = 3600L,
-        // both inputs are narrow projections of one pruned parquet scan:
-        // re-reading them per branch beats materializing a rows-sized
-        // cache (the amplified fixture is exactly the case the
-        // cacheUnion scaladoc describes)
-        cacheUnion = false)
+        Seq("ref_ts", "ref_value"), bucketSeconds = 3600L)
       else AsOfJoin(clicks, purchases, Seq("g"), "ts", Seq("ref_ts", "ref_value"))
     joined.select(col("event_id"), col("ts"),
       coalesce(col("ref_ts"), to_timestamp(lit("1970-01-01"))).as("ref_ts"),

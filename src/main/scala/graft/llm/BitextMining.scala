@@ -101,9 +101,9 @@ object BitextMining {
       .filter(col("margin").isNotNull)
     val w = Window.partitionBy("qid").orderBy(col("margin").desc, col("cid"))
     // materialize the (≤ |src|-row) result off the fwd checkpoint, then
-    // release fwd's |src|·k blocks — the GraphRank discipline: without
-    // the release every call pins its candidate frame in the block
-    // manager for the session's lifetime
+    // release fwd's |src|·k blocks: without the release every call pins
+    // its candidate frame in the block manager for the session's
+    // lifetime
     val result = scored
       .withColumn("_rk", row_number().over(w))
       .filter(col("_rk") === 1 &&
@@ -111,8 +111,7 @@ object BitextMining {
       .select(col("qid"), col("cid"), col("cos"),
         round(col("margin"), 6).as("margin"))
       .localCheckpoint(true)
-    graft.CacheScope.checkpointRdd(fwd)
-      .foreach(_.unpersist(blocking = false))
+    graft.CacheScope.release(fwd)
     result.transform(Presented(_, ordered, "qid"))
   }
 }

@@ -1,7 +1,5 @@
 package graft.llm
 
-import graft.CacheScope
-
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -29,10 +27,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
  *     and filters to the budget inside the partition.
  * Both passes stream; per-partition state is O(1).
  *
- * The sorted relation is persisted (and registered with `scope`)
- * before the first pass: range repartitioning SAMPLES its split
- * points, so an unpinned plan could re-sample different bounds between
- * the totals pass and the emit pass and mis-assign offsets — the
+ * The sorted relation is persisted (and registered with
+ * [[graft.CacheScope.track]]) before the first pass: range
+ * repartitioning SAMPLES its split points, so an unpinned plan could
+ * re-sample different bounds between the totals pass and the emit
+ * pass and mis-assign offsets — the
  * persist is a CORRECTNESS pin, not a performance cache (the split
  * points may vary run to run, but the row ORDER never does, so the
  * result is deterministic either way). At corpus scale the sorted,
@@ -45,11 +44,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 object BudgetSelect {
 
   def takeUntilBudget(df: DataFrame, idCol: String, scoreCol: String,
-      weightCol: String, budget: Long,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      weightCol: String, budget: Long): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
     val spark = df.sparkSession
-    val sorted = scope.track(df
+    val sorted = graft.CacheScope.track(df
       .filter(col(idCol).isNotNull && col(scoreCol).isNotNull &&
         col(weightCol).isNotNull)
       .select(col(idCol), col(scoreCol),

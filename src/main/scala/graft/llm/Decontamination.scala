@@ -240,9 +240,9 @@ object Decontamination {
       if (spark.catalog.tableExists(matchedTable))
         spark.table(matchedTable)
       else hits.limit(0)
-    // lazy checkpoint + count = one materializing job (the DupClusters
-    // discipline); the append below then reads checkpoint storage, not
-    // the table it writes
+    // lazy checkpoint + count = one materializing job
+    // (CacheScope.checkpointCount); the append below then reads
+    // checkpoint storage, not the table it writes
     val newly = hits.join(existing, Seq("_id", "_sh"), "left_anti")
       .localCheckpoint(false)
     val n = graft.CacheScope.checkpointCount(newly)
@@ -259,7 +259,7 @@ object Decontamination {
     }
     // the checkpoint served the append — release it, or a long-running
     // audit loop pins one eval-bounded block set per batch
-    graft.CacheScope.checkpointRdd(newly).foreach(_.unpersist(blocking = false))
+    graft.CacheScope.release(newly)
     n
   }
 
@@ -276,8 +276,7 @@ object Decontamination {
         .localCheckpoint(true) // the swap replaces the data this reads
       try { SwapTable.upsert(folded, matchedTable, matchedPath,
         graceMs = graceMs); () }
-      finally graft.CacheScope.checkpointRdd(folded)
-        .foreach(_.unpersist(blocking = false))
+      finally graft.CacheScope.release(folded)
     }
 
   /**

@@ -154,14 +154,13 @@ object NgramJaccard {
       threshold: Double = 0.6,
       maxDf: Int = 1000,
       broadcastSizes: Boolean = true,
-      ordered: Boolean = true,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+      ordered: Boolean = true): DataFrame = {
     // the shared typed inverted-index pass (TextOps.shingleIndex):
     // tokenize -> distinct shingle set -> (id, fnv64(shingle)) rows.
     // Persisted: inv appears twice in rare's own plan (join probe side +
     // df-count agg side are DIFFERENT exchanges, so reuse never applies)
     // — without the cache the tokenize/shingle scan runs twice
-    val inv = scope.track(TextOps.shingleIndex(df, idCol, textCol, shingleN)
+    val inv = graft.CacheScope.track(TextOps.shingleIndex(df, idCol, textCol, shingleN)
       .persist(StorageLevel.MEMORY_AND_DISK))
 
     // rare-shingle index via the INVERTED cut: df counts are one hash

@@ -25,12 +25,12 @@ import org.apache.spark.sql.functions._
  * wrong). Labels are min-monotone, so convergence is detected by the
  * label sum going stable — one O(1)-row action per round, never a data
  * collect. Exhausting `maxRounds` without convergence THROWS rather
- * than returning partially-propagated cluster ids. Lineage is cut per
- * round with a LAZY localCheckpoint that the convergence probe's
- * action materializes (the same discipline as the reference-resolution
- * fixpoint, [[graft.sink.ReferenceResolution]]) — no separate
- * checkpoint action, but not one job per round either: under AQE each
- * shuffle-map stage of the round's plan runs as its own job.
+ * than returning partially-propagated cluster ids. The rounds run on
+ * [[graft.CacheScope.rounds]]: lineage is cut per round with a LAZY
+ * localCheckpoint that the convergence probe's action materializes —
+ * no separate checkpoint action, but not one job per round either:
+ * under AQE each shuffle-map stage of the round's plan runs as its own
+ * job.
  * `graft.JobProfile pq23_dup_clusters` at sf0.1 measured 49 jobs: 9
  * set-up jobs, then 5 rounds of 7–8 jobs each — 5–6 from materializing
  * the round's checkpoint and 2 from the label-sum `head`. At cluster
@@ -57,8 +57,7 @@ import org.apache.spark.sql.functions._
 object DupClusters {
 
   def apply(pairs: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int = 20,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+      maxRounds: Int = 20): DataFrame = {
     val e = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
     // NOT pre-partitioned by dst, deliberately: a repartition(dst)
     // before the checkpoint was built and A/B-measured this round —
@@ -69,33 +68,29 @@ object DupClusters {
     val edges = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint(true) // scanned every round; compute the pair source once
-    val edgesCk = graft.CacheScope.checkpointRdd(edges)
-    // lazy checkpoints throughout the loop: the convergence probe
-    // (labelSum) is the action that materializes each round, so no
-    // round pays a separate checkpoint action. A round is still 7–8
-    // jobs at sf0.1 (pq23): 5–6 shuffle-map jobs that AQE submits while
-    // materializing the checkpoint, and 2 for the label-sum `head`.
-    // Each round's checkpoint is released as the next materializes, so
-    // the loop holds at most two label-table copies plus the edge set;
-    // the survivors (edges + final labels) are released when they are:
-    // edges as soon as the loop exits, the returned labels via `scope`.
-    var labels = edges.select(col("src").as("doc_id")).distinct()
+    // lazy checkpoints throughout the loop (graft.CacheScope.rounds):
+    // the convergence probe (labelSum) is the action that materializes
+    // each round, so no round pays a separate checkpoint action. A
+    // round is still 7–8 jobs at sf0.1 (pq23): 5–6 shuffle-map jobs
+    // that AQE submits while materializing the checkpoint, and 2 for
+    // the label-sum `head`. The loop holds at most two label-table
+    // copies plus the edge set; the edges are released as soon as the
+    // loop exits, the returned labels with the session.
+    val labels = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster_id", col("doc_id"))
       .localCheckpoint(false)
-    var labelsCk = graft.CacheScope.checkpointRdd(labels)
     // decimal sum: overflow-safe convergence witness for 64-bit ids
     // (null on an empty graph — an empty pair set converges immediately)
     def labelSum(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("cluster_id").cast("decimal(38,0)"))).head().getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)
     var prev = labelSum(labels)
-    var rounds = 0
-    var converged = labels.isEmpty
     try {
-      while (!converged && rounds < maxRounds) {
-        val nbr = edges.join(labels, edges("dst") === labels("doc_id"))
-          .select(edges("src").as("doc_id"), labels("cluster_id"))
-        val hop = labels.unionByName(nbr)
+      if (labels.isEmpty) graft.CacheScope.track(labels)
+      else graft.CacheScope.rounds(labels, maxRounds, "DupClusters") { cur =>
+        val nbr = edges.join(cur, edges("dst") === cur("doc_id"))
+          .select(edges("src").as("doc_id"), cur("cluster_id"))
+        val hop = cur.unionByName(nbr)
           .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
         // pointer jump: label <- label(label). Every label is a node id
         // (mins over node ids), so the self-join resolves for every row;
@@ -103,29 +98,17 @@ object DupClusters {
         // is <= the child's (min-monotone with self included), so the
         // jump only ever improves.
         val parent = hop.select(col("doc_id").as("_pid"), col("cluster_id").as("_plbl"))
-        val next = hop.join(parent, hop("cluster_id") === parent("_pid"), "left")
+        hop.join(parent, hop("cluster_id") === parent("_pid"), "left")
           .select(hop("doc_id"),
             coalesce(col("_plbl"), hop("cluster_id")).as("cluster_id"))
-          .localCheckpoint(false)
-        val nextCk = graft.CacheScope.checkpointRdd(next)
-        val cur = labelSum(next) // materializes next's checkpoint
-        labelsCk.foreach(_.unpersist(blocking = false))
-        labelsCk = nextCk
-        converged = cur.compareTo(prev) == 0
+      } { next =>
+        // the label sum stops falling exactly when no label moved
+        val cur = labelSum(next)
+        val stable = cur.compareTo(prev) == 0
         prev = cur
-        labels = next
-        rounds += 1
+        stable
       }
-    } finally edgesCk.foreach(_.unpersist(blocking = false))
-    if (!converged) {
-      labelsCk.foreach(_.unpersist(blocking = false))
-      throw new IllegalStateException(
-        s"DupClusters did not converge within maxRounds=$maxRounds: the label " +
-          "sum was still falling, so cluster_ids would be partially propagated " +
-          "(wrong). Rounds scale with log(component diameter) — raise maxRounds.")
-    }
-    labelsCk.foreach(scope.track)
-    labels
+    } finally graft.CacheScope.release(edges)
   }
 
   /**

@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
  * node-spine join; ranks/degrees are node-sized, edges never
  * materialize to the driver; the dangling mass is a one-double
  * aggregate. Lineage is cut with an eager localCheckpoint per
- * iteration (the [[DupClusters]] iterative-DataFrame discipline), so
- * plans stay constant-depth however many iterations run. Fixed
+ * iteration, released through [[graft.CacheScope.release]] once the
+ * next supersedes it, so plans stay constant-depth however many
+ * iterations run. A plain loop, not [[graft.CacheScope.rounds]]: fixed
  * iteration count by design — convergence detection is a sum probe
  * the caller can layer on; data pipelines run a fixed small budget.
  *
@@ -102,13 +103,8 @@ object GraphRank {
     // all checkpoints are released on exit (and each iteration's ranks
     // as soon as the next supersedes it) — an iters=20 run must not pin
     // 20 node-sized RDDs in the block manager for the session's life
-    val scope = new graft.CacheScope
-    def tracked(df: DataFrame): DataFrame = {
-      // checkpoint storage is released via the backing RDD —
-      // DataFrame.unpersist only targets catalog-cached plans
-      graft.CacheScope.checkpointRdd(df).foreach(scope.track)
-      df
-    }
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def tracked(df: DataFrame): DataFrame = { held += df; df }
     try {
       val e = tracked((weightCol match {
         case Some(wc) => edges
@@ -170,18 +166,16 @@ object GraphRank {
               lit(damping) * (coalesce(col("_s"), lit(0.0)) +
                 lit(dangling / n))).as("_r"))
           .localCheckpoint(true)
-        graft.CacheScope.checkpointRdd(ranks)
-          .foreach(_.unpersist(blocking = false))
+        graft.CacheScope.release(ranks)
         ranks = next
       }
       // materialize the (tiny) result off the final checkpoint so the
-      // scope release below can't pull blocks out from under a consumer
+      // release below can't pull blocks out from under a consumer
       val outRows = ranks
         .select(col("_id").as("id"), round(col("_r"), 6).as("rank"))
         .localCheckpoint(true)
-      graft.CacheScope.checkpointRdd(ranks)
-        .foreach(_.unpersist(blocking = false))
+      graft.CacheScope.release(ranks)
       outRows.transform(Presented(_, ordered, "id"))
-    } finally scope.release()
+    } finally graft.CacheScope.release(held.toSeq: _*)
   }
 }

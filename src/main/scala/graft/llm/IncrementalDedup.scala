@@ -161,12 +161,11 @@ object IncrementalDedup {
  * sketched twice. The plan reads the sketched frame on several
  * branches (the candidate matches and the per-row spine they join back
  * to), so each caller materializes it once: [[classifyBanded]] and the
- * streaming sink as a lazy local checkpoint, [[Pipeline]] stage 6b as a
- * persist in its scope, and [[IncrementalPipeline]] inside its classify
- * checkpoint. Band explode joins are bucket-equality on
- * (band index, band key) — the index side shuffles its band rows, not
- * history text; estimate verification reads the signatures carried on
- * the band rows.
+ * streaming sink and [[Pipeline]] stage 6b as a lazy local checkpoint,
+ * and [[IncrementalPipeline]] inside its classify checkpoint. Band
+ * explode joins are bucket-equality on (band index, band key) — the
+ * index side shuffles its band rows, not history text; estimate
+ * verification reads the signatures carried on the band rows.
  */
 object IncrementalMinHash {
 
@@ -225,7 +224,7 @@ object IncrementalMinHash {
    * chain hops cost extra joins the raw classification doesn't).
    *
    * The batch sketch is materialized once for the (lazy) returned plan
-   * and registered in [[graft.CacheScope.session]] ([[classifyBanded]]);
+   * and registered with [[graft.CacheScope.track]] ([[classifyBanded]]);
    * release it only after the result has been consumed.
    *
    * @param minMatch minimum equal signature components out of
@@ -285,10 +284,10 @@ object IncrementalMinHash {
    * [[classify]]'s contract. The plan reads the sketch three times (the
    * history candidates, the in-batch pairs and the spine), so the
    * sketch is a LAZY local checkpoint, computed by the first action and
-   * registered in [[graft.CacheScope.session]]. Not a `persist`: under
+   * registered with [[graft.CacheScope.track]]. Not a `persist`: under
    * AQE every scan of a cached relation is a query stage with its own
    * materialization job, while checkpoint reads are plain RDD reads.
-   * The checkpoint cuts lineage, so release the scope only after the
+   * The checkpoint cuts lineage, so release the session only after the
    * result has been consumed.
    */
   def classifyBanded(batch: DataFrame, banded: DataFrame,
@@ -298,7 +297,7 @@ object IncrementalMinHash {
         textCol, shingleN, numHashes, bands)
       .select(col("_id"), col("_sig"), col("_bands"))
       .localCheckpoint(false)
-    graft.CacheScope.checkpointRdd(sketched).foreach(graft.CacheScope.session.track)
+    graft.CacheScope.track(sketched)
     contractRows(classifyBandedSketched(sketched, banded, numHashes, bands,
       minMatch))
   }
@@ -480,32 +479,26 @@ object IncrementalMinHash {
    * target is always a smaller batch id), so the loop terminates in at
    * most the longest chain's length; each round is one equi-join of the
    * batch against its own (id -> status, dup_of) map plus an O(1)-row
-   * convergence count, with a lazy localCheckpoint cutting plan growth
-   * (the [[DupClusters]] discipline). Each round's checkpoint is
-   * released as soon as the next round's materializes — a deep chain
-   * holds at most TWO batch-sized copies, not rounds x; the final
-   * round's (which backs the returned DataFrame) is registered with
-   * `scope`. History keeper ids are final by construction, and a
+   * convergence count, on [[graft.CacheScope.rounds]] (the
+   * [[DupClusters]] loop): each round's lazy checkpoint is released as
+   * soon as the next round's materializes — a deep chain holds at most
+   * TWO batch-sized copies, not rounds x; the final round's (which
+   * backs the returned DataFrame) is registered with the session.
+   * History keeper ids are final by construction, and a
    * `_resolved` flag pins them so a history id that collides with a
    * batch id is never re-chased.
    *
    * @param maxRounds hard cap on chain hops; exceeding it throws
    *                  rather than returning partially resolved refs
    */
-  def resolveKeepers(classified: DataFrame, maxRounds: Int = 20,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+  def resolveKeepers(classified: DataFrame, maxRounds: Int = 20): DataFrame = {
     val targets = classified.select(
       col("doc_id").as("_tid"), col("status").as("_tstatus"),
       col("dup_of").as("_tdup"))
-    var cur = classified
+    val init = classified
       .withColumn("_resolved", col("status") =!= "dup_in_batch")
-    // the storage behind cur's checkpoint, once cur IS a checkpoint —
-    // never the caller's own plan (round 0 tracks None)
-    var curCk: Option[org.apache.spark.rdd.RDD[_]] = None
-    var round = 0
-    var done = false
-    while (!done) {
-      val hopped = cur
+    graft.CacheScope.rounds(init, maxRounds, "resolveKeepers") { cur =>
+      cur
         .join(targets, col("dup_of") === col("_tid") && !col("_resolved"), "left")
         .select(
           col("doc_id"), col("status"),
@@ -516,24 +509,8 @@ object IncrementalMinHash {
           // dup_in_batch row: its dup_of is again batch-local
           (col("_resolved") || col("_tstatus").isNull ||
             col("_tstatus") =!= "dup_in_batch").as("_resolved"))
-        .localCheckpoint(false)
-      val hoppedCk = graft.CacheScope.checkpointRdd(hopped)
-      // the convergence probe materializes hopped's checkpoint (the lazy
-      // checkpoint completes its missing partitions at job end), after
-      // which the PREVIOUS round's storage is unreachable — release it
-      val unresolved = hopped.filter(!col("_resolved")).limit(1).count()
-      curCk.foreach(_.unpersist(blocking = false))
-      curCk = hoppedCk
-      cur = hopped
-      done = unresolved == 0L
-      round += 1
-      if (!done && round >= maxRounds) {
-        curCk.foreach(_.unpersist(blocking = false))
-        sys.error(s"resolveKeepers did not converge in $maxRounds rounds " +
-          "— chain longer than the cap; raise maxRounds")
-      }
-    }
-    curCk.foreach(scope.track)
-    cur.drop("_resolved")
+    } { hopped =>
+      hopped.filter(!col("_resolved")).limit(1).count() == 0L
+    }.drop("_resolved")
   }
 }

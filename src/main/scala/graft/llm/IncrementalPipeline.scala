@@ -86,19 +86,15 @@ object IncrementalPipeline {
   private val ShardsKey = "graft.pipeline.shards"
 
   /** Release the block-manager storage behind a [[processBatch]]
-    * emission once it has been consumed. The returned frame is a
-    * localCheckpoint materialized before return (its batch-sized
-    * blocks stay pinned in the block manager until released); a loop feeding thousands of
-    * batches through one session must call this per batch after
-    * writing/collecting the spans — or route everything through one
-    * [[graft.CacheScope]] — or storage grows by one emission per call.
-    * (Bench/Verify inherit the session scope and are cleaned between
-    * queries; a library user looping batches owns this call.) Safe to
-    * call twice; after release the frame recomputes from nothing — do
-    * not read it again. */
-  def releaseEmission(spans: DataFrame): Unit =
-    graft.CacheScope.checkpointRdd(spans)
-      .foreach(_.unpersist(blocking = false))
+    * emission once it has been consumed, through
+    * [[graft.CacheScope.release]]. The returned frame is a
+    * localCheckpoint materialized before return (its batch-sized blocks
+    * stay pinned in the block manager until released); a loop feeding
+    * thousands of batches through one session must call this per batch
+    * after writing/collecting the spans, or storage grows by one
+    * emission per call. Safe to call twice; after release the frame
+    * recomputes from nothing — do not read it again. */
+  def releaseEmission(spans: DataFrame): Unit = graft.CacheScope.release(spans)
 
   /** The state locations, derived from one (name, path) root:
     * keeper index, eval-shingle index, matched-shingle ledger,
@@ -504,12 +500,10 @@ object IncrementalPipeline {
     }
     // release the per-batch checkpoints (spans — the returned frame —
     // keeps its own); a long batch loop must not pin one batch-sized
-    // RDD pair per call in the block manager
-    ((if (needSampled) Seq(sampled) else Nil) ++
-        Seq(classified) ++
-        fuzzyState.toSeq.map { case (fk, _) => fk })
-      .flatMap(graft.CacheScope.checkpointRdd)
-      .foreach(_.unpersist(blocking = false))
+    // RDD pair per call in the block manager (`sampled` is a plain
+    // filter, which release skips, when no side artifact reads it)
+    graft.CacheScope.release(
+      (Seq(sampled, classified) ++ fuzzyState.map(_._1)): _*)
     spans
   }
 

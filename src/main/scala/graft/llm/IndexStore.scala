@@ -845,7 +845,6 @@ object IndexStore {
       .join(spark.table(tableName).select(col(idCol)).distinct(),
         Seq(idCol), "left_semi")
       .localCheckpoint(true)
-    val ck = graft.CacheScope.checkpointRdd(live)
     try {
       val centroids = Clustering.train(live, idCol, vecCol, newNlist,
         kmeansIters, sampleN).centroids
@@ -870,7 +869,7 @@ object IndexStore {
       // wrong AND incomplete — drop it (probeCodedByIds rebuilds)
       dropIdmap(spark, tableName)
       (centroids, model)
-    } finally ck.foreach(_.unpersist(blocking = false))
+    } finally graft.CacheScope.release(live)
   }
 
   // ------------------------------------------------------------------

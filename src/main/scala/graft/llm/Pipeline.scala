@@ -190,20 +190,15 @@ object Pipeline {
     * `cfg.fuzzyNumHashes` signature components). Off ≡ today's chain
     * bit-for-bit.
     *
-    * @param scope RETENTION: the gate-stage output (and the fuzzy
-    *              tier's sketch cache) is persisted MEMORY_AND_DISK
-    *              into this scope and stays pinned until the scope is
-    *              released. The default session scope is released by
-    *              Bench/Verify between queries; a library caller
-    *              looping builds must pass its own scope and release
-    *              it (or call [[graft.CacheScope.releaseSession]])
-    *              after consuming the result, or storage grows by one
-    *              corpus-sized cache per call. */
+    * Retention: the gate-stage output (a MEMORY_AND_DISK persist) and
+    * the fuzzy tier's sketch (a lazy local checkpoint) stay pinned
+    * until [[graft.CacheScope.releaseSession]]; a library caller
+    * looping builds calls it after consuming each result, or storage
+    * grows by one corpus-sized cache per call. */
   def buildTrainingSet(df: DataFrame, idCol: String, textCol: String,
       cfg: Config = Config(),
       evalSet: Option[DataFrame] = None,
-      semantic: Option[Semantic] = None,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+      semantic: Option[Semantic] = None): DataFrame = {
     if (evalSet.isDefined) requireDecontamThreshold(cfg)
     // The gate-stage output feeds AT LEAST two plan branches (the
     // dedup keeper aggregate and the spine it joins back to) and Spark
@@ -212,9 +207,8 @@ object Pipeline {
     // classifier fold) runs 3-5x per action (guide §1.2/§5: cache
     // exactly the reused expensive intermediate). MEMORY_AND_DISK
     // spills instead of recomputing at corpus scale; the cache is
-    // registered with the caller's scope and released with it (Bench
-    // releases between queries).
-    val learned = scope.track(
+    // registered with the session (Bench releases between queries).
+    val learned = graft.CacheScope.track(
       gateStage(cleanStage(df, idCol, textCol, cfg), idCol, cfg)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // decontamination: the EVAL SET is the reference side; each
@@ -255,15 +249,18 @@ object Pipeline {
     // history (in-batch semantics; the maintaining builder's persisted
     // index is the same operator with history filled in). The sketch
     // carries the doc's columns and the classify plan reads it on
-    // several branches, so it persists into `scope`; the kept docs are a
-    // filter over the classification, with no join back to `deduped`.
+    // several branches, so it is a lazy local checkpoint registered with
+    // the session, as in IncrementalMinHash.classifyBanded (a persist
+    // would add one AQE materialization job per branch that scans it);
+    // the kept docs are a filter over the classification, with no join
+    // back to `deduped`.
     val fuzzyDeduped =
       if (!cfg.fuzzyDedup) deduped
       else {
-        val sketched = scope.track(
+        val sketched = graft.CacheScope.track(
           IncrementalMinHash.sketchTotal(deduped, idCol, "text",
               cfg.fuzzyShingleN, cfg.fuzzyNumHashes, cfg.fuzzyBands)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            .localCheckpoint(false))
         IncrementalMinHash.classifyBandedSketched(sketched,
             IncrementalMinHash.emptyBandedIndex(df.sparkSession),
             cfg.fuzzyNumHashes, cfg.fuzzyBands, cfg.fuzzyMinMatch)

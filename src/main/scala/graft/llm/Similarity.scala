@@ -366,14 +366,13 @@ object Similarity {
    */
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
       threshold: Double, bucketBits: Int = -1, srp: Boolean = false,
-      ordered: Boolean = true,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+      ordered: Boolean = true): DataFrame = {
     val prep0 = prepTyped(corpus, idCol, "_id", vecCol)
       .filter(col("_v").isNotNull && col("_id").isNotNull && col("_n2") > 0)
     // the sizing count / dim probe read prep again — persist unless the
     // plan below consumes prep exactly once (explicit bits, no srp)
     val prep = if (bucketBits > 0 && !srp) prep0
-      else scope.track(prep0.persist(StorageLevel.MEMORY_AND_DISK))
+      else graft.CacheScope.track(prep0.persist(StorageLevel.MEMORY_AND_DISK))
     // sign-prefix bits are capped by the embedding dimension — bit i
     // reads dimension i and an out-of-range element_at throws (ANSI)
     val bits =
@@ -472,12 +471,11 @@ object Similarity {
    */
   def bucketedTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, bucketBits: Int = -1,
-      srp: Boolean = false, probes: Int = 1, ordered: Boolean = true,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+      srp: Boolean = false, probes: Int = 1, ordered: Boolean = true): DataFrame = {
     require(probes >= 1, s"probes must be >= 1, got $probes")
     val (c0, q0) = prepSides(corpus, queries, idCol, vecCol)
     val c1 = if (bucketBits > 0 && !srp) c0
-      else scope.track(c0.persist(StorageLevel.MEMORY_AND_DISK))
+      else graft.CacheScope.track(c0.persist(StorageLevel.MEMORY_AND_DISK))
     // same dimension cap as nearDupPairs: sign-prefix bit i reads dim i
     val bits =
       if (bucketBits > 0) bucketBits

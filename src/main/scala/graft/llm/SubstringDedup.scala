@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{CacheScope, Presented}
+import graft.Presented
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
@@ -85,19 +85,10 @@ object SubstringDedup {
    * occurrence is reported (including the first), so this is the
    * detection/reporting form — [[removeDuplicated]] applies the
    * keep-first policy.
-   *
-   * `cacheIndex` persists the gram occurrence index between its two
-   * consumers (the gram-count aggregate and the join back). Off by
-   * default: the index is corpus-sized, and re-running the projection
-   * pass from the pruned scan is usually cheaper than materializing it
-   * (the [[graft.operators.AsOfJoin.bucketed]] cacheUnion trade). When
-   * on, the cache registers with `scope`.
    */
   def duplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-      gramN: Int = 8, ordered: Boolean = true, cacheIndex: Boolean = false,
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    val occ0 = gramPosIndex(df, idCol, textCol, gramN)
-    val occ = if (cacheIndex) scope.track(occ0.persist()) else occ0
+      gramN: Int = 8, ordered: Boolean = true): DataFrame = {
+    val occ = gramPosIndex(df, idCol, textCol, gramN)
     val dupGrams = occ.groupBy("_g")
       .agg(count(lit(1)).as("_cnt")).filter(col("_cnt") > 1).select("_g")
     val dup = occ.join(dupGrams, Seq("_g")).select("_id", "_pos")
@@ -129,10 +120,8 @@ object SubstringDedup {
    * rather than guarded because a guard would cost a corpus pass.
    */
   def removeDuplicated(df: DataFrame, idCol: String, textCol: String,
-      gramN: Int = 8, ordered: Boolean = true, cacheIndex: Boolean = false,
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    val occ0 = gramPosIndex(df, idCol, textCol, gramN)
-    val occ = if (cacheIndex) scope.track(occ0.persist()) else occ0
+      gramN: Int = 8, ordered: Boolean = true): DataFrame = {
+    val occ = gramPosIndex(df, idCol, textCol, gramN)
     val packed = col("_id").cast("long") * lit(1L << 32) + col("_pos")
     val dupGrams = occ.groupBy("_g")
       .agg(count(lit(1)).as("_cnt"), min(packed).as("_keep"))

@@ -420,8 +420,7 @@ object TextAnalysis {
    * plan stays lazy.
    */
   def tfIdfTopTerms(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, ordered: Boolean = true,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+      k: Int = 3, ordered: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val terms = df
       .select(col(idCol).as("doc_id"),
@@ -431,9 +430,8 @@ object TextAnalysis {
     // Without it each branch re-scans and re-tokenizes the corpus (the
     // branches prune differently — df needs only distinct (doc, term) —
     // so even exchange reuse can't unify them). |tf| is counts, smaller
-    // than the text it summarizes. Released via `scope` (default: the
-    // session scope, drained by Verify/Bench between queries).
-    val tf = scope.track(terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+    // than the text it summarizes.
+    val tf = graft.CacheScope.track(terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val nDocs = df.select(col(idCol)).agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy("doc_id")

@@ -104,43 +104,25 @@ object AsOfJoin {
    * `nearest` composes both carries over the same bucketed frames.
    * The ts column must be a timestamp (bucketing uses epoch seconds).
    *
-   * CACHE SIZE WARNING: with `cacheUnion` (the default) the persisted
-   * union below is ROWS-sized (both inputs together, MEMORY_AND_DISK) —
-   * at the billions-of-rows straggler scale this variant exists for,
-   * the cache is itself corpus-sized. Consume the result promptly and
-   * release via the `scope` handle (or
-   * [[graft.CacheScope.releaseSession]]); an unreleased cache this size
-   * is the dominant memory tenant of the session. An
-   * unpersisted-but-unconsumed plan stays correct — Spark recomputes
-   * from lineage, re-scanning both inputs per consumer.
-   *
-   * `cacheUnion = false` skips the persist entirely: each of the 3
-   * (backward/forward) to 5 (nearest) plan branches then re-reads the
-   * inputs. When the inputs are pruned columnar scans (or cheap
-   * projections of them), re-scanning in parallel is CHEAPER than
-   * materializing rows-sized storage — measured on the vq26d/e
-   * straggler fixture the uncached variant is what beats the plain
-   * single-window carry. Cache when the inputs are expensive
-   * sub-plans; don't when they're scans.
+   * Nothing is persisted: each of the 3 (backward/forward) to 5
+   * (nearest) plan branches re-reads the inputs. When the inputs are
+   * pruned columnar scans (or cheap projections of them), re-scanning
+   * in parallel is CHEAPER than materializing rows-sized storage —
+   * measured on the vq26d/e straggler fixture, the uncached variant is
+   * what beats the plain single-window carry. A caller whose inputs
+   * are expensive sub-plans checkpoints them before the call.
    */
   def bucketed(left: DataFrame, right: DataFrame, keyCols: Seq[String],
       tsCol: String, payloadCols: Seq[String], bucketSeconds: Long,
       direction: String = "backward",
-      tolerance: Option[Double] = None,
-      cacheUnion: Boolean = true,
-      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+      tolerance: Option[Double] = None): DataFrame = {
     require(bucketSeconds > 0, s"bucketSeconds must be positive, got $bucketSeconds")
     val fr = tagFrames(left, right, keyCols, tsCol, payloadCols, direction, tolerance)
     val bkt = floor(col(tsCol).cast("double") / bucketSeconds).cast("long")
     // the union feeds the occupied-bucket distinct, the boundary
-    // aggregate (once per carry direction) and the main carry path —
-    // persisted (rows-sized, see scaladoc warning, released via
-    // `scope`) unless the caller says its inputs re-scan cheaper
-    val u0 = fr.l.unionByName(fr.r).withColumn("_bkt", bkt)
-    val u =
-      if (cacheUnion) scope.track(
-        u0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      else u0
+    // aggregate (once per carry direction) and the main carry path, each
+    // re-reading the inputs (see scaladoc)
+    val u = fr.l.unionByName(fr.r).withColumn("_bkt", bkt)
     // null-ts left rows get a null bucket: they join no carry-in row and
     // their in-bucket carry partition holds no right rows (right null-ts
     // rows were dropped in tagFrames), so they surface unmatched — the

@@ -129,7 +129,7 @@ object ReferenceResolution {
     val joined = keyed.join(perResource, Seq("_rkey"), "left")
       .withColumn("_missing", coalesce(col("_missing"), lit(0L)))
       .localCheckpoint(true)
-    graft.CacheScope.checkpointRdd(input).foreach(_.unpersist(blocking = false))
+    graft.CacheScope.release(input)
 
     val deferred = joined.filter(col("_missing") > 0)
       .select(col("module"), col("resourceType"), col("id"), col("resource"), col("_missing"))

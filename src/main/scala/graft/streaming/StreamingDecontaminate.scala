@@ -96,11 +96,9 @@ object StreamingDecontaminate {
         .localCheckpoint(true)
       // release both per-batch checkpoints once consumed — a
       // long-running stream must not pin one batch-sized RDD pair per
-      // micro-batch in the block manager (the BitextMining discipline)
+      // micro-batch in the block manager
       try onBatch(annotated, batchId)
-      finally Seq(b, annotated)
-        .flatMap(graft.CacheScope.checkpointRdd)
-        .foreach(_.unpersist(blocking = false))
+      finally graft.CacheScope.release(b, annotated)
       if (compactEvery > 0 && batches.incrementAndGet() % compactEvery == 0)
         Decontamination.compactMatched(batch.sparkSession, matchedTable,
           matchedPath, graceMs)

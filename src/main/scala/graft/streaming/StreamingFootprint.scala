@@ -117,8 +117,7 @@ object StreamingFootprint {
       // the swap's write reads the very table it replaces
       .localCheckpoint(true)
     try SwapTable.upsert(folded, tableName, path, graceMs = graceMs)
-    finally graft.CacheScope.checkpointRdd(folded)
-      .foreach(_.unpersist(blocking = false))
+    finally graft.CacheScope.release(folded)
     ()
   }
 }

@@ -220,8 +220,7 @@ object StreamingIncremental {
           .select(col("_id"), col("status"), col("dup_of"), col("_sig"),
             col("_bands"))
           .localCheckpoint(true)
-        finally graft.CacheScope.checkpointRdd(sketched)
-          .foreach(_.unpersist(blocking = false))
+        finally graft.CacheScope.release(sketched)
       onBatch(IncrementalMinHash.contractRows(classified), batchId)
       IndexStore.appendMinhashSketched(classified, tableName, shingleN,
         numHashes, bands)

@@ -70,12 +70,9 @@ object StreamingSemantic {
         .withColumnRenamed("_match_id", "match_id")
         .withColumnRenamed("_cos", "cos")
         .localCheckpoint(true)
-      // release both per-batch checkpoints once consumed (the
-      // StreamingDecontaminate discipline)
+      // release both per-batch checkpoints once consumed
       try onBatch(annotated, batchId)
-      finally Seq(b, annotated)
-        .flatMap(graft.CacheScope.checkpointRdd)
-        .foreach(_.unpersist(blocking = false))
+      finally graft.CacheScope.release(b, annotated)
     }
   }
 }

@@ -32,10 +32,9 @@ class BudgetSelectSpec extends AnyFunSuite {
       .as[(Long, Long, Long, Long)].collect().toSet
 
   private def run(): Set[(Long, Long, Long, Long)] = {
-    val scope = new graft.CacheScope
-    val out = BudgetSelect.takeUntilBudget(df, "id", "score", "w", budget, scope)
+    val out = BudgetSelect.takeUntilBudget(df, "id", "score", "w", budget)
       .as[(Long, Long, Long, Long)].collect().toSet
-    scope.release()
+    graft.CacheScope.releaseSession()
     out
   }
 
@@ -63,10 +62,9 @@ class BudgetSelectSpec extends AnyFunSuite {
   }
 
   test("edge: zero budget selects nothing; budget over total selects everything") {
-    val scope = new graft.CacheScope
-    assert(BudgetSelect.takeUntilBudget(df, "id", "score", "w", 0L, scope).count() === 0L)
-    val all = BudgetSelect.takeUntilBudget(df, "id", "score", "w", 1000000L, scope)
+    assert(BudgetSelect.takeUntilBudget(df, "id", "score", "w", 0L).count() === 0L)
+    val all = BudgetSelect.takeUntilBudget(df, "id", "score", "w", 1000000L)
     assert(all.count() === 200L) // null-id row excluded
-    scope.release()
+    graft.CacheScope.releaseSession()
   }
 }

@@ -225,6 +225,35 @@ class PipelineSpec extends AnyFunSuite {
     assert(one == run(13) && one.nonEmpty)
   }
 
+  test("fuzzy tier (stage 6b): an in-batch near-dup drops to the smaller id; a no-near-dup corpus == the fuzzy-off chain") {
+    import spark.implicits._
+    // sampleRate 1: the fuzzy keeper must be observable in the output
+    val offCfg = cfg.copy(sampleRate = 1.0)
+    val fcfg = offCfg.copy(fuzzyDedup = true)
+    def ids(df: DataFrame): Set[Long] =
+      df.select("doc_id").distinct().collect().map(_.getLong(0)).toSet
+    // 9200/9201: a one-token tail edit on a 30-token base (shingle
+    // Jaccard ~0.93, well above the 5-of-9 estimate threshold); ids sit
+    // above the sf0.001 corpus range
+    val base = (1 to 30).map(i => s"w$i").mkString(" ")
+    val extras = Seq((9200L, base + " one"), (9201L, base + " two"))
+      .toDF("doc_id", "text")
+    val got = ids(Pipeline.buildTrainingSet(
+      docs.select(col("doc_id"), col("text")).unionByName(extras),
+      "doc_id", "text", fcfg))
+    assert(got.contains(9200L), "the smaller near-dup id is the keeper")
+    assert(!got.contains(9201L), "the larger near-dup id must drop")
+    // no two docs share a token, so no estimate can clear 5-of-9: the
+    // fuzzy chain must then emit exactly the fuzzy-off chain's rows
+    val disjoint = (0 until 40).map { d =>
+      (1000L + d, (1 to 8).map(i => s"d${d}t$i").mkString(" "))
+    }.toDF("doc_id", "text")
+    def rows(c: Pipeline.Config) =
+      Pipeline.buildTrainingSet(disjoint, "doc_id", "text", c).collect().toSet
+    val off = rows(offCfg)
+    assert(off.nonEmpty && rows(fcfg) == off)
+  }
+
   test("stripHtml variant: markup never reaches the gate") {
     val wrapped = docs.select(col("doc_id"),
       concat(lit("<html><body><p>"), col("text"),

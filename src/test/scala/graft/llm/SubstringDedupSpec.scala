@@ -96,13 +96,4 @@ class SubstringDedupSpec extends AnyFunSuite {
         s"$name reads columns it never uses:\n${readSchemas.mkString("\n")}")
     }
   }
-
-  test("cacheIndex registers with the scope and releases cleanly") {
-    val scope = new graft.CacheScope
-    val out = SubstringDedup.duplicatedSpans(df, "doc_id", "text", gramN = 8,
-      cacheIndex = true, scope = scope)
-    assert(out.count() === 3L)
-    scope.release() // idempotent, never throws
-    scope.release()
-  }
 }

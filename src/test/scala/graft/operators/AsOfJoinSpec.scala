@@ -211,4 +211,19 @@ class AsOfJoinSpec extends AnyFunSuite {
       assert(got == Set(("a", expectA), ("b", null)), s"direction=$dir got $got")
     }
   }
+
+  test("bucketed persists nothing: collecting every direction leaves the persistent RDDs unchanged") {
+    // the union is re-read per plan branch, never cached: a caching
+    // variant would leave storage registered with the context
+    val left = (0L until 200L by 7L).map(ts => (1, ts, s"l$ts")).toDF("k", "ts", "tag")
+    val right = (0L until 200L by 30L).map(ts => (1, ts + 1L, s"r$ts"))
+      .toDF("k", "ts", "v").select($"k", $"ts", $"ts".as("ref_ts"), $"v")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    for (dir <- Seq("backward", "forward", "nearest"))
+      assert(AsOfJoin.bucketed(left, right, Seq("k"), "ts", Seq("ref_ts", "v"),
+        bucketSeconds = 20L, direction = dir).collect().length == left.count())
+    // RDD ids only grow, so any persist made here shows up as a new id
+    // (storage an earlier suite released may still be leaving the set)
+    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet -- before).isEmpty)
+  }
 }
